@@ -100,7 +100,7 @@ object BandIndex {
     // unused). Resolving shingles first could pair newer bands with
     // older shingles and silently DROP verified pairs. compact (the
     // one remover) stays under the single-writer maintenance rule.
-    val allBands = VersionedTable.readUniform(spark, bandsRoot(root))
+    val allBands = VersionedTable.read(spark, bandsRoot(root))
       .select(col("doc_id").as("corpus_doc"), col("band"), col("bkey"))
     // retired docs are tombstoned, not yet physically removed: a probe
     // must not match them (their text has left the corpus). The
@@ -131,8 +131,7 @@ object BandIndex {
     val shV = VersionedTable.currentVersion(spark, shinglesRoot(root))
     val shStore =
       if (shV.exists(v => VersionedTable.partitionNative(spark, shinglesRoot(root), v)))
-        VersionedTable.readPartitions(spark, shinglesRoot(root), parts, shV,
-                                      mergeSchema = false)
+        VersionedTable.readPartitions(spark, shinglesRoot(root), parts, shV)
       else VersionedTable.read(spark, shinglesRoot(root))
     val shB = batch
       .join(cand.select(col("batch_doc").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
@@ -195,8 +194,7 @@ object BandIndex {
           .select(pmod(col("doc_id"), lit(ShingleParts.toLong)).cast("string").as("pb"))
           .distinct().collect().map(_.getString(0)).sorted.toSeq
         try {
-          val slice = VersionedTable.readPartitions(
-            spark, shinglesRoot(root), parts, Some(sv), mergeSchema = false)
+          val slice = VersionedTable.readPartitions(spark, shinglesRoot(root), parts, Some(sv))
           val rewrite = slice.join(retired, Seq("doc_id"), "left_anti")
           val touched = parts.map(VersionedTable.encodePartition).toSet
           val carried = VersionedTable.entryPairsOf(spark, shinglesRoot(root), sv)

@@ -210,7 +210,7 @@ object GramIndex {
     import org.apache.spark.sql.expressions.Window
     val bg = postings(batch, n)
       .select(col("doc_id").as("batch_doc"), col("pos").as("pos_b"), col("gram"))
-    val allIdx = VersionedTable.readUniform(spark, root)
+    val allIdx = VersionedTable.read(spark, root)
       .select(col("doc_id").as("corpus_doc"), col("pos").as("pos_c"), col("gram"))
     // tombstoned docs must not match (their text has left the corpus);
     // the id-only list is tiny — AQE broadcasts the anti-join

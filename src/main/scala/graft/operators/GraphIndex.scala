@@ -225,7 +225,7 @@ object GraphIndex {
     val nv = VersionedTable.currentVersion(spark, nodeRoot(root)).getOrElse(
       throw new IllegalStateException(s"no graph index built at $root"))
     val retired = retiredSet(spark, root)
-    val seeds = VersionedTable.readUniform(spark, seedRoot(root))
+    val seeds = VersionedTable.read(spark, seedRoot(root))
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
       .filterNot(retired) // a retired entry point dies
     lastProbeBucketCounts = Nil
@@ -238,8 +238,7 @@ object GraphIndex {
       // fused per-pass job
       val buckets = collectIdBuckets(idList).filter(nodeHave)
       if (buckets.isEmpty) emptyRecsDf(spark)
-      else VersionedTable.readPartitions(spark, nodeRoot(root), buckets,
-          version = Some(nv), mergeSchema = false)
+      else VersionedTable.readPartitions(spark, nodeRoot(root), buckets, version = Some(nv))
         .withColumnRenamed("vec_id", "c_id")
         // keep only the WANTED ids: a bucket holds unrelated nodes
         // whose adjacency must not leak into the walk's bounded state
@@ -433,15 +432,13 @@ object GraphIndex {
       if (idList.isEmpty || (nbs.isEmpty && hbs.isEmpty)) emptyRecsDf(spark)
       else {
         val vecs = if (nbs.isEmpty) None else Some(
-          VersionedTable.readPartitions(spark, nodeRoot(root), nbs,
-              version = Some(nv), mergeSchema = false)
+          VersionedTable.readPartitions(spark, nodeRoot(root), nbs, version = Some(nv))
             .withColumnRenamed("vec_id", "c_id")
             .filter(col("c_id").isin(idList: _*))
             .select(col("c_id"), col("embedding").as("ce"),
               lit(null).cast("array<bigint>").as("nbrs")))
         val adj = if (hbs.isEmpty) None else Some(
-          VersionedTable.readPartitions(spark, hnodeRoot(root), hbs,
-              version = Some(hv), mergeSchema = false)
+          VersionedTable.readPartitions(spark, hnodeRoot(root), hbs, version = Some(hv))
             .filter(col("lvl") === l)
             .withColumnRenamed("vec_id", "c_id")
             .filter(col("c_id").isin(idList: _*))
@@ -453,8 +450,7 @@ object GraphIndex {
     val fetchL0: Seq[Long] => DataFrame = idList => {
       val nbs = collectIdBuckets(idList).filter(nodeHave)
       if (nbs.isEmpty) emptyRecsDf(spark)
-      else VersionedTable.readPartitions(spark, nodeRoot(root), nbs,
-          version = Some(nv), mergeSchema = false)
+      else VersionedTable.readPartitions(spark, nodeRoot(root), nbs, version = Some(nv))
         .withColumnRenamed("vec_id", "c_id")
         .filter(col("c_id").isin(idList: _*))
         .select(col("c_id"), col("embedding").as("ce"), col("nbrs"))
@@ -540,10 +536,10 @@ object GraphIndex {
               hops: Int = 3): DataFrame = {
     val nv = VersionedTable.currentVersion(spark, nodeRoot(root)).getOrElse(
       throw new IllegalStateException(s"no graph index built at $root"))
-    require(VersionedTable.columnsOf(spark, nodeRoot(root)).contains("codes"),
+    require(VersionedTable.read(spark, nodeRoot(root)).columns.contains("codes"),
       s"probePq requires an index built with withCodes=true at $root")
     val retired = retiredSet(spark, root)
-    val seeds = VersionedTable.readUniform(spark, seedRoot(root))
+    val seeds = VersionedTable.read(spark, seedRoot(root))
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
       .filterNot(retired)
     lastProbeBucketCounts = Nil
@@ -553,8 +549,7 @@ object GraphIndex {
     // the codebook's bucket dirs via the SAME bucket function the
     // table was written with — pure driver computation, no job
     val cbBuckets = cbIds.map(bucketOfId).distinct.sorted
-    val cb = VersionedTable.readPartitions(spark, nodeRoot(root), cbBuckets,
-        version = Some(nv), mergeSchema = false)
+    val cb = VersionedTable.readPartitions(spark, nodeRoot(root), cbBuckets, version = Some(nv))
       .filter(col("vec_id").isin(cbIds: _*))
       .select(col("vec_id"), col("embedding"))
     val queries = embeddings.filter(col("vec_id") < maxQueryId)
@@ -567,8 +562,7 @@ object GraphIndex {
           lit(null).cast("array<bigint>").as("nbrs"),
           lit(null).cast("array<int>").as("codes"))
       else {
-        val slice = VersionedTable.readPartitions(spark, nodeRoot(root), bs,
-            version = Some(nv), mergeSchema = false)
+        val slice = VersionedTable.readPartitions(spark, nodeRoot(root), bs, version = Some(nv))
           .select(col("vec_id").as("c_id"), col("nbrs"), col("codes"))
         if (lastNavReadSchema.isEmpty)
           lastNavReadSchema = slice.queryExecution.executedPlan.toString
@@ -580,8 +574,7 @@ object GraphIndex {
       if (bs.isEmpty)
         spark.range(0).select(col("id").as("c_id"),
           lit(null).cast("array<float>").as("ce"))
-      else VersionedTable.readPartitions(spark, nodeRoot(root), bs,
-          version = Some(nv), mergeSchema = false)
+      else VersionedTable.readPartitions(spark, nodeRoot(root), bs, version = Some(nv))
         .filter(col("embedding").isNotNull)
         .select(col("vec_id").as("c_id"), col("embedding").as("ce"))
         .filter(col("c_id").isin(idList: _*))
@@ -719,10 +712,8 @@ object GraphIndex {
     // a codes-bearing index ([[build]] withCodes) encodes arrivals
     // against the SAME fixed codebook ids — stable rows of the same
     // corpus table, so stored and fresh codes agree by construction.
-    // One dir's footer decides (every dir shares the build schema —
-    // columnsOf), not a mergeSchema read of the whole node table.
-    val hasCodes =
-      VersionedTable.columnsOf(spark, nodeRoot(root)).contains("codes")
+    // The node table's logged schema decides (no footer is read).
+    val hasCodes = VersionedTable.read(spark, nodeRoot(root)).columns.contains("codes")
     val own = if (hasCodes)
         bare.join(Similarity.pqCodesAgainst(corpus, newVecs),
           Seq("vec_id"), "left")

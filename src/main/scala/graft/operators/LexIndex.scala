@@ -293,9 +293,7 @@ object LexIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     if (qBuckets.isEmpty) return emptyScored
     val stats =
-      try VersionedTable.readPartitions(spark, statsRoot(root), qBuckets,
-                                        version = Some(man.statsV),
-                                        mergeSchema = false)
+      try VersionedTable.readPartitions(spark, statsRoot(root), qBuckets, Some(man.statsV))
             .select(col("term"), col("df"))
       catch { case _: java.io.FileNotFoundException => return emptyScored }
     val wBudget = Window.partitionBy(col("q_id"))
@@ -314,9 +312,7 @@ object LexIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     if (buckets.isEmpty) return emptyScored
     val postings =
-      try VersionedTable.readPartitions(spark, postRoot(root), buckets,
-                                        version = Some(man.postingsV),
-                                        mergeSchema = false)
+      try VersionedTable.readPartitions(spark, postRoot(root), buckets, Some(man.postingsV))
       catch { case _: java.io.FileNotFoundException => return emptyScored }
     val avgdl = lit(totTok).cast("double") / lit(nDl).cast("double")
     // dl rides each posting row — no doclens read in the query path;
@@ -369,9 +365,7 @@ object LexIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     if (pBuckets.isEmpty) return empty
     val slice =
-      try VersionedTable.readPartitions(spark, postRoot(root), pBuckets,
-                                        version = Some(man.postingsV),
-                                        mergeSchema = false)
+      try VersionedTable.readPartitions(spark, postRoot(root), pBuckets, Some(man.postingsV))
       catch { case _: java.io.FileNotFoundException => return empty }
     val a = slice.select(col("term"), col("doc_id"), col("positions").as("pa"))
       .join(qp.select(col("q_id"), col("t1").as("term")), Seq("term"))
@@ -448,8 +442,7 @@ object LexIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     if (buckets.isEmpty) return
     val slice =
-      try VersionedTable.readPartitions(spark, postRoot(root), buckets,
-                                        version = Some(pv), mergeSchema = false)
+      try VersionedTable.readPartitions(spark, postRoot(root), buckets, version = Some(pv))
       catch { case _: java.io.FileNotFoundException => return }
     val presentDocs = slice
       .join(vtf.select(col("doc_id")).distinct(), Seq("doc_id"))
@@ -478,9 +471,7 @@ object LexIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     val sv = man.statsV
     val newSv = if (decBuckets.isEmpty) sv else {
-      val oldSlice = VersionedTable.readPartitions(
-        spark, statsRoot(root), decBuckets, version = Some(sv),
-        mergeSchema = false)
+      val oldSlice = VersionedTable.readPartitions(spark, statsRoot(root), decBuckets, Some(sv))
         .select(col("term"), col("df"))
       val newStats = oldSlice.join(dec, Seq("term"), "left")
         .select(col("term"),
@@ -498,9 +489,7 @@ object LexIndex {
     val dv = man.doclensV
     val dBuckets = presentDocs.select(docBucketCol.as("b")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    val dslice = VersionedTable.readPartitions(spark, dlRoot(root), dBuckets,
-                                               version = Some(dv),
-                                               mergeSchema = false)
+    val dslice = VersionedTable.readPartitions(spark, dlRoot(root), dBuckets, version = Some(dv))
     val victimLens = dslice.join(presentDocs, Seq("doc_id"))
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("t")).head
     val dRewrite = dslice.join(presentDocs, Seq("doc_id"), "left_anti")
@@ -608,9 +597,7 @@ object LexIndex {
         .collect().map(_.getString(0)).sorted.toSeq
       val sv = man.statsV
       if (hitBuckets.isEmpty) sv else {
-        val oldSlice = VersionedTable.readPartitions(
-          spark, statsRoot(root), hitBuckets, version = Some(sv),
-          mergeSchema = false)
+        val oldSlice = VersionedTable.readPartitions(spark, statsRoot(root), hitBuckets, Some(sv))
           .select(col("term"), col("df"))
         val merged = oldSlice.join(inc, Seq("term"), "full_outer")
           .select(col("term"),

@@ -147,7 +147,7 @@ object VecIndex {
             k: Int = 3, nProbe: Int = 2): DataFrame = {
     import graft.functions.GraftFunctions._
     import org.apache.spark.sql.expressions.Window
-    val cents = VersionedTable.readUniform(spark, centsRoot(root))
+    val cents = VersionedTable.read(spark, centsRoot(root))
     val wProbe = Window.partitionBy(col("vec_id"))
       .orderBy(col("csim").desc, col("cent_id"))
     // materialized once: the distinct-cell pass below drives the
@@ -168,8 +168,7 @@ object VecIndex {
     // a probed cell with no corpus vectors has no dirs; readPartitions
     // drops it — only an entirely-dirless probe set short-circuits
     val corpus =
-      try VersionedTable.readPartitions(spark, vecsRoot(root), cells,
-                                        mergeSchema = false)
+      try VersionedTable.readPartitions(spark, vecsRoot(root), cells)
       catch { case _: java.io.FileNotFoundException => return empty }
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id"))
@@ -191,7 +190,7 @@ object VecIndex {
     * dirs. The next [[probe]] sees the batch with no corpus work. Meta
     * tracks the appended count for [[rebuildRecommended]]. */
   def ingest(spark: SparkSession, root: String, batch: DataFrame): Unit = {
-    val cents = VersionedTable.readUniform(spark, centsRoot(root))
+    val cents = VersionedTable.read(spark, centsRoot(root))
     val vv = VersionedTable.currentVersion(spark, vecsRoot(root)).getOrElse(
       throw new IllegalStateException(s"no index built at $root"))
     // the churn-meta count is independent of the commit — overlap it
@@ -233,7 +232,7 @@ object VecIndex {
     * snapshot (the single-maintenance-loop contract every index
     * write path states). */
   def delete(spark: SparkSession, root: String, victims: DataFrame): Long = {
-    val cents = VersionedTable.readUniform(spark, centsRoot(root))
+    val cents = VersionedTable.read(spark, centsRoot(root))
     val vv = VersionedTable.currentVersion(spark, vecsRoot(root)).getOrElse(
       throw new IllegalStateException(s"no index built at $root"))
     val homed = assign(victims, cents)
@@ -242,9 +241,7 @@ object VecIndex {
       .collect().map(_.getString(0)).sorted.toSeq
     if (cells.isEmpty) return vv
     val slice =
-      try VersionedTable.readPartitions(spark, vecsRoot(root), cells,
-                                        version = Some(vv),
-                                        mergeSchema = false)
+      try VersionedTable.readPartitions(spark, vecsRoot(root), cells, version = Some(vv))
       catch { case _: java.io.FileNotFoundException => return vv }
     // which probed cells actually hold a victim — absent victims must
     // not force a rewrite (idempotence), and the victim count is the

@@ -77,8 +77,7 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
     val root = rootOf(params)
     if (GraftDataSource.isCdc(params))
       GraftDataSource.cdcSchema(spark, root, GraftDataSource.cdcKeys(params))
-    else VersionedTable.readAsOf(spark, root,
-      resolveVersion(spark, root, params)).schema
+    else VersionedTable.schemaOf(spark, root, resolveVersion(spark, root, params))
   }
 
   override def getTable(schema: StructType,
@@ -100,15 +99,9 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
     val spark = sqlContext.sparkSession
     val root = rootOf(parameters)
     val v = resolveVersion(spark, root, parameters)
-    val schema = VersionedTable.readAsOf(spark, root, v).schema
-    GraftDataSource.runSidecarOptIns(spark, root, v, parameters, schema)
-    HadoopFsRelation(
-      location = new GraftFileIndex(spark, root, v),
-      partitionSchema = new StructType(),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new GraftGuardedParquet,
-      options = Map("mergeSchema" -> "true"))(spark)
+    val rel = VersionedTable.relation(spark, root, v)
+    GraftDataSource.runSidecarOptIns(spark, root, v, parameters, rel.dataSchema)
+    rel
   }
 
   /** `df.write.format("graft").mode(...).save(root)` — the batch
@@ -142,7 +135,7 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
 
   // ── streaming read ────────────────────────────────────────────────
 
-  import GraftDataSource.{isCdc, cdcKeys, cdcSchema}
+  import GraftDataSource.{isCdc, cdcKeys, cdcSchema, headSchema}
 
   override def sourceSchema(sqlContext: SQLContext,
                             schema: Option[StructType],
@@ -152,7 +145,7 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
     val root = rootOf(parameters)
     val inferred =
       if (isCdc(parameters)) cdcSchema(spark, root, cdcKeys(parameters))
-      else VersionedTable.read(spark, root).schema
+      else headSchema(spark, root)
     (shortName(), schema.getOrElse(inferred))
   }
 
@@ -171,7 +164,7 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
         schema.getOrElse(cdcSchema(spark, root, keys)), keys, startingVersion,
         maxVersionsPerTrigger = maxVersions)
     } else new GraftStreamSource(spark, root,
-      schema.getOrElse(VersionedTable.read(spark, root).schema),
+      schema.getOrElse(headSchema(spark, root)),
       startingVersion = startingVersion,
       skipChangeCommits = parameters.get("skipChangeCommits").exists(_.trim.toBoolean),
       maxVersionsPerTrigger = maxVersions)
@@ -219,8 +212,7 @@ object GraftDataSource {
           throw new java.io.FileNotFoundException(
             s"no version committed at or before $ts at $root"))
       })
-      .getOrElse(VersionedTable.currentVersion(spark, root).getOrElse(
-        throw new java.io.FileNotFoundException(s"no committed version at $root")))
+      .getOrElse(VersionedTable.headVersion(spark, root))
 
   /** Opt-in sidecar builds (write-side lifecycle, exposed on the read
     * options for convenience): compute once, cached in the log,
@@ -246,10 +238,33 @@ object GraftDataSource {
         "identity the change feed diffs on"))
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
+  /** The dirs the commits in (startV, endV] added — one micro-batch
+    * of the version-offset streams. A commit that drops prior entries
+    * (merge/compact/restore) fails the stream, or with
+    * `skipChangeCommits` is skipped whole: its adds re-package rows
+    * already delivered. */
+  private[sources] def addedDirs(spark: SparkSession, root: String, startV: Long,
+                                 endV: Long, skipChangeCommits: Boolean): Seq[String] =
+    (math.max(0L, startV + 1L) to endV).flatMap { v =>
+      val prev = if (v == 0) Set.empty[String] else VersionedTable.dirsOf(spark, root, v - 1).toSet
+      val cur = VersionedTable.dirsOf(spark, root, v)
+      val removed = prev -- cur
+      if (removed.isEmpty) cur.filterNot(prev)
+      else if (skipChangeCommits) Nil
+      else throw new IllegalStateException(
+        s"graft stream over $root: version $v rewrites or removes " +
+          s"data (${removed.size} dropped dirs — merge/compact/" +
+          "restore). Set skipChangeCommits=true to skip such " +
+          "commits (later appends still stream), or consume the " +
+          "change feed (readChangeFeed / graft_table_changes) for CDC semantics.")
+    }
+
+  private[sources] def headSchema(spark: SparkSession, root: String): StructType =
+    VersionedTable.schemaOf(spark, root, VersionedTable.headVersion(spark, root))
+
   private[sources] def cdcSchema(spark: SparkSession, root: String,
                                  keys: Seq[String]): StructType = {
-    val head = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    val head = VersionedTable.headVersion(spark, root)
     // a self-diff never executes — it is only the schema carrier
     VersionedTable.changeFeed(spark, root, head, head, keys).schema
   }
@@ -354,37 +369,17 @@ final class GraftStreamSource(spark: SparkSession, root: String,
     val startV = start.map(versionOf).getOrElse(startingVersion - 1L)
     val endV = versionOf(end)
     gate.seen(endV)
-    val adds = scala.collection.mutable.ArrayBuffer.empty[String]
-    var v = math.max(0L, startV + 1L)
-    while (v <= endV) {
-      val prev =
-        if (v == 0) Set.empty[String]
-        else VersionedTable.entryPairsOf(spark, root, v - 1).map(_._1).toSet
-      val cur = VersionedTable.entryPairsOf(spark, root, v).map(_._1)
-      val removed = prev -- cur.toSet
-      if (removed.nonEmpty) {
-        if (!skipChangeCommits) throw new IllegalStateException(
-          s"graft stream over $root: version $v rewrites or removes " +
-            s"data (${removed.size} dropped dirs — merge/compact/" +
-            "restore). Set skipChangeCommits=true to skip such " +
-            "commits (later appends still stream), or consume the " +
-            "change feed (graft_table_changes) for CDC semantics.")
-        // skip the commit's adds too: they re-package delivered rows
-      } else {
-        adds ++= cur.filterNot(prev.contains)
-      }
-      v += 1
-    }
+    val adds = GraftDataSource.addedDirs(spark, root, startV, endV, skipChangeCommits)
     if (adds.isEmpty) SqlShim.emptyStreamingFrame(spark, schema)
     else {
-      val index = new GraftFileIndex(spark, root, endV, onlyRels = Some(adds.toSeq))
+      val index = new GraftFileIndex(spark, root, endV, adds.map((_, None)), None)
       SqlShim.streamingFrame(spark, HadoopFsRelation(
         location = index,
         partitionSchema = new StructType(),
         dataSchema = schema,
         bucketSpec = None,
         fileFormat = new GraftGuardedParquet,
-        options = Map("mergeSchema" -> "true"))(spark))
+        options = Map.empty)(spark))
     }
   }
 

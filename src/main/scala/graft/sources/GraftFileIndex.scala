@@ -36,75 +36,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * NaN sentinel (all-null / zero-row dirs) keeps naturally: NaN
   * comparisons are false, so no exclusion ever fires.
   *
-  * Snapshot semantics: dirs and files are listed once at construction
-  * (a committed version is immutable); `refresh()` re-lists for
-  * long-lived cached relations.
+  * Snapshot semantics: the index is fed from ONE read of the commit
+  * text ([[VersionedTable.relation]] passes the version's entries and
+  * `#partcol`), and a committed dir is immutable, so each dir's file
+  * listing is taken once, when a plan first needs files, and cached
+  * per dir across indexes and versions; `refresh()` re-lists. Two
+  * indexes over the same (root, version, dirs) are EQUAL, so plans
+  * reading one version twice keep exchange reuse and cache hits.
   */
-final class GraftFileIndex(spark: SparkSession, root: String,
+final class GraftFileIndex(spark: SparkSession, private val root: String,
                            val version: Long,
-                           onlyRels: Option[Seq[String]] = None)
+                           entries: Seq[(String, Option[String])],
+                           partCol: Option[String])
   extends FileIndex {
 
-  private val entryPairs: Seq[(String, Option[String])] =
-    onlyRels.map(_.map(r => (r, Option.empty[String])))
-      .getOrElse(VersionedTable.entryPairsOf(spark, root, version))
-  private val rels: Seq[String] = entryPairs.map(_._1)
+  private val rels: Seq[String] = entries.map(_._1)
 
   // partition-native pruning: entry annotations are EXACT (a dir holds
   // one partition value), so a predicate on the partition column
   // prunes without any stats at all; the column name comes from the
   // commit's #partcol marker
-  private val partByRel: Map[String, String] = entryPairs.collect {
+  private val partByRel: Map[String, String] = entries.collect {
     case (r, Some(pv)) => r -> java.net.URLDecoder.decode(pv, "UTF-8")
   }.toMap
-  private lazy val partCol: Option[String] =
-    if (partByRel.isEmpty) None
-    else VersionedTable.partitionColumnOf(spark, root, version)
 
-  private def fsys: FileSystem =
-    FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-  /** Dir listing: serial on the driver for small tables; past
-    * [[GraftFileIndex.ParallelListingThreshold]] dirs it becomes a
-    * Spark job (one task per listing slice) — the InMemoryFileIndex
-    * rule, because a serial listStatus loop over 10⁴+ dirs on an
-    * object store is minutes of driver round-trips that a cluster
-    * absorbs in one wave. */
-  private def listAll(): Map[String, Array[FileStatus]] = {
-    def keepFile(s: FileStatus): Boolean = {
-      val n = s.getPath.getName
-      s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".") &&
-        n.endsWith(".parquet")
-    }
-    if (rels.size <= GraftFileIndex.ParallelListingThreshold) {
-      GraftFileIndex.lastListingDistributed = false
-      val f = fsys
-      rels.map(rel =>
-        rel -> f.listStatus(new Path(s"$root/$rel")).filter(keepFile)).toMap
-    } else {
-      GraftFileIndex.lastListingDistributed = true
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val rootStr = root
-      spark.sparkContext
-        .parallelize(rels, math.min(rels.size, 64))
-        .map { rel =>
-          val f = FileSystem.get(new java.net.URI(rootStr), conf.value)
-          rel -> f.listStatus(new Path(s"$rootStr/$rel")).filter { s =>
-            val n = s.getPath.getName
-            s.isFile && s.getLen > 0 && !n.startsWith("_") &&
-              !n.startsWith(".") && n.endsWith(".parquet")
-          }
-        }
-        .collect().toMap
-    }
+  private var listed: Map[String, Array[FileStatus]] = _
+  private def filesByRel: Map[String, Array[FileStatus]] = synchronized {
+    if (listed == null) listed = GraftFileIndex.cachedListing(spark, root, rels)
+    listed
   }
-
-  @volatile private var filesByRel: Map[String, Array[FileStatus]] =
-    onlyRels match {
-      case Some(_) => listAll() // streaming batches: small, never shared
-      case None => GraftFileIndex.cachedListing(root, version, () => listAll())
-    }
 
   // sidecars read ONCE per index (snapshot; sidecar files are
   // cache-replace, so a later richer version only helps a new index)
@@ -126,9 +86,9 @@ final class GraftFileIndex(spark: SparkSession, root: String,
 
   override def rootPaths: Seq[Path] = Seq(new Path(root))
   override def partitionSchema: StructType = new StructType()
-  override def refresh(): Unit = {
-    GraftFileIndex.dropCached(root, version)
-    filesByRel = listAll()
+  override def refresh(): Unit = synchronized {
+    GraftFileIndex.dropCached(root, rels)
+    listed = null
   }
   override def inputFiles: Array[String] =
     rels.iterator.flatMap(filesByRel.getOrElse(_, Array.empty[FileStatus]))
@@ -317,6 +277,12 @@ final class GraftFileIndex(spark: SparkSession, root: String,
       }
       case None => true
     }
+
+  override def equals(other: Any): Boolean = other match {
+    case g: GraftFileIndex => root == g.root && version == g.version && rels == g.rels
+    case _ => false
+  }
+  override def hashCode(): Int = (root, version, rels).hashCode()
 }
 
 object GraftFileIndex {
@@ -338,35 +304,66 @@ object GraftFileIndex {
     * cache (no filesystem IO) — spec evidence. */
   @volatile var lastListingCached: Boolean = false
 
-  // ── snapshot listing cache ────────────────────────────────────────
-  // A (root, version) listing is IMMUTABLE (committed dirs never
-  // change), so repeated reads of the same table version — the normal
-  // interactive pattern — share one listing instead of re-walking the
-  // filesystem per query (Delta's snapshot cache). Bounded LRU;
-  // version rollover naturally misses and fills a new entry.
-  private val MaxCachedSnapshots = 32
+  // ── dir listing cache ─────────────────────────────────────────────
+  // A committed data dir is IMMUTABLE, so its file listing is cached
+  // per (root, dir): repeated reads of one version, a partition read
+  // after a full read, and a new version sharing its predecessor's
+  // dirs all skip the filesystem (Delta's snapshot cache, at dir
+  // grain). Bounded LRU.
+  private val MaxCachedDirs = 4096
   private val listingCache =
-    new java.util.LinkedHashMap[(String, Long), Map[String, Array[FileStatus]]](
-      16, 0.75f, /* accessOrder = */ true) {
+    new java.util.LinkedHashMap[(String, String), Array[FileStatus]](
+      256, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), Map[String, Array[FileStatus]]])
-        : Boolean = size() > MaxCachedSnapshots
+          e: java.util.Map.Entry[(String, String), Array[FileStatus]]): Boolean =
+        size() > MaxCachedDirs
     }
 
-  private[sources] def cachedListing(root: String, version: Long,
-                                     compute: () => Map[String, Array[FileStatus]])
-    : Map[String, Array[FileStatus]] = listingCache.synchronized {
-    val key = (root, version)
-    val hit = listingCache.get(key)
-    lastListingCached = hit != null
-    if (hit != null) hit
+  private[sources] def cachedListing(spark: SparkSession, root: String,
+                                     rels: Seq[String]): Map[String, Array[FileStatus]] = {
+    val hits = listingCache.synchronized {
+      rels.flatMap(r => Option(listingCache.get((root, r))).map(r -> _)).toMap
+    }
+    val missing = rels.filterNot(hits.contains)
+    lastListingCached = missing.isEmpty
+    if (missing.isEmpty) hits
     else {
-      val v = compute()
-      listingCache.put(key, v)
-      v
+      val fresh = list(spark, root, missing)
+      listingCache.synchronized { fresh.foreach { case (r, fs) => listingCache.put((root, r), fs) } }
+      hits ++ fresh
     }
   }
 
-  private[sources] def dropCached(root: String, version: Long): Unit =
-    listingCache.synchronized { listingCache.remove((root, version)); () }
+  private[sources] def dropCached(root: String, rels: Seq[String]): Unit =
+    listingCache.synchronized { rels.foreach(r => listingCache.remove((root, r))) }
+
+  /** Dir listing: serial on the driver for small tables; past
+    * [[ParallelListingThreshold]] dirs it becomes a Spark job (one
+    * task per listing slice) — the InMemoryFileIndex rule, because a
+    * serial listStatus loop over 10⁴+ dirs on an object store is
+    * minutes of driver round-trips that a cluster absorbs in one
+    * wave. */
+  private def list(spark: SparkSession, root: String,
+                   rels: Seq[String]): Map[String, Array[FileStatus]] = {
+    // a function value, not a method: the listing job's closure ships
+    // it to executors without dragging this object along
+    val listDir: (FileSystem, String) => (String, Array[FileStatus]) = (f, rel) =>
+      rel -> f.listStatus(new Path(s"$root/$rel")).filter { s =>
+        val n = s.getPath.getName
+        s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".") &&
+          n.endsWith(".parquet")
+      }
+    lastListingDistributed = rels.size > ParallelListingThreshold
+    if (!lastListingDistributed) {
+      val f = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+      rels.map(listDir(f, _)).toMap
+    } else {
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext
+        .parallelize(rels, math.min(rels.size, 64))
+        .map(rel => listDir(FileSystem.get(new java.net.URI(root), conf.value), rel))
+        .collect().toMap
+    }
+  }
 }

@@ -116,14 +116,11 @@ final class GraftTable(root: String, tschema: StructType,
     val v = GraftDataSource.resolveVersion(spark, root, params)
     GraftDataSource.runSidecarOptIns(spark, root, v, params, tschema)
     val idx = new GraftPartitioningAwareIndex(spark,
-      new GraftFileIndex(spark, root, v))
-    // mergeSchema: evolved tables have dirs whose files miss late
-    // columns — the parquet reader must treat the table schema as
-    // authoritative and null-fill, exactly as the v1 relation did
-    val readerOpts = new java.util.HashMap[String, String](opts.asCaseSensitiveMap())
-    readerOpts.put("mergeSchema", "true")
-    new GraftScanBuilder(spark, idx, tschema,
-      new CaseInsensitiveStringMap(readerOpts), root,
+      VersionedTable.relation(spark, root, v).location.asInstanceOf[GraftFileIndex])
+    // tschema is the version's logged schema: the parquet reader
+    // null-fills the columns an older dir's files lack, as the v1
+    // relation does
+    new GraftScanBuilder(spark, idx, tschema, opts, root,
       startingVersion = Option(opts.get("startingVersion")).map(_.trim.toLong).getOrElse(0L),
       skipChangeCommits = Option(opts.get("skipChangeCommits")).exists(_.trim.toBoolean),
       maxVersionsPerTrigger = Option(opts.get("maxVersionsPerTrigger")).map(_.trim.toLong))
@@ -292,31 +289,11 @@ private[sources] final class GraftMicroBatchStream(
   override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
     val startV = start.asInstanceOf[GraftOffset].v
     val endV = end.asInstanceOf[GraftOffset].v
-    val adds = scala.collection.mutable.ArrayBuffer.empty[String]
-    var v = math.max(0L, startV + 1L)
-    while (v <= endV) {
-      val prev =
-        if (v == 0) Set.empty[String]
-        else VersionedTable.entryPairsOf(spark, root, v - 1).map(_._1).toSet
-      val cur = VersionedTable.entryPairsOf(spark, root, v).map(_._1)
-      val removed = prev -- cur.toSet
-      if (removed.nonEmpty) {
-        if (!skipChangeCommits) throw new IllegalStateException(
-          s"graft stream over $root: version $v rewrites or removes " +
-            s"data (${removed.size} dropped dirs — merge/compact/" +
-            "restore). Set skipChangeCommits=true to skip such " +
-            "commits (later appends still stream), or consume the " +
-            "change feed (readChangeFeed) for CDC semantics.")
-        // skip the commit's adds too: they re-package delivered rows
-      } else {
-        adds ++= cur.filterNot(prev.contains)
-      }
-      v += 1
-    }
+    val adds = GraftDataSource.addedDirs(spark, root, startV, endV, skipChangeCommits)
     if (adds.isEmpty) Array.empty
     else {
       val idx = new GraftPartitioningAwareIndex(spark,
-        new GraftFileIndex(spark, root, endV, onlyRels = Some(adds.toSeq)))
+        new GraftFileIndex(spark, root, endV, adds.map((_, None)), None))
       template.copy(fileIndex = idx).toBatch.planInputPartitions()
     }
   }

@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.graft.SqlShim
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A versioned parquet table with an append-only commit log — the
   * transactional semantics the reference gets from delta-rs
@@ -11,7 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   <root>/_log/v00000003.commit      // one file per version; content =
-  *                                     // the data dirs it publishes
+  *                                     // the data dirs it publishes, then
+  *                                     // meta lines (#partcol, #txn, and
+  *                                     // #schema<TAB><StructType JSON>)
   *   <root>/_log/v00000009.checkpoint  // full log state every N commits
   *   <root>/_log/_last_checkpoint      // pointer to the newest checkpoint
   *   <root>/data/v00000003-<uuid>/     // immutable parquet snapshot
@@ -65,6 +70,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cost is O(touched partitions), not O(table)). [[compact]] folds a
   * long chain back into one snapshot and [[vacuum]] deletes only dirs
   * no retained version reaches.
+  *
+  * Every commit also logs its version's schema (`#schema`, all fields
+  * nullable, as a parquet read reports them): a full snapshot logs
+  * its staged frame's schema; a commit that carries base entries
+  * logs base ∪ staged under `StructType.merge`, the rule Spark's
+  * parquet `mergeSchema` applies, so an evolved append chain serves
+  * the widened union with nulls for pre-evolution rows, and a type
+  * conflict fails the write instead of every later read (Delta keeps
+  * the schema in its log the same way). Every read is then one
+  * relation over [[GraftFileIndex]] built from the commit text alone
+  * ([[relation]]): no footer-merge job, no parallel listing of dirs
+  * already listed. A commit written before the schema line existed
+  * gets its schema inferred from footers ([[schemaOf]]); the table's
+  * next write logs it.
   *
   * Log checkpointing: every [[CheckpointInterval]]-th commit also
   * writes a `.checkpoint` file holding the FULL version->dirs state
@@ -214,6 +233,12 @@ object VersionedTable {
     }
   }
 
+  /** [[currentVersion]], or FileNotFoundException for a table with no
+    * committed version. */
+  private[graft] def headVersion(spark: SparkSession, root: String): Long =
+    currentVersion(spark, root).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+
   /** Root-relative data dirs of a version — the read-only view the
     * stats/data-skipping layer ([[DataSkipping]]) prunes over. */
   private[graft] def dirsOf(spark: SparkSession, root: String, v: Long): Seq[String] =
@@ -271,9 +296,20 @@ object VersionedTable {
     * the streaming sink writes), not data entries — skipped here, and
     * never copied into checkpoints or carried entry lists. */
   private def entriesOf(spark: SparkSession, root: String, v: Long): Seq[Entry] =
-    readCommitText(spark, root, v)
-      .split("\n").map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-      .toSeq.map(parseEntry)
+    commitOf(spark, root, v).entries
+
+  /** A version's commit file, parsed once: its data entries plus the
+    * `#partcol` and `#schema` meta values (still encoded / JSON). */
+  private final case class Commit(entries: Seq[Entry], partCol: Option[String],
+                                  schemaJson: Option[String])
+
+  private def commitOf(spark: SparkSession, root: String, v: Long): Commit = {
+    val lines = readCommitText(spark, root, v).split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+    def meta(tag: String) =
+      lines.find(_.startsWith(s"#$tag\t")).map(_.substring(tag.length + 2))
+    Commit(lines.filterNot(_.startsWith("#")).map(parseEntry),
+      meta("partcol").map(java.net.URLDecoder.decode(_, "UTF-8")), meta("schema"))
+  }
 
   /** The `#txn` markers a version's commit file carries:
     * (appId, batchId) pairs, committed ATOMICALLY with the version's
@@ -296,22 +332,31 @@ object VersionedTable {
     * inherit the marker from the version they derive from. */
   private def partColMetaLine(c: String) = s"#partcol\t${enc(c)}"
 
-  /** The partition column a version's commit recorded, if any. */
-  private[graft] def partitionColumnOf(spark: SparkSession, root: String,
-                                       v: Long): Option[String] = {
-    val f = fs(spark, root)
-    if (!committed(f, root, v)) return None
-    readCommitText(spark, root, v)
-      .split("\n").map(_.trim).find(_.startsWith("#partcol\t"))
-      .map(l => java.net.URLDecoder.decode(l.split("\t", -1)(1), "UTF-8"))
-  }
+  private def schemaMetaLine(s: StructType) = s"#schema\t${s.json}"
 
-  /** The meta lines a derived commit should carry forward from `base`
-    * (currently: the partition-column marker). */
-  private def inheritMeta(spark: SparkSession, root: String,
-                          base: Long): Seq[String] =
-    if (base < 0) Nil
-    else partitionColumnOf(spark, root, base).map(partColMetaLine).toSeq
+  /** The schema of version `v`: its logged `#schema` line, or, for a
+    * commit written before commits logged one, the footer-merged
+    * schema of its dirs (one Spark job, the pre-log read's cost). */
+  private[graft] def schemaOf(spark: SparkSession, root: String, v: Long): StructType =
+    schemaOf(spark, root, commitOf(spark, root, v))
+
+  private def schemaOf(spark: SparkSession, root: String, c: Commit): StructType =
+    c.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]).getOrElse(
+      spark.read.option("mergeSchema", "true")
+        .parquet(c.entries.map(e => s"$root/${e.rel}"): _*).schema)
+
+  /** The `#schema` a commit on top of `base` logs for a staged batch.
+    * A full snapshot (nothing carried) logs the batch's schema; a
+    * commit that carries base entries logs base ∪ batch by
+    * `StructType.merge`, so the logged schema never narrows. A type
+    * conflict throws Spark's merge error before the commit publishes,
+    * after `cleanup` reclaims the staged data. */
+  private def stagedSchema(spark: SparkSession, root: String, base: Long, carries: Boolean,
+                           staged: StructType, cleanup: () => Unit): StructType =
+    try {
+      if (carries && base >= 0) SqlShim.mergeSchemas(spark, schemaOf(spark, root, base), staged)
+      else SqlShim.nullable(staged)
+    } catch { case e: Throwable => cleanup(); throw e }
 
   /** The most recent batchId `appId` committed, walking the log head
     * → 0 and stopping at the first marker. O(versions since the
@@ -335,90 +380,62 @@ object VersionedTable {
     None
   }
 
-  /** Time travel: the immutable snapshot a given version published.
-    * Reads with schema UNION across the version's dirs (mergeSchema):
-    * an append chain whose later commits added columns serves the
-    * evolved schema with nulls for pre-evolution rows — without it,
-    * plain parquet reads take ONE file's schema and silently drop the
-    * other dirs' new columns. (Delta stores the evolved schema in the
-    * log and validates writers against it; here evolution is
-    * union-on-read and writers are unvalidated — the footer-read cost
-    * of mergeSchema is the price, stated honestly.) */
-  def readAsOf(spark: SparkSession, root: String, version: Long): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(entriesOf(spark, root, version).map(e => s"$root/${e.rel}"): _*)
-
-  /** Column names of the current version, resolved from ONE staged
-    * dir's footers (no mergeSchema union across the whole table) —
-    * the cheap layout probe for build-time schema flags (e.g. "is
-    * this graph index codes-bearing?") on tables whose dirs all share
-    * the build's schema by construction. A [[read]] would fan the
-    * footer read across EVERY dir of the version (mergeSchema), which
-    * maintenance paths were paying once per micro-batch. */
-  private[graft] def columnsOf(spark: SparkSession, root: String): Array[String] = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val first = entriesOf(spark, root, v).head.rel
-    spark.read.parquet(s"$root/$first").columns
+  /** The relation every read of version `v` builds: a parquet
+    * `HadoopFsRelation` over [[GraftFileIndex]], fed from ONE read of
+    * the commit text (entries, `#partcol`, `#schema`). `parts` (encoded
+    * partition values) keeps only those partitions' dirs, so a
+    * partition read never lists another partition. No footer is read
+    * and no Spark job runs to build it; the index lists its dirs when
+    * the plan first needs files. */
+  private[graft] def relation(spark: SparkSession, root: String, v: Long,
+                              parts: Option[Set[String]] = None): HadoopFsRelation = {
+    val c = commitOf(spark, root, v)
+    val picked = parts.fold(c.entries)(want => c.entries.filter(_.part.exists(want)))
+    if (picked.isEmpty) throw new java.io.FileNotFoundException(parts.fold(
+      s"no data dirs at $root@v$v")(ps => s"no dirs for partitions ${ps.mkString(",")} at $root@v$v"))
+    HadoopFsRelation(
+      location = new GraftFileIndex(spark, root, v, picked.map(e => (e.rel, e.part)), c.partCol),
+      partitionSchema = new StructType(),
+      dataSchema = schemaOf(spark, root, c),
+      bucketSpec = None,
+      fileFormat = new GraftGuardedParquet,
+      options = Map.empty)(spark)
   }
+
+  private def scan(spark: SparkSession, root: String, v: Long,
+                   parts: Option[Set[String]] = None): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, root, v, parts))
+
+
+  /** Time travel: the immutable snapshot a given version published,
+    * with the version's logged schema: an append chain whose later
+    * commits added columns serves the evolved schema with nulls for
+    * pre-evolution rows. */
+  def readAsOf(spark: SparkSession, root: String, version: Long): DataFrame =
+    scan(spark, root, version)
 
   /** The latest committed snapshot. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    readAsOf(spark, root, v)
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    scan(spark, root, headVersion(spark, root))
 
   /** Dir-level partition pruning for a partition-native table: read
     * ONLY the dirs holding `partValue` — a reader of one partition
-    * never lists or opens any other partition's files. Absent
-    * partition => empty-but-typed result is the caller's concern
-    * (throws FileNotFoundException like an absent table). */
+    * never lists or opens any other partition's files. The schema is
+    * the version's (a column no dir of this partition carries reads
+    * as null). Absent partition => FileNotFoundException, like an
+    * absent table. */
   def readPartition(spark: SparkSession, root: String, partValue: String,
-                    version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val rels = entriesOf(spark, root, v).filter(_.part.contains(enc(partValue))).map(_.rel)
-    if (rels.isEmpty)
-      throw new java.io.FileNotFoundException(s"no dirs for partition $partValue at $root@v$v")
-    spark.read.option("mergeSchema", "true").parquet(rels.map(r => s"$root/$r"): _*)
-  }
+                    version: Option[Long] = None): DataFrame =
+    readPartitions(spark, root, Seq(partValue), version)
 
   /** Dir-pruned read across MULTIPLE partition values in ONE scan —
     * the plural [[readPartition]]: all matching dirs go into a single
-    * parquet relation (one file index, one scan node) instead of a
-    * per-value union. Values with no dirs are simply absent from the
-    * result; throws only when NONE match.
-    *
-    * `mergeSchema = false` is for callers whose table's dirs all share
-    * one schema BY CONSTRUCTION (the index tables: every build/ingest
-    * generation writes the same columns) — schema inference then reads
-    * ONE footer instead of launching a parallel footer-merge Spark job
-    * per read, which the probe paths were paying once per fetch pass.
-    * Leave it true for tables whose append chain may have evolved. */
+    * relation (one file index, one scan node) instead of a per-value
+    * union. Values with no dirs are simply absent from the result;
+    * throws only when NONE match. */
   def readPartitions(spark: SparkSession, root: String, partValues: Seq[String],
-                     version: Option[Long] = None,
-                     mergeSchema: Boolean = true): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val want = partValues.map(enc).toSet
-    val rels = entriesOf(spark, root, v).filter(_.part.exists(want.contains)).map(_.rel)
-    if (rels.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"no dirs for partitions ${partValues.mkString(",")} at $root@v$v")
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(rels.map(r => s"$root/$r"): _*)
-  }
-
-  /** [[readAsOf]] for tables whose dirs share ONE schema by
-    * construction (index internals) — one-footer inference instead of
-    * the parallel footer-merge job mergeSchema launches per read. */
-  private[graft] def readUniform(spark: SparkSession, root: String,
-                                 version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    spark.read.parquet(entriesOf(spark, root, v).map(e => s"$root/${e.rel}"): _*)
-  }
+                     version: Option[Long] = None): DataFrame =
+    scan(spark, root, version.getOrElse(headVersion(spark, root)), Some(partValues.map(enc).toSet))
 
   /** Stage `df` and atomically publish it as version `base + 1`.
     * Throws [[VersionConflictException]] (after cleaning up the staged
@@ -504,6 +521,8 @@ object VersionedTable {
         // no-op conflict cleanup: the staged dir survives a lost race
         // for the rebase; it is reclaimed only on final give-up
         publish(spark, root, base + 1, carry :+ Entry(rel, None),
+                stagedSchema(spark, root, base, carries = true, df.schema,
+                             () => f.delete(p(staged), true)),
                 onConflictCleanup = () => (), meta = meta)
         return base + 1
       } catch {
@@ -594,8 +613,7 @@ object VersionedTable {
   }
 
   def streamAppends(spark: SparkSession, root: String): DataFrame = {
-    val head = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    val head = headVersion(spark, root)
     // the docstring's append-only restriction, DETECTED at stream
     // construction rather than trusted: a table whose history already
     // violates it gets a loud warning (delivery may duplicate; a
@@ -607,7 +625,7 @@ object VersionedTable {
           "commits (merge/compact/restore); streaming delivery may " +
           "re-deliver rows — consume the change feed for non-append " +
           "workloads")
-    val schema = readAsOf(spark, root, head).schema
+    val schema = schemaOf(spark, root, head)
     spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "*.parquet")
@@ -620,8 +638,7 @@ object VersionedTable {
   }
 
   def compact(spark: SparkSession, root: String): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    val base = headVersion(spark, root)
     commit(spark, root, readAsOf(spark, root, base), base)
   }
 
@@ -637,13 +654,13 @@ object VersionedTable {
     * and the caller re-resolves, so a restore can never silently drop
     * a commit it didn't see. */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    val cur = headVersion(spark, root)
     require(committed(fs(spark, root), root, toVersion),
       s"cannot restore $root to uncommitted version $toVersion")
     val next = cur + 1
-    publish(spark, root, next, entriesOf(spark, root, toVersion), () => (),
-            meta = inheritMeta(spark, root, toVersion))
+    val c = commitOf(spark, root, toVersion)
+    publish(spark, root, next, c.entries, schemaOf(spark, root, c), () => (),
+            meta = c.partCol.map(partColMetaLine).toSeq)
     next
   }
 
@@ -669,15 +686,19 @@ object VersionedTable {
     stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
       case None =>
         // an EMPTY append is a marker-only commit (carry + meta,
-        // nothing staged) — an idle streaming micro-batch still lands
-        // its txn marker instead of crashing the loop
+        // nothing staged, so the base's data and schema) — an idle
+        // streaming micro-batch still lands its txn marker instead of
+        // crashing the loop
         require(base >= 0,
           s"cannot create a partitioned table at $root from an empty append")
-        publish(spark, root, next, carry, onConflictCleanup = () => (),
+        publish(spark, root, next, carry, schemaOf(spark, root, base),
+                onConflictCleanup = () => (),
                 meta = Seq(partColMetaLine(partitionCol)) ++ txnLines(txn))
       case Some((parent, entries)) =>
+        val cleanup = () => { f.delete(p(s"$root/$parent"), true); () }
         publish(spark, root, next, carry ++ entries,
-                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true),
+                stagedSchema(spark, root, base, carries = true, df.schema, cleanup),
+                onConflictCleanup = cleanup,
                 meta = Seq(partColMetaLine(partitionCol)) ++ txnLines(txn))
     }
     next
@@ -692,18 +713,19 @@ object VersionedTable {
     * cost scales with the fragmented partitions, not the table. */
   def compactPartitioned(spark: SparkSession, root: String): Long = {
     val f = fs(spark, root)
-    val base = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val entries = entriesOf(spark, root, base)
-    require(entries.forall(_.part.isDefined),
+    val base = headVersion(spark, root)
+    val c = commitOf(spark, root, base)
+    require(c.entries.forall(_.part.isDefined),
       s"compactPartitioned requires a partition-native table; $root@v$base has unscoped dirs")
     val next = base + 1
-    val byPart = entries.groupBy(_.part.get).toSeq.sortBy(_._1)
+    // folding only re-packs the base's rows: the base schema carries
+    val schema = schemaOf(spark, root, c)
+    val meta = c.partCol.map(partColMetaLine).toSeq
+    val byPart = c.entries.groupBy(_.part.get).toSeq.sortBy(_._1)
     val carried = byPart.collect { case (_, es) if es.size == 1 => es.head }
-    val fragmented = byPart.collect { case (_, es) if es.size > 1 => es }.flatten
+    val fragmented = byPart.collect { case (pv, es) if es.size > 1 => pv }
     if (fragmented.isEmpty) { // nothing to fold: every dir carries
-      publish(spark, root, next, carried, onConflictCleanup = () => (),
-              meta = inheritMeta(spark, root, base))
+      publish(spark, root, next, carried, schema, onConflictCleanup = () => (), meta = meta)
       return next
     }
     // one read of every fragmented chain + one staging wave — rows
@@ -712,27 +734,24 @@ object VersionedTable {
     // per fragmented partition; a legacy table without the #partcol
     // marker (so the column name is unknown) takes the per-partition
     // fold it always got
-    partitionColumnOf(spark, root, base) match {
+    c.partCol match {
       case Some(pc) =>
-        val src = spark.read.parquet(fragmented.map(e => s"$root/${e.rel}"): _*)
-          .localCheckpoint()
+        val src = scan(spark, root, base, Some(fragmented.toSet)).localCheckpoint()
         val (parent, staged) = stagePartitions(spark, root, src, pc, next)
-        publish(spark, root, next, carried ++ staged,
-                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true),
-                meta = inheritMeta(spark, root, base))
+        publish(spark, root, next, carried ++ staged, schema,
+                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true), meta = meta)
       case None =>
         val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
         val staged =
-          try fragmented.groupBy(_.part.get).toSeq.sortBy(_._1).map { case (pv, es) =>
+          try fragmented.map { pv =>
             val rel = s"$parent/p=$pv"
-            spark.read.parquet(es.map(e => s"$root/${e.rel}"): _*)
+            scan(spark, root, base, Some(Set(pv)))
               .write.mode("errorifexists").parquet(s"$root/$rel")
             Entry(rel, Some(pv))
           }
           catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
-        publish(spark, root, next, carried ++ staged,
-                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true),
-                meta = inheritMeta(spark, root, base))
+        publish(spark, root, next, carried ++ staged, schema,
+                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true), meta = meta)
     }
     next
   }
@@ -819,8 +838,10 @@ object VersionedTable {
     val staged = s"$root/$rel"
     try df.write.mode("errorifexists").parquet(staged)
     catch { case e: Throwable => f.delete(p(staged), true); throw e }
+    val cleanup = () => { f.delete(p(staged), true); () }
     publish(spark, root, next, carryOver :+ Entry(rel, None),
-            onConflictCleanup = () => f.delete(p(staged), true), meta = meta)
+            stagedSchema(spark, root, base, carryOver.nonEmpty, df.schema, cleanup),
+            onConflictCleanup = cleanup, meta = meta)
     next
   }
 
@@ -853,18 +874,19 @@ object VersionedTable {
     }
   }
 
-  /** The atomic publish: full commit content to a writer-unique temp
-    * file (raw FS — [[logFs]] — so no checksum sidecar ever exists to
+  /** The atomic publish: full commit content (entries, meta lines,
+    * the `#schema` line) to a writer-unique temp file (raw FS — [[logFs]] — so no checksum sidecar ever exists to
     * race), then [[atomicNoReplace]] onto the commit name. Also
     * writes the periodic log checkpoint after winning. */
   private def publish(spark: SparkSession, root: String, next: Long,
-                      entries: Seq[Entry], onConflictCleanup: () => Unit,
-                      meta: Seq[String] = Nil): Unit = {
+                      entries: Seq[Entry], schema: StructType,
+                      onConflictCleanup: () => Unit, meta: Seq[String] = Nil): Unit = {
     val f = logFs(spark, root)
     f.mkdirs(p(s"$root/_log"))
     val tmp = p(s"$root/_log/.tmp-${verName(next)}-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, /* overwrite = */ false)
-    try out.write((entries.map(_.line) ++ meta).mkString("\n").getBytes("UTF-8"))
+    try out.write((entries.map(_.line) ++ meta :+ schemaMetaLine(schema))
+                    .mkString("\n").getBytes("UTF-8"))
     finally out.close()
     val target = commitPath(root, next)
     // fast-path pre-check (skip the arbiter when the version is
@@ -1129,7 +1151,8 @@ object VersionedTable {
                                     carried: Seq[(String, Option[String])]): Long =
     stageAndCommit(spark, root, df, base,
                    carryOver = carried.map { case (rel, pv) => Entry(rel, pv) },
-                   meta = inheritMeta(spark, root, base))
+                   meta = if (base < 0) Nil
+                          else commitOf(spark, root, base).partCol.map(partColMetaLine).toSeq)
 
   /** KEYED DELETE: commit a new version holding every current row
     * whose key does NOT appear in `victims` — the `whenMatchedDelete`
@@ -1140,8 +1163,7 @@ object VersionedTable {
     * [[merge]]. Returns the new version. */
   def deleteKeys(spark: SparkSession, root: String, victims: DataFrame,
                  keys: Seq[String]): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    val base = headVersion(spark, root)
     val kept = readAsOf(spark, root, base)
       .join(victims.select(keys.map(org.apache.spark.sql.functions.col): _*)
               .distinct(),
@@ -1170,12 +1192,14 @@ object VersionedTable {
         require(carried.nonEmpty,
           s"refusing to publish a dir-less version at $root (empty rewrite, empty carry)")
         publish(spark, root, next, carried.map { case (rel, pv) => Entry(rel, pv) },
-                onConflictCleanup = () => (),
+                schemaOf(spark, root, base), onConflictCleanup = () => (),
                 meta = Seq(partColMetaLine(partitionCol)))
       case Some((parent, entries)) =>
+        val cleanup = () => { f.delete(p(s"$root/$parent"), true); () }
         publish(spark, root, next,
                 carried.map { case (rel, pv) => Entry(rel, pv) } ++ entries,
-                onConflictCleanup = () => f.delete(p(s"$root/$parent"), true),
+                stagedSchema(spark, root, base, carried.nonEmpty, df.schema, cleanup),
+                onConflictCleanup = cleanup,
                 meta = Seq(partColMetaLine(partitionCol)))
     }
     next
@@ -1256,11 +1280,9 @@ object VersionedTable {
       // is the same result at O(1) job launches instead of
       // O(touched).
       val touchedEnc = touched.map(enc).toSet
-      val beforeRels = baseEntries
-        .filter(_.part.exists(touchedEnc.contains)).map(_.rel)
       val target =
-        if (beforeRels.isEmpty) src.limit(0)
-        else spark.read.parquet(beforeRels.map(r => s"$root/$r"): _*)
+        if (!baseEntries.exists(_.part.exists(touchedEnc.contains))) src.limit(0)
+        else scan(spark, root, base, Some(touchedEnc))
       val merged = graft.operators.Relational
         .mergeUpsert(target, src, keys, tb).localCheckpoint()
       val (parent, staged) = stagePartitions(spark, root, merged, partitionCol, next)
@@ -1279,6 +1301,8 @@ object VersionedTable {
         val carried = pubEntries.filterNot(e => e.part.exists(touchedEnc.contains))
         try {
           publish(spark, root, pubBase + 1, carried ++ staged,
+                  stagedSchema(spark, root, pubBase, carries = true, merged.schema,
+                               () => f.delete(p(s"$root/$parent"), true)),
                   onConflictCleanup = () => (),
                   meta = Seq(partColMetaLine(partitionCol)))
           lastMergeRebased = pubBase != base

@@ -7,8 +7,10 @@
   * Every file-backed v1 connector bridges this the same way — a thin
   * accessor object compiled inside the `org.apache.spark.sql`
   * namespace (Delta Lake's `DeltaSource`, Spark's own
-  * `FileStreamSource`). This object is that bridge and NOTHING else:
-  * no logic, no state — the graft connector proper lives in
+  * `FileStreamSource`). This object is that bridge, plus the two
+  * `private[sql]` schema helpers the commit log's `#schema` line needs
+  * (the parquet `mergeSchema` rule and read-side nullability), and
+  * NOTHING else: no state — the graft connector proper lives in
   * `graft.sources` against public APIs.
   */
 package org.apache.spark.sql.graft
@@ -54,6 +56,17 @@ object SqlShim {
   def batchFrame(spark: SparkSession, rows: RDD[InternalRow],
                  schema: StructType): DataFrame =
     classic(spark).internalCreateDataFrame(rows, schema, isStreaming = false)
+
+  /** `s` as a parquet read reports it: every field nullable, nested
+    * types included (what `DataSource` applies to a file schema). */
+  def nullable(s: StructType): StructType = s.asNullable
+
+  /** `a` widened by `b` under the rule Spark's parquet `mergeSchema`
+    * applies across footers (`StructType.merge`, with the session's
+    * case sensitivity): `a`'s fields in order, then `b`'s new ones; a
+    * type conflict throws Spark's merge error. */
+  def mergeSchemas(spark: SparkSession, a: StructType, b: StructType): StructType =
+    a.merge(b, classic(spark).sessionState.conf.caseSensitiveAnalysis).asNullable
 
   /** The executed InternalRow RDD of a sink's incoming batch frame. */
   def internalRows(df: DataFrame): RDD[InternalRow] =

@@ -263,6 +263,159 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(df.filter("id = 1").select("score").collect().head.isNullAt(0))
   }
 
+  // ── log-fed read path ─────────────────────────────────────────────
+
+  /** Jobs started while `body` runs (the listener pattern of the
+    * bloom-backfill spec: events drain asynchronously). */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  private def commitText(root: String, v: Long): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f"$root/_log/v$v%08d.commit")), "UTF-8")
+
+  /** A partition-native table of `waves` appends over `parts` values:
+    * `waves * parts` dirs at the head. */
+  private def chain(tag: String, waves: Int, parts: Int): String = {
+    import spark.implicits._
+    val root = tmp(tag)
+    def wave(w: Int) = (0 until parts).map(p => ((w * parts + p).toLong, s"p$p")).toDF("id", "part")
+    var v = VersionedTable.commitPartitioned(spark, root, wave(0), "part", -1L)
+    (1 until waves).foreach(w => v = VersionedTable.appendPartitioned(spark, root, wave(w), "part", v))
+    root
+  }
+
+  test("log-fed reads: a first read of a version runs at most 1 job before its action, a repeat none") {
+    // 40 dirs (above the 32-dir parallel-listing threshold), and 1 dir
+    val wide = chain("jobs_wide", waves = 10, parts = 4)
+    val narrow = chain("jobs_narrow", waves = 1, parts = 1)
+    VersionedTable.commitPartitioned(spark, narrow,
+      VersionedTable.read(spark, narrow), "part", 0L) // v1: one dir again
+    assert(VersionedTable.dirsOf(spark, wide, 9L).size == 40)
+    for ((root, rows) <- Seq(wide -> 40L, narrow -> 1L)) {
+      val head = VersionedTable.currentVersion(spark, root).get
+      val reads: Seq[(String, () => DataFrame)] = Seq(
+        "read" -> (() => VersionedTable.read(spark, root)),
+        "readAsOf(older)" -> (() => VersionedTable.readAsOf(spark, root, head - 1)),
+        "readPartition" -> (() => VersionedTable.readPartition(spark, root, "p0")),
+        "format(graft)" -> (() => spark.read.format("graft").load(root)))
+      for ((name, r) <- reads) {
+        // everything before the action: resolve, schema, file listing
+        val first = jobsDuring(r().inputFiles)
+        val again = jobsDuring(r().inputFiles)
+        assert(first <= 1, s"$name of ${VersionedTable.dirsOf(spark, root, head).size} dirs: " +
+          s"first read ran $first jobs before its action")
+        assert(again == 0, s"$name: repeat read ran $again jobs before its action")
+      }
+      assert(VersionedTable.read(spark, root).count() == rows)
+    }
+  }
+
+  test("log-fed reads: two reads of one version are equal relations (sameResult, cache hits)") {
+    val root = chain("eq", waves = 2, parts = 2)
+    def plan(df: DataFrame) = df.queryExecution.analyzed
+    val a = VersionedTable.read(spark, root)
+    val b = VersionedTable.read(spark, root)
+    assert(plan(a).sameResult(plan(b)), "two reads of one version must be the same relation")
+    assert(plan(VersionedTable.readAsOf(spark, root, 1L)).sameResult(plan(a)))
+    assert(!plan(VersionedTable.readAsOf(spark, root, 0L)).sameResult(plan(a)))
+    assert(plan(VersionedTable.readPartition(spark, root, "p0"))
+      .sameResult(plan(VersionedTable.readPartition(spark, root, "p0"))))
+    assert(!plan(VersionedTable.readPartition(spark, root, "p0"))
+      .sameResult(plan(VersionedTable.readPartition(spark, root, "p1"))))
+    a.persist()
+    try assert(b.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
+      "a second read of a cached version must hit the cache")
+    finally a.unpersist()
+  }
+
+  test("schema log: an evolving append chain logs the footer-merged union, same order; old rows read null") {
+    import spark.implicits._
+    val root = tmp("slog_evo")
+    val v0 = VersionedTable.commit(spark, root, Seq((1L, "a")).toDF("id", "s"), -1L)
+    val v1 = VersionedTable.append(spark, root, Seq((2L, 9.5, "b")).toDF("id", "score", "s"), v0)
+    val v2 = VersionedTable.append(spark, root, Seq((3L, "c", 7)).toDF("id", "s", "n"), v1)
+    val footers = spark.read.option("mergeSchema", "true")
+      .parquet(VersionedTable.dirsOf(spark, root, v2).map(r => s"$root/$r"): _*).schema
+    val logged = VersionedTable.read(spark, root).schema
+    assert(logged == footers, s"logged $logged, footer merge $footers")
+    assert(logged.fieldNames.toSeq == Seq("id", "s", "score", "n"))
+    assert(commitText(root, v2).split("\n").exists(_.startsWith("#schema\t")))
+    val byId = VersionedTable.read(spark, root).collect().map(r => r.getLong(0) -> r).toMap
+    assert(byId(1L).isNullAt(2) && byId(1L).isNullAt(3) && byId(2L).isNullAt(3))
+    assert(byId(3L).getInt(3) == 7)
+    // each version keeps its own schema
+    assert(VersionedTable.readAsOf(spark, root, v0).columns.toSeq == Seq("id", "s"))
+  }
+
+  test("schema log: readPartition serves the version's schema, null where a partition lacks a column") {
+    import spark.implicits._
+    val root = tmp("slog_part")
+    val v0 = VersionedTable.commitPartitioned(spark, root,
+      Seq((1L, "a", "p0"), (2L, "b", "p1")).toDF("id", "s", "part"), "part", -1L)
+    VersionedTable.appendPartitioned(spark, root,
+      Seq((3L, "c", "p1", 4.5)).toDF("id", "s", "part", "score"), "part", v0)
+    val p0 = VersionedTable.readPartition(spark, root, "p0")
+    assert(p0.columns.toSeq == Seq("id", "s", "part", "score"))
+    val only = p0.collect()
+    assert(only.length == 1 && only.head.getLong(0) == 1L && only.head.isNullAt(3))
+  }
+
+  test("schema log: a type-conflicting append fails at commit with Spark's merge error") {
+    import spark.implicits._
+    val root = tmp("slog_conflict")
+    val v0 = VersionedTable.append(spark, root, Seq((1L, "a")).toDF("id", "s"), -1L)
+    val e = intercept[Exception] {
+      VersionedTable.append(spark, root, Seq((2L, 5)).toDF("id", "s"), v0)
+    }
+    assert(e.getMessage.toLowerCase.contains("merge"), e.getMessage)
+    val pv0 = VersionedTable.commitPartitioned(spark, s"${root}_p",
+      Seq((1L, "a", "p0")).toDF("id", "s", "part"), "part", -1L)
+    intercept[Exception] {
+      VersionedTable.appendPartitioned(spark, s"${root}_p",
+        Seq((2L, 5, "p0")).toDF("id", "s", "part"), "part", pv0)
+    }
+    // nothing published, nothing staged
+    assert(VersionedTable.currentVersion(spark, root).contains(v0))
+    assert(VersionedTable.currentVersion(spark, s"${root}_p").contains(pv0))
+    assert(new java.io.File(s"$root/data").list().length == 1)
+    assert(new java.io.File(s"${root}_p/data").list().length == 1)
+    assert(VersionedTable.read(spark, root).count() == 1)
+  }
+
+  test("schema log: a log without #schema lines reads the same rows and schema") {
+    import spark.implicits._
+    val root = tmp("slog_legacy")
+    val v0 = VersionedTable.commit(spark, root, Seq((1L, "a")).toDF("id", "s"), -1L)
+    val v1 = VersionedTable.append(spark, root, Seq((2L, 9.5, "b")).toDF("id", "score", "s"), v0)
+    def snapshot(v: Long) = {
+      val df = VersionedTable.readAsOf(spark, root, v)
+      (df.schema, df.collect().map(_.toString).toSet)
+    }
+    val before = Seq(v0, v1).map(snapshot)
+    Seq(v0, v1).foreach { v =>
+      val stripped = commitText(root, v).split("\n").filterNot(_.startsWith("#schema\t"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(f"$root/_log/v$v%08d.commit"),
+        stripped.mkString("\n").getBytes("UTF-8"))
+      assert(!commitText(root, v).contains("#schema"))
+    }
+    assert(Seq(v0, v1).map(snapshot) == before)
+    assert(spark.read.format("graft").load(root).schema == before.last._1)
+    // the next write logs base ∪ staged again
+    val v2 = VersionedTable.append(spark, root, Seq((3L, "c")).toDF("id", "s"), v1)
+    assert(commitText(root, v2).split("\n").exists(_.startsWith("#schema\t")))
+    assert(VersionedTable.read(spark, root).schema == before.last._1)
+  }
+
   test("format(graft) write path: save modes map to the commit protocol") {
     val root = tmp("src_write")
     spark.range(0, 3).toDF("id").write.format("graft").save(root) // ErrorIfExists default
