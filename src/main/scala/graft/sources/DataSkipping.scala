@@ -173,8 +173,7 @@ object DataSkipping {
     if (needRels.isEmpty) return existing
     statsBuilds += 1
     lastStatsDirsScanned = needRels.size
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(needRels.map(r => s"$root/$r"): _*)
+    val df = VersionedTable.readDirs(spark, root, version, needRels)
       .withColumn("_dir", regexp_replace(input_file_name(), "/[^/]*$", ""))
     val aggs = numCols.distinct.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"nmin_$c"), max(col(c).cast("double")).as(s"nmax_$c"))) ++
@@ -282,12 +281,8 @@ object DataSkipping {
     val v = VersionedTable.currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val pred = col(column).cast("double").between(lo, hi)
-    val keep = prunedDirs(spark, root, column, lo, hi, Some(v))
-    if (keep.isEmpty) // schema-correct empty frame: the full UNION
-      VersionedTable.readAsOf(spark, root, v).filter(pred).limit(0)
-    else
-      spark.read.option("mergeSchema", "true")
-        .parquet(keep.map(r => s"$root/$r"): _*).filter(pred)
+    VersionedTable.readDirs(spark, root, v, prunedDirs(spark, root, column, lo, hi, Some(v)))
+      .filter(pred)
   }
 
   /** Morton interleave of two `bits`-bit rank columns (a gets the odd
@@ -422,12 +417,8 @@ object DataSkipping {
     val v = VersionedTable.currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val pred = col(column).cast("string").between(lo, hi)
-    val keep = prunedDirsString(spark, root, column, lo, hi, Some(v))
-    if (keep.isEmpty)
-      VersionedTable.readAsOf(spark, root, v).filter(pred).limit(0)
-    else
-      spark.read.option("mergeSchema", "true")
-        .parquet(keep.map(r => s"$root/$r"): _*).filter(pred)
+    VersionedTable.readDirs(spark, root, v, prunedDirsString(spark, root, column, lo, hi, Some(v)))
+      .filter(pred)
   }
 
   /** Dirs the most recent [[mergeSkipping]] rewrote / carried — spec
@@ -500,9 +491,14 @@ object DataSkipping {
         lastMergeCarried = carried.size
         val before =
           if (touched.isEmpty) src.limit(0)
-          else spark.read.option("mergeSchema", "true")
-            .parquet(touched.toSeq.sorted.map(r => s"$root/$r"): _*)
-        val merged = graft.operators.Relational.mergeUpsert(before, src, keys, tb)
+          else VersionedTable.readDirs(spark, root, base, touched.toSeq)
+        // the base reads with the version's logged schema: a batch
+        // shaped before a later column evolution merges in with those
+        // columns null, as every read of its rows would show them
+        val have = src.columns.map(_.toLowerCase).toSet
+        val padded = before.schema.filterNot(c => have(c.name.toLowerCase))
+          .foldLeft(src)((d, c) => d.withColumn(c.name, lit(null).cast(c.dataType)))
+        val merged = graft.operators.Relational.mergeUpsert(before, padded, keys, tb)
         val v = VersionedTable.commitCarrying(spark, root, merged, base, carried)
         // write-time stats for the fresh dir (carried dirs inherit)
         ensureStatsTyped(spark, root, v, Seq(statKey), Nil)
@@ -607,7 +603,7 @@ object DataSkipping {
     if (need.isEmpty) return existing
     bloomBuilds += 1
     lastBloomDirsScanned = need.size
-    val computed = groupedBloomBuild(spark, root, need, column)
+    val computed = groupedBloomBuild(spark, root, version, need, column)
     val merged = existing ++ computed
     writeBloomSidecar(spark, root, version, column, merged)
     merged
@@ -631,15 +627,16 @@ object DataSkipping {
     * mightContainString/Long probes as the per-dir builds they
     * replace: strings insert their UTF-8 bytes, integrals widen to
     * long. */
-  private def groupedBloomBuild(spark: SparkSession, root: String,
+  private def groupedBloomBuild(spark: SparkSession, root: String, version: Long,
       rels: Seq[String], column: String)
       : Map[String, org.apache.spark.util.sketch.BloomFilter] = {
     import org.apache.spark.util.sketch.BloomFilter
     import org.apache.spark.sql.Encoders
     import scala.jdk.CollectionConverters._
     // schema peek per dir WITHOUT a Spark job: one parquet footer read
-    // on the driver (spark.read.parquet would launch a schema-
-    // inference job per dir — measured 12 extra jobs on a 12-dir
+    // on the driver — the version's logged schema cannot say which
+    // dirs predate the column, and a schema-inferring read per dir
+    // would launch a job each (measured 12 extra jobs on a 12-dir
     // backfill, exactly the per-dir pattern this method removes)
     val conf = spark.sparkContext.hadoopConfiguration
     def dirHasColumn(rel: String): Boolean = {
@@ -658,7 +655,7 @@ object DataSkipping {
     }
     val readable = rels.filter(dirHasColumn)
     if (readable.isEmpty) return Map.empty
-    val scan = spark.read.parquet(readable.map(r => s"$root/$r"): _*)
+    val scan = VersionedTable.readDirs(spark, root, version, readable)
       .select(col(column).as("v"),
         regexp_extract(input_file_name(), "^(.*)/[^/]+$", 1).as("d"))
       .filter(col("v").isNotNull)
@@ -764,12 +761,8 @@ object DataSkipping {
     val v = VersionedTable.currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val pred = col(column) === lit(value)
-    val keep = prunedDirsBloom(spark, root, column, value, Some(v))
-    if (keep.isEmpty)
-      VersionedTable.readAsOf(spark, root, v).filter(pred).limit(0)
-    else
-      spark.read.option("mergeSchema", "true")
-        .parquet(keep.map(r => s"$root/$r"): _*).filter(pred)
+    VersionedTable.readDirs(spark, root, v, prunedDirsBloom(spark, root, column, value, Some(v)))
+      .filter(pred)
   }
 
   /** Re-cluster the CURRENT version (OPTIMIZE): plain appends land as
@@ -811,8 +804,7 @@ object DataSkipping {
     val loose = entries.filter(_._2.isEmpty).map(_._1)
     if (loose.isEmpty) return base
     val carried = entries.filter(_._2.isDefined)
-    val delta = spark.read.option("mergeSchema", "true")
-      .parquet(loose.map(r => s"$root/$r"): _*)
+    val delta = VersionedTable.readDirs(spark, root, base, loose)
     val keyed = zKeyed(delta, c1, c2, nDirs,
       pid => concat(lit(s"g$base-"), pid.cast("string")))
     val v = VersionedTable.commitPartitionedCarrying(

@@ -337,6 +337,27 @@ object GraftFileIndex {
   private[sources] def dropCached(root: String, rels: Seq[String]): Unit =
     listingCache.synchronized { rels.foreach(r => listingCache.remove((root, r))) }
 
+  /** Cache the listings of dirs a writer has just staged (a driver
+    * `listStatus` each), so the first read of the version that
+    * publishes them lists nothing. Not one recursive listing of the
+    * staged parent: Hadoop's `listFiles` builds a `LocatedFileStatus`
+    * per entry, and on the local FS without the native library each
+    * one forks a shell to read permissions. A dir whose publish then
+    * loses is deleted, never read, and ages out of the LRU. */
+  private[sources] def seedListing(spark: SparkSession, root: String,
+                                   rels: Seq[String]): Unit = {
+    val f = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val fresh = rels.map(r => r -> f.listStatus(new Path(s"$root/$r")).filter(isDataFile))
+    listingCache.synchronized { fresh.foreach { case (r, fs) => listingCache.put((root, r), fs) } }
+  }
+
+  /** A data dir's readable files: non-empty parquet files, no `_`/`.`
+    * metadata. */
+  private def isDataFile(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
+  }
+
   /** Dir listing: serial on the driver for small tables; past
     * [[ParallelListingThreshold]] dirs it becomes a Spark job (one
     * task per listing slice) — the InMemoryFileIndex rule, because a
@@ -348,11 +369,7 @@ object GraftFileIndex {
     // a function value, not a method: the listing job's closure ships
     // it to executors without dragging this object along
     val listDir: (FileSystem, String) => (String, Array[FileStatus]) = (f, rel) =>
-      rel -> f.listStatus(new Path(s"$root/$rel")).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".") &&
-          n.endsWith(".parquet")
-      }
+      rel -> f.listStatus(new Path(s"$root/$rel")).filter(isDataFile)
     lastListingDistributed = rels.size > ParallelListingThreshold
     if (!lastListingDistributed) {
       val f = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)

@@ -157,15 +157,19 @@ object VersionedTable {
   private def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
 
   /** Partition-native writes address dirs BY partition value, so a
-    * null value has nowhere to live — fail loudly instead of silently
-    * dropping the rows (the contract every partitioned store shares:
-    * Hive/Delta route nulls to a default partition; we reject them
-    * explicitly so the caller decides the encoding). */
-  private def requireNoNullPartitions(df: DataFrame, partitionCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    require(df.filter(col(partitionCol).isNull).isEmpty,
+    * null value has nowhere to live, and an empty one would vanish
+    * from its entry line (`rel<TAB>` loses its last field on parse) —
+    * fail loudly, naming which, instead of silently dropping the rows
+    * (Hive/Delta route both to a default partition; we reject them so
+    * the caller decides the encoding). `values` are string casts of
+    * the partition column. */
+  private def requireRoutable(values: Iterable[String], partitionCol: String): Unit = {
+    require(!values.exists(_ == null),
       s"null $partitionCol values cannot be partition-routed; " +
       "coalesce them to a sentinel value before the write")
+    require(!values.exists(_.isEmpty),
+      s"empty-string $partitionCol values cannot be partition-routed; " +
+      "map them to a sentinel value before the write")
   }
 
   private def commitPath(root: String, v: Long) = p(s"$root/_log/${verName(v)}.commit")
@@ -393,6 +397,23 @@ object VersionedTable {
     val picked = parts.fold(c.entries)(want => c.entries.filter(_.part.exists(want)))
     if (picked.isEmpty) throw new java.io.FileNotFoundException(parts.fold(
       s"no data dirs at $root@v$v")(ps => s"no dirs for partitions ${ps.mkString(",")} at $root@v$v"))
+    relationOver(spark, root, v, c, picked)
+  }
+
+  /** A read of only the dirs `rels` of version `v`, with the version's
+    * logged schema — the dir-subset read [[DataSkipping]]'s pruned
+    * reads, stats builds and stats-pruned merges take. No `rels` is an
+    * empty frame of that schema. */
+  private[graft] def readDirs(spark: SparkSession, root: String, v: Long,
+                              rels: Seq[String]): DataFrame = {
+    val c = commitOf(spark, root, v)
+    val want = rels.toSet
+    spark.baseRelationToDataFrame(
+      relationOver(spark, root, v, c, c.entries.filter(e => want(e.rel))))
+  }
+
+  private def relationOver(spark: SparkSession, root: String, v: Long, c: Commit,
+                           picked: Seq[Entry]): HadoopFsRelation =
     HadoopFsRelation(
       location = new GraftFileIndex(spark, root, v, picked.map(e => (e.rel, e.part)), c.partCol),
       partitionSchema = new StructType(),
@@ -400,7 +421,6 @@ object VersionedTable {
       bucketSpec = None,
       fileFormat = new GraftGuardedParquet,
       options = Map.empty)(spark)
-  }
 
   private def scan(spark: SparkSession, root: String, v: Long,
                    parts: Option[Set[String]] = None): DataFrame =
@@ -680,9 +700,11 @@ object VersionedTable {
     val carry = if (base < 0) Nil else entriesOf(spark, root, base)
     require(carry.forall(_.part.isDefined),
       s"appendPartitioned requires a partition-native table; $root@v$base has unscoped dirs")
-    // ONE staging job: the partitionBy write (null check, value list
-    // and emptiness all come back from the staged dir listing — no
-    // pre-write checkpoint/isEmpty/distinct jobs)
+    // ONE staging write (see stagePartitionsOrEmpty): a small batch in
+    // one task, one file per value; the value list, null/empty check and
+    // emptiness come back from the staged dir listing — no pre-write
+    // checkpoint/isEmpty/distinct jobs
+    enforceConstraints(spark, root, df)
     stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
       case None =>
         // an EMPTY append is a marker-only commit (carry + meta,
@@ -730,13 +752,16 @@ object VersionedTable {
     }
     // one read of every fragmented chain + one staging wave — rows
     // route to their partition's fresh dir by column value (the
-    // stagePartitions discipline) instead of a read+write job pair
-    // per fragmented partition; a legacy table without the #partcol
-    // marker (so the column name is unknown) takes the per-partition
-    // fold it always got
+    // stagePartitions discipline; one file per value when small)
+    // instead of a read+write job pair per fragmented partition; the
+    // scan of immutable dirs is evaluated once, by the write, so it
+    // needs no checkpoint. A legacy table without the #partcol marker
+    // (so the column name is unknown) takes the per-partition fold it
+    // always got
     c.partCol match {
       case Some(pc) =>
-        val src = scan(spark, root, base, Some(fragmented.toSet)).localCheckpoint()
+        val src = scan(spark, root, base, Some(fragmented.toSet))
+        enforceConstraints(spark, root, src)
         val (parent, staged) = stagePartitions(spark, root, src, pc, next)
         publish(spark, root, next, carried ++ staged, schema,
                 onConflictCleanup = () => f.delete(p(s"$root/$parent"), true), meta = meta)
@@ -1046,95 +1071,99 @@ object VersionedTable {
     (widen(a, b), widen(b, a))
   }
 
+  /** Stage one dir per distinct partition value of `src` under a
+    * fresh writer-unique parent for version `next`. Cleans up the
+    * parent and rethrows on any write failure. Shared by every
+    * partition-native write path so staging (encoding, layout,
+    * cleanup) cannot drift between them. */
+  private def stagePartitions(spark: SparkSession, root: String, src: DataFrame,
+                              partitionCol: String, next: Long): (String, Seq[Entry]) =
+    stagePartitionsOrEmpty(spark, root, src, partitionCol, next).getOrElse(
+      throw new IllegalArgumentException(s"no $partitionCol values to stage"))
+
+  /** Where `partitionBy` routes null AND empty-string values. */
+  private val DefaultPartitionDir = "__HIVE_DEFAULT_PARTITION__"
+
+  /** Stage `src` one dir per partition value under a fresh parent for
+    * version `next`; None when the batch is EMPTY (the parent is
+    * reclaimed — callers publish a marker-only/carry-only commit).
+    *
+    * ONE staging write, evaluating `src` exactly once: the
+    * partitionBy write, then a listing of the staged parent. Partition
+    * values come back from that listing (driver metadata) instead of a
+    * distinct() job: Spark's Hive-escaped `__graft_p=<v>` names are
+    * unescaped to the raw value (`ExternalCatalogUtils`' escaping
+    * always escapes `%`, so this round-trips every value) and renamed
+    * to `p=enc(v)`. Emptiness is
+    * "the write staged no dirs", and null or empty values show up as
+    * `__HIVE_DEFAULT_PARTITION__` — only then does a job run, to name
+    * which. The partition column is duplicated into a throwaway
+    * `__graft_p` so the data files keep the real column (readPartition
+    * reads leaf dirs directly — no Hive partition discovery recovers
+    * dir values). The renamed dirs' listings seed [[GraftFileIndex]]'s
+    * cache, so the first read of the new version lists nothing.
+    *
+    * Why one task for a small input: the partitionBy writer opens one
+    * parquet file per value PER TASK, so a batch of T tasks over V
+    * values stages up to T×V small files, and both the writer's
+    * per-file setup and every later read's per-file footer and reader
+    * setup scale with that count. When the optimizer estimates the
+    * whole input at or under AQE's advisory partition size — the size
+    * AQE would coalesce a shuffle of it down to one partition at —
+    * the write runs as one task (`coalesce(1)`, no exchange), so each
+    * touched value stages exactly one file (2,000 rows over 6 values,
+    * local[2] on a 4-core box: 244 ms median, against 248 ms for the
+    * unclustered write, which staged twice the files). A larger input
+    * is written as it comes; clustering it (a REBALANCE on the value)
+    * would add a full shuffle that no workload here measures yet. */
+  private def stagePartitionsOrEmpty(
+      spark: SparkSession, root: String, src: DataFrame,
+      partitionCol: String, next: Long): Option[(String, Seq[Entry])] = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    val f = fs(spark, root)
+    val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
+    try {
+      val tagged = src.withColumn("__graft_p", col(partitionCol).cast("string"))
+      val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+      (if (tagged.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory) tagged.coalesce(1)
+       else tagged)
+        .write.mode("errorifexists").partitionBy("__graft_p")
+        .parquet(s"$root/$parent")
+      val dirs = f.listStatus(p(s"$root/$parent"))
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__graft_p="))
+        .map(st => unescapePathName(st.getPath.getName.stripPrefix("__graft_p=")) -> st.getPath)
+        .sortBy(_._1)
+      if (dirs.exists(_._1 == DefaultPartitionDir))
+        requireRoutable(src.select(col(partitionCol).cast("string").as("v"))
+          .filter(col("v").isNull || col("v") === "").distinct().collect()
+          .map(_.getString(0)), partitionCol)
+      if (dirs.isEmpty) { // empty batch: nothing staged
+        f.delete(p(s"$root/$parent"), true)
+        return None
+      }
+      f.delete(p(s"$root/$parent/_SUCCESS"), false)
+      val staged = dirs.toSeq.map { case (v, from) =>
+        val rel = s"$parent/p=${enc(v)}"
+        require(f.rename(from, p(s"$root/$rel")), s"stage rename failed for partition value $v")
+        Entry(rel, Some(enc(v)))
+      }
+      GraftFileIndex.seedListing(spark, root, staged.map(_.rel))
+      Some((parent, staged))
+    }
+    catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
+  }
+
   /** Publish `df` as a PARTITION-NATIVE snapshot: one immutable dir
     * per distinct `partitionCol` value (the value is kept as a normal
     * data column inside the files, so readers never depend on Spark
     * partition-discovery). This is the layout [[mergePartitioned]]
     * requires; partition cardinality is assumed bounded (record_type,
     * period, tenant — the reference partitions by record_type/period,
-    * queue_for_delta.py) so the per-partition write loop is driver-side
-    * bounded, not data-sized.
+    * queue_for_delta.py), since staging renames one dir per value on
+    * the driver.
     */
-  /** Stage one dir per distinct partition value of `src` under a
-    * fresh writer-unique parent for version `next`. Cleans up the
-    * parent and rethrows on any write failure. Shared by every
-    * partition-native write path so staging (encoding, layout,
-    * cleanup) cannot drift between them. `src` must already be
-    * checkpointed and null-partition-checked by the caller. */
-  private def stagePartitions(spark: SparkSession, root: String, src: DataFrame,
-                              partitionCol: String, next: Long): (String, Seq[Entry]) =
-    stagePartitionsOrEmpty(spark, root, src, partitionCol, next).getOrElse(
-      throw new IllegalArgumentException(s"no $partitionCol values to stage"))
-
-  /** Stage `src` one dir per partition value under a fresh parent for
-    * version `next`; None when the batch is EMPTY (the parent is
-    * reclaimed — callers publish a marker-only/carry-only commit).
-    *
-    * ONE Spark job in the fast path: the partitionBy write itself.
-    * Partition values are recovered from the staged DIR LISTING
-    * (driver metadata) instead of a separate distinct() job, the
-    * null check rides the listing (`__HIVE_DEFAULT_PARTITION__` is
-    * where partitionBy routes null/empty values), and emptiness is
-    * "the write staged no dirs" — so the pre-write localCheckpoint +
-    * isEmpty + null-filter + distinct jobs this path used to launch
-    * per commit are gone (the streaming ingest loops pay this path
-    * 1-3x per micro-batch). The partition column is duplicated into a
-    * throwaway __graft_p so the data files keep the real column
-    * (readPartition reads leaf dirs directly — no Hive partition
-    * discovery recovers dir values). The listing fast path is valid
-    * only for ASCII alnum/-/_/. values, where Hive's dir escaping and
-    * our enc() are both the identity (dir name == raw value ==
-    * enc(value)); anything exotic falls back to the per-value staging
-    * wave, recomputing the distinct values from `src`. */
-  private def stagePartitionsOrEmpty(
-      spark: SparkSession, root: String, src: DataFrame,
-      partitionCol: String, next: Long): Option[(String, Seq[Entry])] = {
-    import org.apache.spark.sql.functions.col
-    enforceConstraints(spark, root, src)
-    val f = fs(spark, root)
-    def dirSafe(v: String): Boolean = v.nonEmpty && v.forall(c =>
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-      (c >= '0' && c <= '9') || c == '-' || c == '_' || c == '.')
-    val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
-    try {
-      src.withColumn("__graft_p", col(partitionCol).cast("string"))
-        .write.mode("errorifexists").partitionBy("__graft_p")
-        .parquet(s"$root/$parent")
-      f.delete(p(s"$root/$parent/_SUCCESS"), false)
-      val names = f.listStatus(p(s"$root/$parent"))
-        .map(_.getPath.getName).filter(_.startsWith("__graft_p="))
-        .map(_.stripPrefix("__graft_p=")).sorted
-      require(!names.contains("__HIVE_DEFAULT_PARTITION__"),
-        s"null $partitionCol values cannot be partition-routed; " +
-        "coalesce them to a sentinel value before the write")
-      if (names.isEmpty) { // empty batch: nothing staged
-        f.delete(p(s"$root/$parent"), true)
-        return None
-      }
-      if (names.forall(dirSafe)) {
-        Some((parent, names.toSeq.map { v =>
-          require(f.rename(p(s"$root/$parent/__graft_p=$v"),
-                           p(s"$root/$parent/p=${enc(v)}")),
-            s"stage rename failed for partition value $v")
-          Entry(s"$parent/p=${enc(v)}", Some(enc(v)))
-        }))
-      } else {
-        // exotic values: the escaped dir name does not round-trip to
-        // the raw value — take the per-value staging wave instead
-        f.delete(p(s"$root/$parent"), true)
-        val values = src.select(col(partitionCol).cast("string"))
-          .distinct().collect().map(_.getString(0)).sorted
-        Some((parent, values.toSeq.map { v =>
-          val rel = s"$parent/p=${enc(v)}"
-          src.filter(col(partitionCol).cast("string") === v)
-            .write.mode("errorifexists").parquet(s"$root/$rel")
-          Entry(rel, Some(enc(v)))
-        }))
-      }
-    }
-    catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
-  }
-
   def commitPartitioned(spark: SparkSession, root: String, df: DataFrame,
                         partitionCol: String, base: Long): Long =
     commitPartitionedCarrying(spark, root, df, partitionCol, base, carried = Nil)
@@ -1183,8 +1212,10 @@ object VersionedTable {
       base: Long, carried: Seq[(String, Option[String])]): Long = {
     val f = fs(spark, root)
     val next = base + 1
-    // ONE staging job (see stagePartitionsOrEmpty): the write itself
-    // evaluates df once — no pre-write checkpoint/isEmpty/null jobs
+    // ONE staging write (see stagePartitionsOrEmpty): a small batch in
+    // one task, one file per value, evaluating df once — no pre-write
+    // checkpoint/isEmpty/null jobs
+    enforceConstraints(spark, root, df)
     stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
       case None =>
         // a deletion can empty every touched partition — the commit is
@@ -1242,11 +1273,16 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val f = fs(spark, root)
     val tb = effectiveTieBreak(source, keys, tieBreak)
-    val src = source.localCheckpoint() // stable slices across retries
-    requireNoNullPartitions(src, partitionCol)
-    enforceConstraints(spark, root, src) // merge updates come from src
+    // ONE job materializes the (lazy) checkpoint — stable slices across
+    // retries — and returns the touched values, per-task distinct with
+    // no exchange; the null/empty check reads that list
+    val src = source.localCheckpoint(eager = false)
     val touched = src.select(col(partitionCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).sorted
+      .as(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING)
+      .collect().distinct
+    requireRoutable(touched, partitionCol)
+    enforceConstraints(spark, root, src) // merge updates come from src
     lastMergeRebased = false
     var attempt = 0
     var pinned = firstBase
@@ -1283,8 +1319,9 @@ object VersionedTable {
       val target =
         if (!baseEntries.exists(_.part.exists(touchedEnc.contains))) src.limit(0)
         else scan(spark, root, base, Some(touchedEnc))
-      val merged = graft.operators.Relational
-        .mergeUpsert(target, src, keys, tb).localCheckpoint()
+      // the staging write evaluates the merge once; a retry that must
+      // recompute builds a new one against the fresh head
+      val merged = graft.operators.Relational.mergeUpsert(target, src, keys, tb)
       val (parent, staged) = stagePartitions(spark, root, merged, partitionCol, next)
       // publish loop: on conflict, REBASE the same staged dirs if the
       // winners' commits left every touched partition untouched

@@ -993,8 +993,7 @@ class GraftSpec extends AnyFunSuite {
     val hnT = s"$root3/hnodes"
     val hv0 = VersionedTable.currentVersion(spark, hnT).get
     VersionedTable.appendPartitioned(spark, hnT, // plant the crash point
-      VersionedTable.read(spark, hnT).limit(0)
-        .withColumn("bucket", org.apache.spark.sql.functions.lit(0L)),
+      VersionedTable.read(spark, hnT).limit(0), // the table's own columns
       "bucket", hv0, txn = Some(("st16x#hier", 0L)))
     GraphIndex.ingest(spark, root3, rows.filter(col("vec_id") =!= 23L),
       rows.filter(col("vec_id") === 2L), centIds = cents,
@@ -3462,6 +3461,26 @@ class GraftSpec extends AnyFunSuite {
     assert(DataSkipping.statsBuilds <= builds + 1,
       "second merge re-scanned carried dirs for stats instead of inheriting")
     assert(snap(VersionedTable.read(spark, root))(700L) == -7L)
+  }
+
+  test("DataSkipping.mergeSkipping: a batch shaped before a column evolution merges into the evolved table") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_fmerge_evo").toString + "/t"
+    val v0 = VersionedTable.commit(spark, root, (0L until 100L).map(k => (k, k)).toDF("k", "v"), -1L)
+    // an untouched later dir carries the evolved column
+    val v1 = VersionedTable.append(spark, root,
+      (1000L until 1100L).map(k => (k, k)).toDF("k", "v").withColumn("note", lit("n")), v0)
+    // the batch lacks `note`; its [50, 51] range touches only the first dir
+    val batch = Seq((50L, -1L), (51L, -2L)).toDF("k", "v")
+    assert(DataSkipping.mergeSkipping(spark, root, batch, Seq("k"), "k") == v1 + 1)
+    assert(DataSkipping.lastMergeRewrote == 1 && DataSkipping.lastMergeCarried == 1)
+    val got = VersionedTable.read(spark, root).select("k", "v", "note")
+      .as[(Long, Long, Option[String])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got.size == 200)
+    assert(got(50L) == ((-1L, None)) && got(51L) == ((-2L, None)) && got(52L) == ((52L, None)))
+    assert(got(1000L) == ((1000L, Some("n"))))
   }
 
   test("DataSkipping: an append's stats cost is O(new dirs) — prior versions' bounds are inherited") {
@@ -6370,7 +6389,8 @@ class GraftSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_wave").toString + "/t"
     // 24 partition values: the per-value staging this replaced would
     // launch >=24 write jobs; the wave path launches a small constant
-    // (checkpoint + distinct + one partitionBy write)
+    // (the partitionBy write; values, emptiness and the null check
+    // come from the staged dir listing)
     val df = (0 until 240).map(i => (i.toLong, s"p${i % 24}", i * 1.0))
       .toDF("k", "part", "v")
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -6392,6 +6412,158 @@ class GraftSpec extends AnyFunSuite {
     assert(VersionedTable.entryPairsOf(spark, root, 0L).size == 24)
     assert(VersionedTable.readPartition(spark, root, "p3").count() == 10)
     assert(VersionedTable.read(spark, root).count() == 240)
+  }
+
+  /** Parquet files in the dirs version `v` publishes that `base` did
+    * not: what one partition-native write staged, by partition value. */
+  private def stagedFiles(root: String, v: Long, base: Long): Map[String, Int] = {
+    import graft.sources.VersionedTable
+    val old = if (base < 0) Set.empty[String] else VersionedTable.dirsOf(spark, root, base).toSet
+    VersionedTable.entryPairsOf(spark, root, v).filterNot(e => old(e._1)).map { case (rel, pv) =>
+      java.net.URLDecoder.decode(pv.get, "UTF-8") ->
+        new java.io.File(s"$root/$rel").listFiles().count(_.getName.endsWith(".parquet"))
+    }.toMap
+  }
+
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("partition staging writes ONE file per touched value, whatever the input's task count") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_1file").toString + "/t"
+    // 4 input tasks, each holding all 6 values: an unclustered
+    // partitionBy write would stage up to 24 files
+    def batch(lo: Int, n: Int) =
+      (lo until lo + n).map(i => (i.toLong, s"v${i % 6}", i * 1.0)).toDF("k", "part", "x")
+        .repartition(4)
+    val v0 = VersionedTable.appendPartitioned(spark, root, batch(0, 240), "part", -1L)
+    assert(stagedFiles(root, v0, -1L) == (0 until 6).map(i => s"v$i" -> 1).toMap)
+    val v1 = VersionedTable.appendPartitioned(spark, root, batch(240, 240), "part", v0)
+    assert(stagedFiles(root, v1, v0) == (0 until 6).map(i => s"v$i" -> 1).toMap)
+    // a merge touching 3 values restages those 3, one file each
+    val upd = (0 until 120).map(i => (i.toLong * 2, s"v${(i * 2) % 6}", -1.0)).toDF("k", "part", "x")
+      .repartition(4)
+    val v2 = VersionedTable.mergePartitioned(spark, root, upd, Seq("k"), "part")
+    assert(stagedFiles(root, v2, v1) == Seq("v0", "v2", "v4").map(_ -> 1).toMap)
+    // compaction folds the 3 still-fragmented chains, one file each
+    val v3 = VersionedTable.compactPartitioned(spark, root)
+    assert(stagedFiles(root, v3, v2) == Seq("v1", "v3", "v5").map(_ -> 1).toMap)
+    val rows = VersionedTable.read(spark, root).as[(Long, String, Double)].collect()
+    assert(rows.length == 480 && rows.map(_._1).distinct.length == 480)
+    assert(rows.filter(_._3 == -1.0).map(_._1).toSet == (0 until 120).map(_ * 2L).toSet)
+  }
+
+  test("a batch estimated above the advisory partition size stages as it comes, with no added job") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_big").toString
+    // 4 input tasks, each holding all 6 values, ~105 KB by the
+    // optimizer's estimate
+    val df = (0 until 2400).map(i => (i.toLong, s"v${i % 6}", i * 1.0)).toDF("k", "part", "x")
+      .repartition(4)
+    val small = jobsDuring(VersionedTable.commitPartitioned(spark, s"$root/a", df, "part", -1L))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "64k")
+    val big = try jobsDuring(VersionedTable.commitPartitioned(spark, s"$root/b", df, "part", -1L))
+              finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(big == small, s"$big jobs above the advisory size, $small under it: " +
+      "staging a large batch must add no exchange")
+    assert(stagedFiles(s"$root/a", 0L, -1L) == (0 until 6).map(i => s"v$i" -> 1).toMap)
+    // above it, each input task writes its own file per value
+    assert(stagedFiles(s"$root/b", 0L, -1L) == (0 until 6).map(i => s"v$i" -> 4).toMap)
+    for (t <- Seq("a", "b"))
+      assert(VersionedTable.read(spark, s"$root/$t").as[(Long, String, Double)].collect().toSet ==
+        (0 until 2400).map(i => (i.toLong, s"v${i % 6}", i * 1.0)).toSet, t)
+  }
+
+  test("partition values that need escaping stage through the one path, one file each") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_esc").toString + "/t"
+    val values = Seq("a b", "c%d", "x/y", "plain", "__HIVE_DEFAULT_PARTITION__")
+    val df = (0 until 100).map(i => (i.toLong, values(i % values.size))).toDF("id", "pv")
+      .repartition(4)
+    val v = VersionedTable.commitPartitioned(spark, root, df, "pv", -1L)
+    assert(stagedFiles(root, v, -1L) == values.map(_ -> 1).toMap)
+    values.foreach { pv =>
+      val got = VersionedTable.readPartition(spark, root, pv).as[(Long, String)].collect()
+      assert(got.map(_._1).toSet == (0 until 100).filter(i => values(i % values.size) == pv)
+        .map(_.toLong).toSet && got.forall(_._2 == pv), s"partition '$pv' read back wrong")
+    }
+    assert(VersionedTable.read(spark, root).count() == 100)
+  }
+
+  test("mergePartitioned of a small batch launches at most 4 jobs") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_mjobs").toString + "/t"
+    VersionedTable.commitPartitioned(spark, root,
+      (0 until 200).map(i => (i.toLong, s"p${i % 8}", 0.0)).toDF("k", "part", "x"), "part", -1L)
+    val batch = (0 until 40).map(i => (i.toLong * 5, s"p${(i * 5) % 8}", 1.0)).toDF("k", "part", "x")
+    // the checkpointed source + touched values (1), then the merge's
+    // window exchange and the write (2)
+    val jobs = jobsDuring(VersionedTable.mergePartitioned(spark, root, batch, Seq("k"), "part"))
+    assert(jobs <= 4, s"mergePartitioned of a 40-row batch launched $jobs jobs")
+    assert(VersionedTable.read(spark, root).filter($"x" === 1.0).count() == 40)
+  }
+
+  test("empty-string partition values are rejected by name in every partition-native write") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_vte").toString + "/t"
+    val bad = Seq((1L, "", 1.0), (2L, "x", 2.0)).toDF("k", "part", "x")
+    def rejects(write: => Long): Unit = {
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains("empty-string part values"), e.getMessage)
+    }
+    rejects(VersionedTable.commitPartitioned(spark, root, bad, "part", -1L))
+    assert(VersionedTable.currentVersion(spark, root).isEmpty)
+    rejects(VersionedTable.mergePartitioned(spark, root, bad, Seq("k"), "part"))
+    val v0 = VersionedTable.commitPartitioned(spark, root, bad.filter($"part" =!= ""), "part", -1L)
+    rejects(VersionedTable.appendPartitioned(spark, root, bad, "part", v0))
+    rejects(VersionedTable.mergePartitioned(spark, root, bad, Seq("k"), "part"))
+    assert(VersionedTable.currentVersion(spark, root).contains(v0))
+    // a null is still named as a null, not as an empty value
+    val e = intercept[IllegalArgumentException](VersionedTable.appendPartitioned(spark, root,
+      Seq((3L, None: Option[String], 3.0)).toDF("k", "part", "x"), "part", v0))
+    assert(e.getMessage.contains("null part values"), e.getMessage)
+    // and nothing staged is left behind by the rejected writes
+    assert(new java.io.File(s"$root/data").listFiles().length == 1)
+  }
+
+  test("DataSkipping's dir-subset reads are log-fed: the version's schema, no listing or footer-merge job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_dsk_log").toString + "/t"
+    def wave(w: Int) = (0 until 4).map(p => ((w * 4 + p).toLong, s"p$p")).toDF("id", "part")
+    // 44 dirs, above the 32-dir parallel-listing threshold; the last
+    // wave adds a column
+    var v = VersionedTable.commitPartitioned(spark, root, wave(0), "part", -1L)
+    (1 until 10).foreach(w => v = VersionedTable.appendPartitioned(spark, root, wave(w), "part", v))
+    v = VersionedTable.appendPartitioned(spark, root, wave(10).withColumn("note", lit("n")), "part", v)
+    // staging seeded every dir's listing and the schema is logged: the
+    // stats build is its own aggregation (map stage + result) alone
+    val jobs = jobsDuring(DataSkipping.ensureStats(spark, root, v, Seq("id")))
+    assert(jobs <= 2, s"stats build over 44 fresh dirs launched $jobs jobs")
+    // a pruned read keeping only pre-evolution dirs serves the version's
+    // schema, the evolved column as null
+    val got = DataSkipping.readWhere(spark, root, "id", 0, 3)
+    assert(got.schema == VersionedTable.read(spark, root).schema)
+    assert(got.as[(Long, String, String)].collect().toSet ==
+      (0 until 4).map(p => (p.toLong, s"p$p", null: String)).toSet)
+    assert(DataSkipping.readWhere(spark, root, "id", 100, 200).schema == got.schema)
   }
 
   test("VecIndex: delete rewrites only the victim's cell, is idempotent, and equals an index never holding the victim") {
