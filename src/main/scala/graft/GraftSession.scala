@@ -4,12 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults tuned for the test harness (local[32], 128 GiB
-  * box): shuffle partitions sized to cores rather than the 200
-  * default, AQE on so skewed shuffles re-plan at runtime, UTC so
-  * timestamp semantics match the DuckDB oracle. On a real cluster the
-  * same builder is used with `master` unset and shuffle partitions
-  * sized to ~2-3x total cores.
+  * Local-mode defaults: shuffle partitions sized to the `cores` the
+  * caller runs on rather than the 200 default, AQE on so skewed
+  * shuffles re-plan at runtime, UTC so timestamp semantics match the
+  * DuckDB oracle. On a real cluster the same builder is used with
+  * `master` unset and shuffle partitions sized to ~2-3x total cores.
+  *
+  * `file://` is [[graft.sources.GraftLocalFileSystem]]: without the
+  * Hadoop native library the stock local FS forks a `chmod` for every
+  * file it creates and every dir it makes; with it, graft's FS sets
+  * the same mode bits. HDFS and object stores keep their own
+  * filesystems.
   */
 object GraftSession {
   def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder =
@@ -27,6 +32,7 @@ object GraftSession {
       // effect (Tables.events documents the micros conversion).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
 
   def local(appName: String = "graft", cores: Int = 32): SparkSession = {
     val s = builder(appName, cores.toString).master(s"local[$cores]").getOrCreate()

@@ -129,7 +129,10 @@ object VersionedTable {
     * reads/writes through the RAW filesystem — no sidecar can ever
     * exist, so none can ever poison. HDFS and object stores are not
     * ChecksumFileSystems; there this is the plain FS. Data-file IO
-    * (parquet snapshots) keeps the checksummed FS untouched. */
+    * (parquet snapshots) keeps the checksummed FS untouched. In a
+    * graft session the local FS is
+    * [[GraftLocalFileSystem]], so the raw FS unwrapped here is
+    * [[GraftRawLocalFileSystem]]. */
   private def logFs(spark: SparkSession, root: String): org.apache.hadoop.fs.FileSystem =
     fs(spark, root) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
@@ -941,9 +944,15 @@ object VersionedTable {
   }
 
   /** Best-effort checkpoint at version `v`: full version->entries
-    * state of every commit currently in the log, then repoint
-    * `_last_checkpoint`. Failure here never fails the commit — the
-    * fallback listing path stays correct. */
+    * state of every commit currently in the log, published through
+    * [[atomicNoReplace]], then `_last_checkpoint` repointed at it.
+    * The pointer moves whenever `v`'s checkpoint exists afterwards,
+    * also when an earlier call published it and crashed before the
+    * pointer write: a checkpoint is written whole before its name
+    * exists, so any file under that name holds `v`'s state. A pointer
+    * left behind would let [[vacuum]] expire the commits above it and
+    * then resolve the head to a deleted version. Failure here never
+    * fails the commit — the fallback listing path stays correct. */
   private def writeCheckpoint(spark: SparkSession, root: String, v: Long): Unit =
     try {
       val f = logFs(spark, root)
@@ -956,13 +965,17 @@ object VersionedTable {
         prior.getOrElse(ver, entriesOf(spark, root, ver)).map(e => s"$ver\t${e.line}")
       }
       val cpTmp = p(s"$root/_log/.tmp-cp-${java.util.UUID.randomUUID()}")
-      val out = f.create(cpTmp, false)
-      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(cpTmp.toUri,
-        spark.sparkContext.hadoopConfiguration)
-        .rename(cpTmp, p(s"$root/_log/${verName(v)}.checkpoint"))
-      val ptr = f.create(p(s"$root/_log/_last_checkpoint"), /* overwrite = */ true)
-      try ptr.write(v.toString.getBytes("UTF-8")) finally ptr.close()
+      val cp = p(s"$root/_log/${verName(v)}.checkpoint")
+      try {
+        val out = f.create(cpTmp, false)
+        try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+        try atomicNoReplace(spark, f, cpTmp, cp)
+        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+      } finally f.delete(cpTmp, false)
+      if (f.exists(cp)) {
+        val ptr = f.create(p(s"$root/_log/_last_checkpoint"), /* overwrite = */ true)
+        try ptr.write(v.toString.getBytes("UTF-8")) finally ptr.close()
+      }
     } catch { case _: Exception => () }
 
   /** A deterministic winner order even when the caller passes no

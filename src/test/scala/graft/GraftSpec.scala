@@ -3841,6 +3841,31 @@ class GraftSpec extends AnyFunSuite {
     assert(VersionedTable.currentVersion(spark, root).contains(16L))
   }
 
+  test("VersionedTable: a checkpoint left without its pointer is adopted, so vacuum never resolves the head to a deleted version") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_vtcp").toString + "/t"
+    var base = -1L
+    (0 to 20).foreach { i =>
+      base = VersionedTable.append(spark, root, Seq(i.toLong -> i.toDouble).toDF("suppkey", "qty"), base)
+    }
+    val ptr = java.nio.file.Paths.get(s"$root/_log/_last_checkpoint")
+    def pointer = new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim
+    assert(pointer == "20")
+    // a crash between publishing v20's checkpoint and writing the
+    // pointer: the file exists, the pointer still names v10
+    java.nio.file.Files.write(ptr, "10".getBytes("UTF-8"))
+    VersionedTable.vacuum(spark, root, keepLast = 1)
+    assert(VersionedTable.currentVersion(spark, root).contains(20L))
+    assert(VersionedTable.read(spark, root).count() == 21)
+    assert(pointer == "20")
+    val logNames = new java.io.File(s"$root/_log").list().toSeq
+    assert(!logNames.exists(_.startsWith(".tmp-cp-")), logNames)
+    // the next writer commits v21, not over the head
+    assert(VersionedTable.append(spark, root, Seq(21L -> 21.0).toDF("suppkey", "qty"), 20L) == 21L)
+    assert(VersionedTable.read(spark, root).count() == 22)
+  }
+
   test("CDC consumer: aggregate maintained from the change feed ALONE matches full recompute") {
     import spark.implicits._
     import graft.sources.{MaterializedAgg, VersionedTable}
