@@ -197,8 +197,8 @@ object BandIndex {
           val slice = VersionedTable.readPartitions(spark, shinglesRoot(root), parts, Some(sv))
           val rewrite = slice.join(retired, Seq("doc_id"), "left_anti")
           val touched = parts.map(VersionedTable.encodePartition).toSet
-          val carried = VersionedTable.entryPairsOf(spark, shinglesRoot(root), sv)
-            .filterNot { case (_, pv) => pv.exists(touched.contains) }
+          val carried = VersionedTable.entriesOf(spark, shinglesRoot(root), sv)
+            .filterNot(_.part.exists(touched.contains))
           VersionedTable.commitPartitionedCarrying(
             spark, shinglesRoot(root), rewrite, "pb", sv, carried)
         } catch { case _: java.io.FileNotFoundException => () } // no dirs touched

@@ -153,7 +153,7 @@ object GraphIndex {
     * fetches intersect against this ONE commit-file read per probe. */
   private def presentBuckets(spark: SparkSession, root: String,
                              v: Long): Set[String] =
-    VersionedTable.entryPairsOf(spark, root, v).flatMap(_._2).toSet
+    VersionedTable.entriesOf(spark, root, v).flatMap(_.part).toSet
 
   /** Build (or REBUILD): one s20 kNN join (the single cell-key
     * shuffle) folded into per-node adjacency lists and joined with the

@@ -111,9 +111,16 @@ object LexIndex {
     * the victims' home buckets — never the whole doclen table. */
   private def docBucketCol = pmod(hash(col("doc_id")), lit(NumBuckets)).cast("string")
 
-  private def hfs(spark: SparkSession, root: String) =
+  /** The filesystem the manifest is read and written through: the RAW
+    * one under a checksummed local FS, as `VersionedTable`'s `_log`
+    * markers are, so no `.crc` sidecar exists to go stale when the
+    * manifest is replaced. */
+  private def manifestFs(spark: SparkSession, root: String): org.apache.hadoop.fs.FileSystem =
     org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+      new java.net.URI(root), spark.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
 
   /** The index's atomic consistency point: the three tables' pinned
     * versions + the corpus scalars + the streaming sinks' idempotence
@@ -130,7 +137,7 @@ object LexIndex {
       txn: Map[String, Long])
 
   private[graft] def readManifest(spark: SparkSession, root: String): Manifest = {
-    val f = hfs(spark, root)
+    val f = manifestFs(spark, root)
     val in = f.open(new org.apache.hadoop.fs.Path(metaPath(root)))
     val kv = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       .split("\n").map(_.trim).filter(_.contains("="))
@@ -144,17 +151,21 @@ object LexIndex {
           v.toLong })
   }
 
-  /** Atomic manifest flip: write a temp file, rename over the live
-    * path with OVERWRITE (atomic on HDFS and POSIX — a concurrent
-    * [[readManifest]] sees the old file or the new one, never a
-    * half-written mix). */
+  /** Atomic manifest flip: write a temp file, then replace the live
+    * path with it in one step (a concurrent [[readManifest]] sees the
+    * old file or the new one, never a half-written mix). On file:// the
+    * replace is `Files.move(ATOMIC_MOVE)` — one rename(2), no process
+    * forked (`FileContext`'s local rename forks `readlink` without the
+    * Hadoop native library); elsewhere `FileContext.rename` with
+    * OVERWRITE, atomic on HDFS. A `.crc` sidecar an older checksummed
+    * write left beside the manifest is removed after the flip. */
   private def writeManifest(spark: SparkSession, root: String,
                             m: Manifest): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(metaPath(root))
     val tmp = new org.apache.hadoop.fs.Path(
       metaPath(root) + ".tmp-" + java.util.UUID.randomUUID())
-    val f = hfs(spark, root)
+    val f = manifestFs(spark, root)
     val out = f.create(tmp, true)
     val txnLines = m.txn.toSeq.sortBy(_._1).map { case (a, b) =>
       s"txnapp.${java.net.URLEncoder.encode(a, "UTF-8")}=$b\n" }.mkString
@@ -164,11 +175,14 @@ object LexIndex {
        s"n_doclens=${m.nDoclens}\ntotal_tokens=${m.totalTokens}\n" +
        txnLines).getBytes("UTF-8"))
     finally out.close()
-    val fc = try org.apache.hadoop.fs.FileContext.getFileContext(
-        new java.net.URI(root), conf)
-      catch { case _: Exception =>
-        org.apache.hadoop.fs.FileContext.getFileContext(conf) }
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val target = f.makeQualified(dst).toUri
+    if (target.getScheme == "file")
+      java.nio.file.Files.move(java.nio.file.Paths.get(f.makeQualified(tmp).toUri),
+        java.nio.file.Paths.get(target), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    else
+      org.apache.hadoop.fs.FileContext.getFileContext(target, conf)
+        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    f.delete(new org.apache.hadoop.fs.Path(dst.getParent, s".${dst.getName}.crc"), false)
   }
 
   /** Build (or rebuild) the index from a corpus: one tokenize pass
@@ -456,8 +470,8 @@ object LexIndex {
     val rewrite = slice.filter(col("bucket").isin(hitBuckets.toSeq: _*))
       .join(presentDocs, Seq("doc_id"), "left_anti")
     val hitEnc = hitBuckets.map(VersionedTable.encodePartition)
-    val carried = VersionedTable.entryPairsOf(spark, postRoot(root), pv)
-      .filterNot { case (_, p) => p.exists(hitEnc.contains) }
+    val carried = VersionedTable.entriesOf(spark, postRoot(root), pv)
+      .filterNot(_.part.exists(hitEnc.contains))
     val pHead = VersionedTable.currentVersion(spark, postRoot(root)).getOrElse(pv)
     val newPv = VersionedTable.commitPartitionedCarrying(
       spark, postRoot(root), rewrite, "bucket", pHead, carried)
@@ -479,8 +493,8 @@ object LexIndex {
         .filter(col("df") > 0)
         .withColumn("bucket", bucketCol)
       val decEnc = decBuckets.map(VersionedTable.encodePartition).toSet
-      val sCarried = VersionedTable.entryPairsOf(spark, statsRoot(root), sv)
-        .filterNot { case (_, p) => p.exists(decEnc.contains) }
+      val sCarried = VersionedTable.entriesOf(spark, statsRoot(root), sv)
+        .filterNot(_.part.exists(decEnc.contains))
       val sHead = VersionedTable.currentVersion(spark, statsRoot(root)).getOrElse(sv)
       VersionedTable.commitPartitionedCarrying(
         spark, statsRoot(root), newStats, "bucket", sHead, sCarried)
@@ -494,8 +508,8 @@ object LexIndex {
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("t")).head
     val dRewrite = dslice.join(presentDocs, Seq("doc_id"), "left_anti")
     val dEnc = dBuckets.map(VersionedTable.encodePartition).toSet
-    val dCarried = VersionedTable.entryPairsOf(spark, dlRoot(root), dv)
-      .filterNot { case (_, p) => p.exists(dEnc.contains) }
+    val dCarried = VersionedTable.entriesOf(spark, dlRoot(root), dv)
+      .filterNot(_.part.exists(dEnc.contains))
     val dHead = VersionedTable.currentVersion(spark, dlRoot(root)).getOrElse(dv)
     val newDv = VersionedTable.commitPartitionedCarrying(
       spark, dlRoot(root), dRewrite, "dbucket", dHead, dCarried)
@@ -579,7 +593,7 @@ object LexIndex {
     // list carried byte-for-byte (never the raw head's — a crashed
     // prior attempt's orphan dirs must not resurrect here)
     val postingsF = scala.concurrent.Future {
-      val pCarried = VersionedTable.entryPairsOf(spark, postRoot(root), pv)
+      val pCarried = VersionedTable.entriesOf(spark, postRoot(root), pv)
       val pHead = VersionedTable.currentVersion(spark, postRoot(root)).getOrElse(pv)
       VersionedTable.commitPartitionedCarrying(spark, postRoot(root),
         ntfp.join(ndl, Seq("doc_id"))
@@ -604,8 +618,8 @@ object LexIndex {
             (coalesce(col("df"), lit(0L)) + coalesce(col("dfi"), lit(0L))).as("df"))
           .withColumn("bucket", bucketCol)
         val hitEnc = hitBuckets.map(VersionedTable.encodePartition).toSet
-        val carried = VersionedTable.entryPairsOf(spark, statsRoot(root), sv)
-          .filterNot { case (_, p) => p.exists(hitEnc.contains) }
+        val carried = VersionedTable.entriesOf(spark, statsRoot(root), sv)
+          .filterNot(_.part.exists(hitEnc.contains))
         val sHead = VersionedTable.currentVersion(spark, statsRoot(root)).getOrElse(sv)
         VersionedTable.commitPartitionedCarrying(
           spark, statsRoot(root), merged, "bucket", sHead, carried)
@@ -613,7 +627,7 @@ object LexIndex {
     }
     val doclensF = scala.concurrent.Future {
       val dv = man.doclensV
-      val dCarried = VersionedTable.entryPairsOf(spark, dlRoot(root), dv)
+      val dCarried = VersionedTable.entriesOf(spark, dlRoot(root), dv)
       val dHead = VersionedTable.currentVersion(spark, dlRoot(root)).getOrElse(dv)
       VersionedTable.commitPartitionedCarrying(spark, dlRoot(root),
         ndl.withColumn("dbucket", docBucketCol), "dbucket", dHead, dCarried)

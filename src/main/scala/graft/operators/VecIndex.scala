@@ -257,8 +257,8 @@ object VecIndex {
       .filter(col("cell").isin(hitCells.toSeq: _*))
       .join(homed.select(col("vec_id")), Seq("vec_id"), "left_anti")
     val hitEnc = hitCells.map(VersionedTable.encodePartition)
-    val carried = VersionedTable.entryPairsOf(spark, vecsRoot(root), vv)
-      .filterNot { case (_, pv) => pv.exists(hitEnc.contains) }
+    val carried = VersionedTable.entriesOf(spark, vecsRoot(root), vv)
+      .filterNot(_.part.exists(hitEnc.contains))
     val next = VersionedTable.commitPartitionedCarrying(
       spark, vecsRoot(root), rewrite, "cell", vv, carried)
     val (built, appended, deleted) = readMeta(spark, root).getOrElse((0L, 0L, 0L))

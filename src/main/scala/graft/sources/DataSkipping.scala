@@ -485,8 +485,8 @@ object DataSkipping {
             graft.operators.Relational.mergeUpsert(src.limit(0), src, keys, tb),
             base)
         val touched = prunedDirs(spark, root, statKey, lo, hi, Some(base)).toSet
-        val carried = VersionedTable.entryPairsOf(spark, root, base)
-          .filterNot(e => touched.contains(e._1))
+        val carried = VersionedTable.entriesOf(spark, root, base)
+          .filterNot(e => touched.contains(e.rel))
         lastMergeRewrote = touched.size
         lastMergeCarried = carried.size
         val before =
@@ -637,20 +637,26 @@ object DataSkipping {
     // on the driver — the version's logged schema cannot say which
     // dirs predate the column, and a schema-inferring read per dir
     // would launch a job each (measured 12 extra jobs on a 12-dir
-    // backfill, exactly the per-dir pattern this method removes)
+    // backfill, exactly the per-dir pattern this method removes). The
+    // footer is the dir's first LOGGED file, so a stray or truncated
+    // file in the dir cannot fail the build; a dir logged with no
+    // files holds no rows and gets the empty filter; only a dir logged
+    // before commits listed files is listed
     val conf = spark.sparkContext.hadoopConfiguration
+    val logged = VersionedTable.entriesOf(spark, root, version).map(e => e.rel -> e.files).toMap
+    def footerHas(path: org.apache.hadoop.fs.Path): Boolean = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+      try r.getFileMetaData.getSchema.getFields.asScala.exists(_.getName == column)
+      finally r.close()
+    }
     def dirHasColumn(rel: String): Boolean = {
       val dir = new org.apache.hadoop.fs.Path(s"$root/$rel")
-      val f = dir.getFileSystem(conf)
-      val part = f.listStatus(dir)
-        .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      part.exists { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFileMetaData.getSchema.getFields.asScala
-          .exists(_.getName == column)
-        finally r.close()
+      logged.get(rel).flatten match {
+        case Some(files) => files.headOption.forall(f => footerHas(new org.apache.hadoop.fs.Path(dir, f._1)))
+        case None => dir.getFileSystem(conf).listStatus(dir)
+          .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+          .exists(st => footerHas(st.getPath))
       }
     }
     val readable = rels.filter(dirHasColumn)
@@ -800,10 +806,10 @@ object DataSkipping {
                      c1: String, c2: String, nDirs: Int): Long = {
     val base = VersionedTable.currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val entries = VersionedTable.entryPairsOf(spark, root, base)
-    val loose = entries.filter(_._2.isEmpty).map(_._1)
+    val entries = VersionedTable.entriesOf(spark, root, base)
+    val loose = entries.filter(_.part.isEmpty).map(_.rel)
     if (loose.isEmpty) return base
-    val carried = entries.filter(_._2.isDefined)
+    val carried = entries.filter(_.part.isDefined)
     val delta = VersionedTable.readDirs(spark, root, base, loose)
     val keyed = zKeyed(delta, c1, c2, nDirs,
       pid => concat(lit(s"g$base-"), pid.cast("string")))

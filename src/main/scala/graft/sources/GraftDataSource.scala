@@ -238,18 +238,19 @@ object GraftDataSource {
         "identity the change feed diffs on"))
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** The dirs the commits in (startV, endV] added — one micro-batch
+  /** The entries (dirs with their logged files) the commits in
+    * (startV, endV] added — one micro-batch
     * of the version-offset streams. A commit that drops prior entries
     * (merge/compact/restore) fails the stream, or with
     * `skipChangeCommits` is skipped whole: its adds re-package rows
     * already delivered. */
   private[sources] def addedDirs(spark: SparkSession, root: String, startV: Long,
-                                 endV: Long, skipChangeCommits: Boolean): Seq[String] =
+                                 endV: Long, skipChangeCommits: Boolean): Seq[VersionedTable.Entry] =
     (math.max(0L, startV + 1L) to endV).flatMap { v =>
       val prev = if (v == 0) Set.empty[String] else VersionedTable.dirsOf(spark, root, v - 1).toSet
-      val cur = VersionedTable.dirsOf(spark, root, v)
-      val removed = prev -- cur
-      if (removed.isEmpty) cur.filterNot(prev)
+      val cur = VersionedTable.entriesOf(spark, root, v)
+      val removed = prev -- cur.map(_.rel)
+      if (removed.isEmpty) cur.filterNot(e => prev(e.rel))
       else if (skipChangeCommits) Nil
       else throw new IllegalStateException(
         s"graft stream over $root: version $v rewrites or removes " +
@@ -372,7 +373,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
     val adds = GraftDataSource.addedDirs(spark, root, startV, endV, skipChangeCommits)
     if (adds.isEmpty) SqlShim.emptyStreamingFrame(spark, schema)
     else {
-      val index = new GraftFileIndex(spark, root, endV, adds.map((_, None)), None)
+      val index = new GraftFileIndex(spark, root, endV, adds, None)
       SqlShim.streamingFrame(spark, HadoopFsRelation(
         location = index,
         partitionSchema = new StructType(),

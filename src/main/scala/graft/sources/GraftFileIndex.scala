@@ -38,31 +38,51 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Snapshot semantics: the index is fed from ONE read of the commit
   * text ([[VersionedTable.relation]] passes the version's entries and
-  * `#partcol`), and a committed dir is immutable, so each dir's file
-  * listing is taken once, when a plan first needs files, and cached
-  * per dir across indexes and versions; `refresh()` re-lists. Two
-  * indexes over the same (root, version, dirs) are EQUAL, so plans
-  * reading one version twice keep exchange reuse and cache hits.
+  * `#partcol`). Each entry names its dir's files with their sizes, so
+  * the index builds its `FileStatus`es from the log and lists nothing;
+  * a file the log does not name — a failed task attempt's leftover —
+  * is never read. A dir committed before commits listed files is
+  * listed instead: a committed dir is immutable, so that listing is
+  * taken once, when a plan first needs files, and cached per dir across
+  * indexes and versions; `refresh()` re-lists. Two indexes over the
+  * same (root, version, dirs) are EQUAL, so plans reading one version
+  * twice keep exchange reuse and cache hits.
   */
 final class GraftFileIndex(spark: SparkSession, private val root: String,
                            val version: Long,
-                           entries: Seq[(String, Option[String])],
+                           entries: Seq[VersionedTable.Entry],
                            partCol: Option[String])
   extends FileIndex {
 
-  private val rels: Seq[String] = entries.map(_._1)
+  private val rels: Seq[String] = entries.map(_.rel)
 
   // partition-native pruning: entry annotations are EXACT (a dir holds
   // one partition value), so a predicate on the partition column
   // prunes without any stats at all; the column name comes from the
   // commit's #partcol marker
   private val partByRel: Map[String, String] = entries.collect {
-    case (r, Some(pv)) => r -> java.net.URLDecoder.decode(pv, "UTF-8")
+    case VersionedTable.Entry(r, Some(pv), _) => r -> java.net.URLDecoder.decode(pv, "UTF-8")
   }.toMap
 
   private var listed: Map[String, Array[FileStatus]] = _
   private def filesByRel: Map[String, Array[FileStatus]] = synchronized {
-    if (listed == null) listed = GraftFileIndex.cachedListing(spark, root, rels)
+    if (listed == null) {
+      val (logged, legacy) = entries.partition(_.files.isDefined)
+      val fromLog =
+        if (logged.isEmpty) Map.empty[String, Array[FileStatus]]
+        else {
+          val f = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+          val base = f.makeQualified(new Path(root))
+          val block = f.getDefaultBlockSize(base)
+          logged.map { e =>
+            e.rel -> e.files.get.map { case (name, len) =>
+              new FileStatus(len, false, 1, block, 0L, new Path(base, s"${e.rel}/$name"))
+            }.toArray
+          }.toMap
+        }
+      listed = fromLog ++
+        (if (legacy.isEmpty) Nil else GraftFileIndex.cachedListing(spark, root, legacy.map(_.rel)))
+    }
     listed
   }
 
@@ -305,7 +325,8 @@ object GraftFileIndex {
   @volatile var lastListingCached: Boolean = false
 
   // ── dir listing cache ─────────────────────────────────────────────
-  // A committed data dir is IMMUTABLE, so its file listing is cached
+  // Only dirs committed before commits listed files are listed. A
+  // committed data dir is IMMUTABLE, so its file listing is cached
   // per (root, dir): repeated reads of one version, a partition read
   // after a full read, and a new version sharing its predecessor's
   // dirs all skip the filesystem (Delta's snapshot cache, at dir
@@ -336,20 +357,6 @@ object GraftFileIndex {
 
   private[sources] def dropCached(root: String, rels: Seq[String]): Unit =
     listingCache.synchronized { rels.foreach(r => listingCache.remove((root, r))) }
-
-  /** Cache the listings of dirs a writer has just staged (a driver
-    * `listStatus` each), so the first read of the version that
-    * publishes them lists nothing. Not one recursive listing of the
-    * staged parent: Hadoop's `listFiles` builds a `LocatedFileStatus`
-    * per entry, and on the local FS without the native library each
-    * one forks a shell to read permissions. A dir whose publish then
-    * loses is deleted, never read, and ages out of the LRU. */
-  private[sources] def seedListing(spark: SparkSession, root: String,
-                                   rels: Seq[String]): Unit = {
-    val f = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val fresh = rels.map(r => r -> f.listStatus(new Path(s"$root/$r")).filter(isDataFile))
-    listingCache.synchronized { fresh.foreach { case (r, fs) => listingCache.put((root, r), fs) } }
-  }
 
   /** A data dir's readable files: non-empty parquet files, no `_`/`.`
     * metadata. */

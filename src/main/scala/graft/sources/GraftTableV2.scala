@@ -293,7 +293,7 @@ private[sources] final class GraftMicroBatchStream(
     if (adds.isEmpty) Array.empty
     else {
       val idx = new GraftPartitioningAwareIndex(spark,
-        new GraftFileIndex(spark, root, endV, adds.map((_, None)), None))
+        new GraftFileIndex(spark, root, endV, adds, None))
       template.copy(fileIndex = idx).toBatch.planInputPartitions()
     }
   }

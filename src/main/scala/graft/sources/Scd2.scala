@@ -173,15 +173,15 @@ object Scd2 {
     if (base.isEmpty)
       return VersionedTable.commitPartitioned(
         spark, root, initFrame(src, ets), partitionCol, -1L)
-    val entries = VersionedTable.entryPairsOf(spark, root, base.get)
-    require(entries.forall(_._2.isDefined),
+    val entries = VersionedTable.entriesOf(spark, root, base.get)
+    require(entries.forall(_.part.isDefined),
       s"mergeScd2Partitioned requires a partition-native table; " +
       s"$root@v${base.get} has unscoped dirs")
     val touched = src.select(col(partitionCol).cast("string"))
       .distinct().collect().map(_.getString(0)).sorted.toSeq
     val touchedEnc = touched.map(VersionedTable.encodePartition).toSet
     val existingTouched = touched.filter(t =>
-      entries.exists(_._2.contains(VersionedTable.encodePartition(t))))
+      entries.exists(_.part.contains(VersionedTable.encodePartition(t))))
     // the snapshot the merge sees = ONLY the touched partitions' dirs,
     // in one scan; an all-new-partition batch sees an empty (typed)
     // snapshot and every row inserts
@@ -192,7 +192,7 @@ object Scd2 {
     scd2Result(snap, src, keys, ets, effTs) match {
       case None => base.get
       case Some(result) =>
-        val carried = entries.filterNot(_._2.exists(touchedEnc.contains))
+        val carried = entries.filterNot(_.part.exists(touchedEnc.contains))
         VersionedTable.commitPartitionedCarrying(
           spark, root, result, partitionCol, base.get, carried)
     }

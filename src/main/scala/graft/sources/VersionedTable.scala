@@ -14,20 +14,27 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Layout:
   * {{{
   *   <root>/_log/v00000003.commit      // one file per version; content =
-  *                                     // the data dirs it publishes, then
-  *                                     // meta lines (#partcol, #txn, and
+  *                                     // one line per data dir it reads:
+  *                                     // dir<TAB>partValue<TAB>files, files
+  *                                     // = name:bytes,... ("-" for none);
+  *                                     // then meta lines (#partcol, #txn,
   *                                     // #schema<TAB><StructType JSON>)
   *   <root>/_log/v00000009.checkpoint  // full log state every N commits
   *   <root>/_log/_last_checkpoint      // pointer to the newest checkpoint
-  *   <root>/data/v00000003-<uuid>/     // immutable parquet snapshot
+  *   <root>/data/v00000003-<uuid>/     // immutable parquet snapshot:
+  *     part-<task>-<attempt>.parquet   //   unscoped, or one p=<enc(v)>/
+  *                                     //   dir per partition value
   * }}}
   *
   * Protocol (optimistic concurrency, the same shape Delta's log
   * uses):
   *  1. read the current version `b` (max committed log entry);
   *  2. stage the new snapshot under a WRITER-UNIQUE data dir — two
-  *     racing writers can never collide on staging paths;
-  *  3. write the commit CONTENT (the dir list) to a writer-unique temp
+  *     racing writers can never collide on staging paths. Each task
+  *     writes its files straight into that dir and reports them
+  *     ([[StagingWriter]]): no output committer, no rename, no listing;
+  *  3. write the commit CONTENT (the dir list with each dir's files)
+  *     to a writer-unique temp
   *     file, then publish by renaming it to `_log/v{b+1}.commit` with
   *     rename-no-replace — the lose-or-win point. Because the content
   *     is complete BEFORE the name exists, no reader can ever observe
@@ -59,9 +66,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * historical version stays readable ([[readAsOf]] — time travel)
   * until [[vacuum]] reclaims it.
   *
-  * A commit file lists the data dirs a version reads (one per line,
-  * optionally annotated `dir<TAB>partitionValue` for partition-scoped
-  * dirs): [[commit]]/[[merge]] publish a single full snapshot;
+  * A commit file lists the data dirs a version reads, one per line:
+  * `dir<TAB>partitionValue<TAB>files` (the partition value empty for
+  * an unscoped dir). The files field is what a read opens — a reader
+  * lists nothing, and a file the log does not name (a failed task
+  * attempt's leftover) is never read. A line written before commits
+  * listed files is `dir` or `dir<TAB>partitionValue`, and readers list
+  * that dir. [[commit]]/[[merge]] publish a single full snapshot;
   * [[append]] adds ONLY the new rows' dir to the predecessor's list —
   * the add-file action that makes appends O(delta) — and
   * [[mergePartitioned]] rewrites ONLY the partition dirs the source
@@ -80,8 +91,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * conflict fails the write instead of every later read (Delta keeps
   * the schema in its log the same way). Every read is then one
   * relation over [[GraftFileIndex]] built from the commit text alone
-  * ([[relation]]): no footer-merge job, no parallel listing of dirs
-  * already listed. A commit written before the schema line existed
+  * ([[relation]]): no footer-merge job and, for dirs whose files the
+  * log names, no listing. A commit written before the schema line existed
   * gets its schema inferred from footers ([[schemaOf]]); the table's
   * next write logs it.
   *
@@ -143,15 +154,33 @@ object VersionedTable {
 
   private def verName(v: Long) = f"v$v%08d"
 
-  /** One published data dir: its root-relative path, plus the
-    * partition value it holds when the dir is partition-scoped. */
-  private final case class Entry(rel: String, part: Option[String]) {
-    def line: String = part.fold(rel)(pv => s"$rel\t$pv")
+  /** One published data dir: its root-relative path, the partition
+    * value it holds when the dir is partition-scoped, and its parquet
+    * files with their byte sizes. `files` is None only for a dir
+    * committed before commits listed files; readers list such a dir. */
+  private[graft] final case class Entry(rel: String, part: Option[String],
+                                        files: Option[Seq[StagingWriter.File]] = None) {
+    def line: String = files.fold(part.fold(rel)(pv => s"$rel\t$pv")) { fs =>
+      s"$rel\t${part.getOrElse("")}\t" +
+        (if (fs.isEmpty) NoFiles else fs.map { case (n, len) => s"$n:$len" }.mkString(","))
+    }
   }
+
+  /** The file field of a dir that staged no rows (a line's trailing
+    * empty field would not survive the parse). */
+  private val NoFiles = "-"
+
   private def parseEntry(line: String): Entry = line.split("\t") match {
     case Array(rel)     => Entry(rel, None)
     case Array(rel, pv) => Entry(rel, Some(pv))
-    // partition values are URL-encoded (no raw tabs), so 3+ fields can
+    case Array(rel, pv, fs) =>
+      Entry(rel, Some(pv).filter(_.nonEmpty), Some(
+        if (fs == NoFiles) Nil
+        else fs.split(",").toSeq.map { f =>
+          val i = f.lastIndexOf(':')
+          (f.substring(0, i), f.substring(i + 1).toLong)
+        }))
+    // partition values are URL-encoded (no raw tabs), so 4+ fields can
     // only mean a future format extension — fail loudly rather than
     // silently dropping fields through a checkpoint round-trip
     case _ => throw new IllegalStateException(s"malformed commit entry: $line")
@@ -258,15 +287,8 @@ object VersionedTable {
   private[graft] def partitionNative(spark: SparkSession, root: String, v: Long): Boolean =
     entriesOf(spark, root, v).forall(_.part.isDefined)
 
-  /** A version's entries as (relPath, encodedPartitionValue) pairs —
-    * the read-only view partition-aware maintenance passes (delta
-    * recluster, partition-scoped SCD2) build their carry lists from. */
-  private[graft] def entryPairsOf(spark: SparkSession, root: String,
-                                  v: Long): Seq[(String, Option[String])] =
-    entriesOf(spark, root, v).map(e => (e.rel, e.part))
-
   /** Encoded form of a partition value, as it appears in commit
-    * entries and [[entryPairsOf]] — for callers matching raw values
+    * entries and [[entriesOf]] — for callers matching raw values
     * against entry pairs. */
   private[graft] def encodePartition(v: String): String = enc(v)
 
@@ -298,11 +320,12 @@ object VersionedTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The entries a version's commit file publishes. Lines starting
+  /** The entries a version's commit file publishes — what a write
+    * carries forward (file lists included). Lines starting
     * with `#` are commit METADATA (e.g. the `#txn` idempotence marker
     * the streaming sink writes), not data entries — skipped here, and
     * never copied into checkpoints or carried entry lists. */
-  private def entriesOf(spark: SparkSession, root: String, v: Long): Seq[Entry] =
+  private[graft] def entriesOf(spark: SparkSession, root: String, v: Long): Seq[Entry] =
     commitOf(spark, root, v).entries
 
   /** A version's commit file, parsed once: its data entries plus the
@@ -352,18 +375,17 @@ object VersionedTable {
       spark.read.option("mergeSchema", "true")
         .parquet(c.entries.map(e => s"$root/${e.rel}"): _*).schema)
 
-  /** The `#schema` a commit on top of `base` logs for a staged batch.
-    * A full snapshot (nothing carried) logs the batch's schema; a
-    * commit that carries base entries logs base ∪ batch by
-    * `StructType.merge`, so the logged schema never narrows. A type
-    * conflict throws Spark's merge error before the commit publishes,
-    * after `cleanup` reclaims the staged data. */
-  private def stagedSchema(spark: SparkSession, root: String, base: Long, carries: Boolean,
+  /** The `#schema` a commit logs for a staged batch. A full snapshot
+    * (`carried` None: nothing carried) logs the batch's schema; a
+    * commit that carries entries of the base commit `carried` logs
+    * base ∪ batch by `StructType.merge`, so the logged schema never
+    * narrows. A type conflict throws Spark's merge error before the
+    * commit publishes, after `cleanup` reclaims the staged data. */
+  private def stagedSchema(spark: SparkSession, root: String, carried: Option[Commit],
                            staged: StructType, cleanup: () => Unit): StructType =
-    try {
-      if (carries && base >= 0) SqlShim.mergeSchemas(spark, schemaOf(spark, root, base), staged)
-      else SqlShim.nullable(staged)
-    } catch { case e: Throwable => cleanup(); throw e }
+    try carried.fold(SqlShim.nullable(staged))(c =>
+      SqlShim.mergeSchemas(spark, schemaOf(spark, root, c), staged))
+    catch { case e: Throwable => cleanup(); throw e }
 
   /** The most recent batchId `appId` committed, walking the log head
     * → 0 and stopping at the first marker. O(versions since the
@@ -391,12 +413,15 @@ object VersionedTable {
     * `HadoopFsRelation` over [[GraftFileIndex]], fed from ONE read of
     * the commit text (entries, `#partcol`, `#schema`). `parts` (encoded
     * partition values) keeps only those partitions' dirs, so a
-    * partition read never lists another partition. No footer is read
-    * and no Spark job runs to build it; the index lists its dirs when
-    * the plan first needs files. */
+    * partition read never touches another partition. No footer is read
+    * and no Spark job runs to build it; the index takes its files from
+    * the entries (listing only a dir logged without them). */
   private[graft] def relation(spark: SparkSession, root: String, v: Long,
-                              parts: Option[Set[String]] = None): HadoopFsRelation = {
-    val c = commitOf(spark, root, v)
+                              parts: Option[Set[String]] = None): HadoopFsRelation =
+    relationOf(spark, root, v, commitOf(spark, root, v), parts)
+
+  private def relationOf(spark: SparkSession, root: String, v: Long, c: Commit,
+                         parts: Option[Set[String]]): HadoopFsRelation = {
     val picked = parts.fold(c.entries)(want => c.entries.filter(_.part.exists(want)))
     if (picked.isEmpty) throw new java.io.FileNotFoundException(parts.fold(
       s"no data dirs at $root@v$v")(ps => s"no dirs for partitions ${ps.mkString(",")} at $root@v$v"))
@@ -418,7 +443,7 @@ object VersionedTable {
   private def relationOver(spark: SparkSession, root: String, v: Long, c: Commit,
                            picked: Seq[Entry]): HadoopFsRelation =
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, root, v, picked.map(e => (e.rel, e.part)), c.partCol),
+      location = new GraftFileIndex(spark, root, v, picked, c.partCol),
       partitionSchema = new StructType(),
       dataSchema = schemaOf(spark, root, c),
       bucketSpec = None,
@@ -428,6 +453,11 @@ object VersionedTable {
   private def scan(spark: SparkSession, root: String, v: Long,
                    parts: Option[Set[String]] = None): DataFrame =
     spark.baseRelationToDataFrame(relation(spark, root, v, parts))
+
+  /** [[scan]] of version `v` from its already-parsed commit `c`. */
+  private def scanOf(spark: SparkSession, root: String, v: Long, c: Commit,
+                     parts: Option[Set[String]]): DataFrame =
+    spark.baseRelationToDataFrame(relationOf(spark, root, v, c, parts))
 
 
   /** Time travel: the immutable snapshot a given version published,
@@ -468,7 +498,7 @@ object VersionedTable {
     * optimistic-concurrency guard rather than a last-writer-wins race.
     */
   def commit(spark: SparkSession, root: String, df: DataFrame, base: Long): Long =
-    stageAndCommit(spark, root, df, base, carryOver = Nil)
+    stageAndCommit(spark, root, df, base, carried = None)
 
   /** O(delta) APPEND: stage ONLY the new rows and publish a commit
     * whose dir list = the base version's dirs + the new dir. The
@@ -482,10 +512,11 @@ object VersionedTable {
     * [[commit]].
     */
   def append(spark: SparkSession, root: String, df: DataFrame, base: Long,
-             txn: Option[(String, Long)] = None): Long =
-    stageAndCommit(spark, root, df, base,
-      carryOver = if (base < 0) Nil else entriesOf(spark, root, base),
-      meta = txnLines(txn))
+             txn: Option[(String, Long)] = None): Long = {
+    val c = if (base < 0) None else Some(commitOf(spark, root, base))
+    stageAndCommit(spark, root, df, base, carried = c,
+                   carryOver = c.fold(Seq.empty[Entry])(_.entries), meta = txnLines(txn))
+  }
 
   /** The `#txn appId batchId` meta line an idempotent write carries
     * in its atomic commit (see [[appendRebaseTxn]]), if any. */
@@ -533,19 +564,17 @@ object VersionedTable {
     val f = fs(spark, root)
     val rel = s"data/append-${java.util.UUID.randomUUID()}"
     val staged = s"$root/$rel"
-    try df.write.mode("errorifexists").parquet(staged)
-    catch { case e: Throwable => f.delete(p(staged), true); throw e }
+    val entry = stageUnscoped(spark, root, df, rel, firstBase + 1)
     var attempt = 0
     var base = firstBase
     while (true) {
       attempt += 1
-      val carry = if (base < 0) Nil else entriesOf(spark, root, base)
+      val c = if (base < 0) None else Some(commitOf(spark, root, base))
       try {
         // no-op conflict cleanup: the staged dir survives a lost race
         // for the rebase; it is reclaimed only on final give-up
-        publish(spark, root, base + 1, carry :+ Entry(rel, None),
-                stagedSchema(spark, root, base, carries = true, df.schema,
-                             () => f.delete(p(staged), true)),
+        publish(spark, root, base + 1, c.fold(Seq.empty[Entry])(_.entries) :+ entry,
+                stagedSchema(spark, root, c, df.schema, () => f.delete(p(staged), true)),
                 onConflictCleanup = () => (), meta = meta)
         return base + 1
       } catch {
@@ -700,12 +729,13 @@ object VersionedTable {
                         txn: Option[(String, Long)] = None): Long = {
     val f = fs(spark, root)
     val next = base + 1
-    val carry = if (base < 0) Nil else entriesOf(spark, root, base)
+    val c = if (base < 0) None else Some(commitOf(spark, root, base))
+    val carry = c.fold(Seq.empty[Entry])(_.entries)
     require(carry.forall(_.part.isDefined),
       s"appendPartitioned requires a partition-native table; $root@v$base has unscoped dirs")
     // ONE staging write (see stagePartitionsOrEmpty): a small batch in
     // one task, one file per value; the value list, null/empty check and
-    // emptiness come back from the staged dir listing — no pre-write
+    // emptiness come back from what the tasks wrote — no pre-write
     // checkpoint/isEmpty/distinct jobs
     enforceConstraints(spark, root, df)
     stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
@@ -716,13 +746,13 @@ object VersionedTable {
         // crashing the loop
         require(base >= 0,
           s"cannot create a partitioned table at $root from an empty append")
-        publish(spark, root, next, carry, schemaOf(spark, root, base),
+        publish(spark, root, next, carry, schemaOf(spark, root, c.get),
                 onConflictCleanup = () => (),
                 meta = Seq(partColMetaLine(partitionCol)) ++ txnLines(txn))
       case Some((parent, entries)) =>
         val cleanup = () => { f.delete(p(s"$root/$parent"), true); () }
         publish(spark, root, next, carry ++ entries,
-                stagedSchema(spark, root, base, carries = true, df.schema, cleanup),
+                stagedSchema(spark, root, c, df.schema, cleanup),
                 onConflictCleanup = cleanup,
                 meta = Seq(partColMetaLine(partitionCol)) ++ txnLines(txn))
     }
@@ -763,7 +793,7 @@ object VersionedTable {
     // always got
     c.partCol match {
       case Some(pc) =>
-        val src = scan(spark, root, base, Some(fragmented.toSet))
+        val src = scanOf(spark, root, base, c, Some(fragmented.toSet))
         enforceConstraints(spark, root, src)
         val (parent, staged) = stagePartitions(spark, root, src, pc, next)
         publish(spark, root, next, carried ++ staged, schema,
@@ -772,10 +802,8 @@ object VersionedTable {
         val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
         val staged =
           try fragmented.map { pv =>
-            val rel = s"$parent/p=$pv"
-            scan(spark, root, base, Some(Set(pv)))
-              .write.mode("errorifexists").parquet(s"$root/$rel")
-            Entry(rel, Some(pv))
+            stageUnscoped(spark, root, scanOf(spark, root, base, c, Some(Set(pv))),
+                          s"$parent/${StagingWriter.valueDir(pv)}", next).copy(part = Some(pv))
           }
           catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
         publish(spark, root, next, carried ++ staged, schema,
@@ -856,22 +884,34 @@ object VersionedTable {
     }
   }
 
+  /** Stage `df` and publish `base + 1` with `carryOver` entries ahead
+    * of the staged dir. `carried` is the parsed base commit those
+    * entries come from (its schema widens the logged one); None for a
+    * full snapshot. */
   private def stageAndCommit(spark: SparkSession, root: String, df: DataFrame,
-                             base: Long, carryOver: Seq[Entry],
-                             meta: Seq[String] = Nil): Long = {
+                             base: Long, carried: Option[Commit],
+                             carryOver: Seq[Entry] = Nil, meta: Seq[String] = Nil): Long = {
     enforceConstraints(spark, root, df)
     val f = fs(spark, root)
     val next = base + 1
     val rel = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
-    val staged = s"$root/$rel"
-    try df.write.mode("errorifexists").parquet(staged)
-    catch { case e: Throwable => f.delete(p(staged), true); throw e }
-    val cleanup = () => { f.delete(p(staged), true); () }
-    publish(spark, root, next, carryOver :+ Entry(rel, None),
-            stagedSchema(spark, root, base, carryOver.nonEmpty, df.schema, cleanup),
+    val entry = stageUnscoped(spark, root, df, rel, next)
+    val cleanup = () => { f.delete(p(s"$root/$rel"), true); () }
+    publish(spark, root, next, carryOver :+ entry,
+            stagedSchema(spark, root, carried, df.schema, cleanup),
             onConflictCleanup = cleanup, meta = meta)
     next
   }
+
+  private def stageDesc(root: String, next: Long) = s"graft stage $root v$next"
+
+  /** Stage `df` as the ONE unscoped dir `rel` of version `next`
+    * ([[StagingWriter.stageDir]]); the dir is removed if the write
+    * fails. */
+  private def stageUnscoped(spark: SparkSession, root: String, df: DataFrame,
+                            rel: String, next: Long): Entry =
+    try Entry(rel, None, Some(StagingWriter.stageDir(spark, root, df, rel, stageDesc(root, next))))
+    catch { case e: Throwable => fs(spark, root).delete(p(s"$root/$rel"), true); throw e }
 
   /** The lose-or-win point: move `tmp` onto `target` iff `target`
     * does not exist, ATOMICALLY. On file:// the arbiter is link(2)
@@ -1094,78 +1134,44 @@ object VersionedTable {
     stagePartitionsOrEmpty(spark, root, src, partitionCol, next).getOrElse(
       throw new IllegalArgumentException(s"no $partitionCol values to stage"))
 
-  /** Where `partitionBy` routes null AND empty-string values. */
-  private val DefaultPartitionDir = "__HIVE_DEFAULT_PARTITION__"
-
   /** Stage `src` one dir per partition value under a fresh parent for
-    * version `next`; None when the batch is EMPTY (the parent is
-    * reclaimed — callers publish a marker-only/carry-only commit).
+    * version `next`; None when the batch is EMPTY (nothing was
+    * written — callers publish a marker-only/carry-only commit).
     *
-    * ONE staging write, evaluating `src` exactly once: the
-    * partitionBy write, then a listing of the staged parent. Partition
-    * values come back from that listing (driver metadata) instead of a
-    * distinct() job: Spark's Hive-escaped `__graft_p=<v>` names are
-    * unescaped to the raw value (`ExternalCatalogUtils`' escaping
-    * always escapes `%`, so this round-trips every value) and renamed
-    * to `p=enc(v)`. Emptiness is
-    * "the write staged no dirs", and null or empty values show up as
-    * `__HIVE_DEFAULT_PARTITION__` — only then does a job run, to name
-    * which. The partition column is duplicated into a throwaway
-    * `__graft_p` so the data files keep the real column (readPartition
-    * reads leaf dirs directly — no Hive partition discovery recovers
-    * dir values). The renamed dirs' listings seed [[GraftFileIndex]]'s
-    * cache, so the first read of the new version lists nothing.
+    * ONE staging write ([[StagingWriter.stagePartitioned]]),
+    * evaluating `src` exactly once: each task writes its rows straight
+    * into `<parent>/p=<enc(v)>/` and reports the values it saw with the
+    * files it wrote, so the entries (files included) come from the
+    * tasks' reports — no dir is renamed and nothing is listed, and the
+    * first read of the new version lists nothing either. A null or
+    * empty value stages no file; its report fails the write here,
+    * naming which, before anything publishes.
     *
-    * Why one task for a small input: the partitionBy writer opens one
-    * parquet file per value PER TASK, so a batch of T tasks over V
-    * values stages up to T×V small files, and both the writer's
-    * per-file setup and every later read's per-file footer and reader
-    * setup scale with that count. When the optimizer estimates the
-    * whole input at or under AQE's advisory partition size — the size
-    * AQE would coalesce a shuffle of it down to one partition at —
-    * the write runs as one task (`coalesce(1)`, no exchange), so each
-    * touched value stages exactly one file (2,000 rows over 6 values,
-    * local[2] on a 4-core box: 244 ms median, against 248 ms for the
-    * unclustered write, which staged twice the files). A larger input
-    * is written as it comes; clustering it (a REBALANCE on the value)
-    * would add a full shuffle that no workload here measures yet. */
+    * Why one task for a small input: a task writes one file per value
+    * it holds, so a batch of T tasks over V values would stage up to
+    * T×V small files, and both the writer's per-file setup and every
+    * later read's per-file footer and reader setup scale with that
+    * count. When the optimizer estimates the whole input at or under
+    * AQE's advisory partition size — the size AQE would coalesce a
+    * shuffle of it down to one partition at — the write runs as one
+    * task (`coalesce(1)`, no exchange), so each touched value stages
+    * exactly one file. A larger input is written as it comes;
+    * clustering it (a REBALANCE on the value) would add a full shuffle
+    * that no workload here measures yet. */
   private def stagePartitionsOrEmpty(
       spark: SparkSession, root: String, src: DataFrame,
       partitionCol: String, next: Long): Option[(String, Seq[Entry])] = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    val f = fs(spark, root)
     val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
     try {
-      val tagged = src.withColumn("__graft_p", col(partitionCol).cast("string"))
-      val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-      (if (tagged.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory) tagged.coalesce(1)
-       else tagged)
-        .write.mode("errorifexists").partitionBy("__graft_p")
-        .parquet(s"$root/$parent")
-      val dirs = f.listStatus(p(s"$root/$parent"))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__graft_p="))
-        .map(st => unescapePathName(st.getPath.getName.stripPrefix("__graft_p=")) -> st.getPath)
-        .sortBy(_._1)
-      if (dirs.exists(_._1 == DefaultPartitionDir))
-        requireRoutable(src.select(col(partitionCol).cast("string").as("v"))
-          .filter(col("v").isNull || col("v") === "").distinct().collect()
-          .map(_.getString(0)), partitionCol)
-      if (dirs.isEmpty) { // empty batch: nothing staged
-        f.delete(p(s"$root/$parent"), true)
-        return None
-      }
-      f.delete(p(s"$root/$parent/_SUCCESS"), false)
-      val staged = dirs.toSeq.map { case (v, from) =>
-        val rel = s"$parent/p=${enc(v)}"
-        require(f.rename(from, p(s"$root/$rel")), s"stage rename failed for partition value $v")
-        Entry(rel, Some(enc(v)))
-      }
-      GraftFileIndex.seedListing(spark, root, staged.map(_.rel))
-      Some((parent, staged))
+      val values = StagingWriter.stagePartitioned(spark, root, src, partitionCol, parent,
+                                                  stageDesc(root, next))
+      requireRoutable(values.map(_._1), partitionCol)
+      if (values.isEmpty) None
+      else Some((parent, values.map { case (v, files) =>
+        Entry(s"$parent/${StagingWriter.valueDir(enc(v))}", Some(enc(v)), Some(files))
+      }))
     }
-    catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
+    catch { case e: Throwable => fs(spark, root).delete(p(s"$root/$parent"), true); throw e }
   }
 
   /** Publish `df` as a PARTITION-NATIVE snapshot: one immutable dir
@@ -1174,15 +1180,14 @@ object VersionedTable {
     * partition-discovery). This is the layout [[mergePartitioned]]
     * requires; partition cardinality is assumed bounded (record_type,
     * period, tenant — the reference partitions by record_type/period,
-    * queue_for_delta.py), since staging renames one dir per value on
-    * the driver.
+    * queue_for_delta.py), since every value's dir is one commit entry.
     */
   def commitPartitioned(spark: SparkSession, root: String, df: DataFrame,
                         partitionCol: String, base: Long): Long =
     commitPartitionedCarrying(spark, root, df, partitionCol, base, carried = Nil)
 
   /** Stage `df` as ONE unscoped dir and publish `base + 1` carrying
-    * `carried` entry pairs (from [[entryPairsOf]]) forward
+    * `carried` entries (from [[entriesOf]]) forward
     * byte-for-byte — the unscoped sibling of
     * [[commitPartitionedCarrying]], and the publish primitive a
     * file-level (stats-pruned) merge needs: the rewritten dirs'
@@ -1190,11 +1195,12 @@ object VersionedTable {
     * along with its annotation (partition-scoped or not) intact. */
   private[graft] def commitCarrying(spark: SparkSession, root: String,
                                     df: DataFrame, base: Long,
-                                    carried: Seq[(String, Option[String])]): Long =
-    stageAndCommit(spark, root, df, base,
-                   carryOver = carried.map { case (rel, pv) => Entry(rel, pv) },
-                   meta = if (base < 0) Nil
-                          else commitOf(spark, root, base).partCol.map(partColMetaLine).toSeq)
+                                    carried: Seq[Entry]): Long = {
+    val c = if (base < 0) None else Some(commitOf(spark, root, base))
+    stageAndCommit(spark, root, df, base, carried = c.filter(_ => carried.nonEmpty),
+                   carryOver = carried,
+                   meta = c.flatMap(_.partCol).map(partColMetaLine).toSeq)
+  }
 
   /** KEYED DELETE: commit a new version holding every current row
     * whose key does NOT appear in `victims` — the `whenMatchedDelete`
@@ -1215,16 +1221,17 @@ object VersionedTable {
 
   /** The shared PARTITION-SCOPED REWRITE primitive: stage `df` one dir
     * per touched partition value, and publish `base + 1` with
-    * `carried` entry pairs (from [[entryPairsOf]], minus the touched
+    * `carried` entries (from [[entriesOf]], minus the touched
     * values) carried forward byte-for-byte. Callers own the carry
     * list — this is what a partition-scoped merge, SCD2 merge, or
     * delta recluster have in common: O(touched) staging, O(1) carry.
     * Same optimistic-concurrency publish as every other write. */
   private[graft] def commitPartitionedCarrying(
       spark: SparkSession, root: String, df: DataFrame, partitionCol: String,
-      base: Long, carried: Seq[(String, Option[String])]): Long = {
+      base: Long, carried: Seq[Entry]): Long = {
     val f = fs(spark, root)
     val next = base + 1
+    lazy val c = commitOf(spark, root, base)
     // ONE staging write (see stagePartitionsOrEmpty): a small batch in
     // one task, one file per value, evaluating df once — no pre-write
     // checkpoint/isEmpty/null jobs
@@ -1235,14 +1242,13 @@ object VersionedTable {
         // then pure carry (the touched dirs simply leave the entry list)
         require(carried.nonEmpty,
           s"refusing to publish a dir-less version at $root (empty rewrite, empty carry)")
-        publish(spark, root, next, carried.map { case (rel, pv) => Entry(rel, pv) },
-                schemaOf(spark, root, base), onConflictCleanup = () => (),
+        publish(spark, root, next, carried, schemaOf(spark, root, c), onConflictCleanup = () => (),
                 meta = Seq(partColMetaLine(partitionCol)))
       case Some((parent, entries)) =>
         val cleanup = () => { f.delete(p(s"$root/$parent"), true); () }
-        publish(spark, root, next,
-                carried.map { case (rel, pv) => Entry(rel, pv) } ++ entries,
-                stagedSchema(spark, root, base, carried.nonEmpty, df.schema, cleanup),
+        publish(spark, root, next, carried ++ entries,
+                stagedSchema(spark, root, if (carried.nonEmpty && base >= 0) Some(c) else None,
+                             df.schema, cleanup),
                 onConflictCleanup = cleanup,
                 meta = Seq(partColMetaLine(partitionCol)))
     }
@@ -1314,7 +1320,8 @@ object VersionedTable {
             attempt += 1
         }
       } else {
-      val baseEntries = entriesOf(spark, root, base)
+      val baseCommit = commitOf(spark, root, base)
+      val baseEntries = baseCommit.entries
       require(baseEntries.forall(_.part.isDefined),
         s"mergePartitioned requires a partition-native table; $root@v$base has unscoped dirs " +
         "(create it with commitPartitioned, or compact via mergePartitioned only)")
@@ -1331,7 +1338,7 @@ object VersionedTable {
       val touchedEnc = touched.map(enc).toSet
       val target =
         if (!baseEntries.exists(_.part.exists(touchedEnc.contains))) src.limit(0)
-        else scan(spark, root, base, Some(touchedEnc))
+        else scanOf(spark, root, base, baseCommit, Some(touchedEnc))
       // the staging write evaluates the merge once; a retry that must
       // recompute builds a new one against the fresh head
       val merged = graft.operators.Relational.mergeUpsert(target, src, keys, tb)
@@ -1345,13 +1352,13 @@ object VersionedTable {
       // unscoped head we cannot reason about, falls back to the
       // recompute path.
       var pubBase = base
-      var pubEntries = baseEntries
+      var pubCommit = baseCommit
       var recompute = false
       while (!recompute) {
-        val carried = pubEntries.filterNot(e => e.part.exists(touchedEnc.contains))
+        val carried = pubCommit.entries.filterNot(e => e.part.exists(touchedEnc.contains))
         try {
           publish(spark, root, pubBase + 1, carried ++ staged,
-                  stagedSchema(spark, root, pubBase, carries = true, merged.schema,
+                  stagedSchema(spark, root, Some(pubCommit), merged.schema,
                                () => f.delete(p(s"$root/$parent"), true)),
                   onConflictCleanup = () => (),
                   meta = Seq(partColMetaLine(partitionCol)))
@@ -1362,13 +1369,14 @@ object VersionedTable {
             if (attempt >= maxRetries) { f.delete(p(s"$root/$parent"), true); throw e }
             attempt += 1
             val newBase = currentVersion(spark, root).getOrElse(-1L)
-            val newEntries = entriesOf(spark, root, newBase)
+            val newCommit = commitOf(spark, root, newBase)
+            val newEntries = newCommit.entries
             val disjoint = newEntries.forall(_.part.isDefined) && {
               def slice(es: Seq[Entry], pv: String) =
                 es.filter(_.part.contains(pv)).map(_.rel).toSet
               touchedEnc.forall(pv => slice(newEntries, pv) == slice(baseEntries, pv))
             }
-            if (disjoint) { pubBase = newBase; pubEntries = newEntries }
+            if (disjoint) { pubBase = newBase; pubCommit = newCommit }
             else { f.delete(p(s"$root/$parent"), true); recompute = true }
         }
       }

@@ -9,8 +9,9 @@
   * namespace (Delta Lake's `DeltaSource`, Spark's own
   * `FileStreamSource`). This object is that bridge, plus the two
   * `private[sql]` schema helpers the commit log's `#schema` line needs
-  * (the parquet `mergeSchema` rule and read-side nullability), and
-  * NOTHING else: no state — the graft connector proper lives in
+  * (the parquet `mergeSchema` rule and read-side nullability), the
+  * session Hadoop conf and SQL execution the staging writer runs
+  * under, and NOTHING else: no state — the graft connector proper lives in
   * `graft.sources` against public APIs.
   */
 package org.apache.spark.sql.graft
@@ -67,6 +68,24 @@ object SqlShim {
     * type conflict throws Spark's merge error. */
   def mergeSchemas(spark: SparkSession, a: StructType, b: StructType): StructType =
     a.merge(b, classic(spark).sessionState.conf.caseSensitiveAnalysis).asNullable
+
+  /** The session's Hadoop conf with its SQL-level overrides, as a
+    * file write of this session would see it. */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    classic(spark).sessionState.newHadoopConf()
+
+  /** Run `body` over `df`'s executed InternalRow RDD inside ONE SQL
+    * execution whose description is `desc`: every job the body and an
+    * adaptive plan's stages launch carries that description and the
+    * execution's id, so a listener attributes them to it. */
+  def withExecution[T](df: DataFrame, desc: String)(body: RDD[InternalRow] => T): T = {
+    val qe = df.asInstanceOf[ClassicDataset[Row]].queryExecution
+    val sc = df.sparkSession.sparkContext
+    val prior = sc.getLocalProperty(org.apache.spark.SparkContext.SPARK_JOB_DESCRIPTION)
+    sc.setJobDescription(desc)
+    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(desc))(body(qe.toRdd))
+    finally sc.setJobDescription(prior)
+  }
 
   /** The executed InternalRow RDD of a sink's incoming batch frame. */
   def internalRows(df: DataFrame): RDD[InternalRow] =

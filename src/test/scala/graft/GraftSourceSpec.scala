@@ -209,6 +209,8 @@ class GraftSourceSpec extends AnyFunSuite {
       v = VersionedTable.append(spark, root,
         spark.range(g * 10L, g * 10L + 10).toDF("id"), v)
     }
+    // a log written before commits listed files: readers list its dirs
+    stripFileLines(root)
     val df = spark.read.format("graft").load(root)
     assert(df.count() == 400)
     assert(GraftFileIndex.lastListingDistributed,
@@ -239,16 +241,285 @@ class GraftSourceSpec extends AnyFunSuite {
   test("format(graft): repeated reads of one version share a cached listing") {
     val root = tmp("src_cache")
     val v0 = VersionedTable.commit(spark, root, spark.range(0, 5).toDF("id"), -1L)
+    stripFileLines(root)
     assert(spark.read.format("graft").load(root).count() == 5)
     assert(spark.read.format("graft").load(root).count() == 5)
     assert(GraftFileIndex.lastListingCached,
       "second read of the same version must not re-list the filesystem")
     // a NEW version is a different snapshot: misses, then caches
     VersionedTable.append(spark, root, spark.range(5, 8).toDF("id"), v0)
+    stripFileLines(root)
     assert(spark.read.format("graft").load(root).count() == 8)
     assert(!GraftFileIndex.lastListingCached)
     assert(spark.read.format("graft").load(root).count() == 8)
     assert(GraftFileIndex.lastListingCached)
+  }
+
+  // ── file-level log: commits name each dir's files ─────────────────
+
+  /** Every commit and checkpoint of `root` rewritten as a log from
+    * before commits listed files: each entry keeps only its dir and
+    * partition value. */
+  private def stripFileLines(root: String): Unit = {
+    val log = java.nio.file.Paths.get(root, "_log")
+    def strip(entry: String): String = entry.split("\t") match {
+      case Array(rel, pv, _) => if (pv.isEmpty) rel else s"$rel\t$pv"
+      case _ => entry
+    }
+    val walk = java.nio.file.Files.list(log)
+    try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(f => f.getFileName.toString.matches("v\\d{8}\\.(commit|checkpoint)")).foreach { f =>
+        val cp = f.getFileName.toString.endsWith(".checkpoint")
+        val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").map { l =>
+          if (l.startsWith("#")) l
+          else if (cp) { val i = l.indexOf('\t'); l.substring(0, i + 1) + strip(l.substring(i + 1)) }
+          else strip(l)
+        }
+        java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      }
+    finally walk.close()
+  }
+
+  /** Listings of data dirs (not of `_log`) in `ops`. */
+  private def dataListings(ops: CountingFs.Ops): Seq[String] =
+    ops.lists.filterNot(_.contains("/_log"))
+
+  test("format(graft): a long append chain reads from the log, listing nothing") {
+    import org.apache.spark.sql.functions._
+    val root = tmp("src_many_log")
+    var v = VersionedTable.commit(spark, root, spark.range(0, 10).toDF("id"), -1L)
+    (1 until 40).foreach { g =>
+      v = VersionedTable.append(spark, root,
+        spark.range(g * 10L, g * 10L + 10).toDF("id"), v)
+    }
+    var n = 0L
+    var hit = Set.empty[Long]
+    val ops = CountingFs.during(spark) {
+      val df = spark.read.format("graft").load(root)
+      n = df.count()
+      hit = ids(df.filter(col("id") === 250L))
+    }
+    assert(n == 400 && hit == Set(250L))
+    assert(dataListings(ops).isEmpty, s"a log-fed read listed ${dataListings(ops).take(3)}")
+  }
+
+  test("format(graft): repeated reads and a new version's read list nothing") {
+    val root = tmp("src_cache_log")
+    val v0 = VersionedTable.commit(spark, root, spark.range(0, 5).toDF("id"), -1L)
+    val ops = CountingFs.during(spark) {
+      assert(spark.read.format("graft").load(root).count() == 5)
+      assert(spark.read.format("graft").load(root).count() == 5)
+      VersionedTable.append(spark, root, spark.range(5, 8).toDF("id"), v0)
+      assert(spark.read.format("graft").load(root).count() == 8)
+      assert(VersionedTable.read(spark, root).count() == 8)
+    }
+    assert(dataListings(ops).isEmpty, s"reads listed ${dataListings(ops).take(3)}")
+  }
+
+  test("file log: a stray file in a published dir is invisible to every read, stream and stats build") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val root = tmp("stray")
+    def rows(lo: Int, n: Int) = (lo until lo + n).map(i => (i.toLong, s"p${i % 3}", i * 1.0)).toDF("id", "part", "x")
+    val v0 = VersionedTable.commitPartitioned(spark, root, rows(0, 30), "part", -1L)
+    val v1 = VersionedTable.appendPartitioned(spark, root, rows(30, 12), "part", v0)
+    val flat = tmp("stray_flat")
+    val u0 = VersionedTable.commit(spark, flat, rows(0, 30), -1L)
+    VersionedTable.append(spark, flat, rows(30, 12), u0)
+    // a failed or zombie task attempt's leftovers in every published
+    // dir: a whole parquet file (rows that would double) and a
+    // truncated one (a footer that would fail any reader)
+    for (t <- Seq(root, flat); rel <- VersionedTable.dirsOf(spark, t, VersionedTable.headVersion(spark, t))) {
+      val dir = java.nio.file.Paths.get(t, rel)
+      val logged = java.nio.file.Files.list(dir)
+      val file = try logged.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .find(_.getFileName.toString.endsWith(".parquet")).get finally logged.close()
+      java.nio.file.Files.copy(file, dir.resolve("part-7-1.parquet"))
+      java.nio.file.Files.write(dir.resolve("part-7-0.parquet"), "PAR1 truncated".getBytes("UTF-8"))
+    }
+    assert(VersionedTable.read(spark, root).count() == 42)
+    assert(VersionedTable.readAsOf(spark, root, v0).count() == 30)
+    assert(VersionedTable.readPartition(spark, root, "p1").count() == 14)
+    assert(spark.read.format("graft").load(root).filter(col("part") === "p2").count() == 14)
+    assert(spark.read.format("graft").load(flat).count() == 42)
+    assert(VersionedTable.read(spark, flat).count() == 42)
+    val q = spark.readStream.format("graft").load(flat)
+      .writeStream.format("memory").queryName("graft_stray_s").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("graft_stray_s").count() == 42)
+    } finally q.stop()
+    val stats = DataSkipping.ensureStats(spark, root, v1, Seq("id"))
+    assert(stats.values.map(_("id")._2).max == 41.0 && stats.values.map(_("id")._1).min == 0.0)
+    val blooms = DataSkipping.ensureBloom(spark, flat, VersionedTable.headVersion(spark, flat), "part")
+    assert(blooms.size == 2)
+  }
+
+  test("file log: a legacy log without file lines reads identically through the listing") {
+    import spark.implicits._
+    val root = tmp("legacy")
+    val flat = tmp("legacy_flat")
+    def rows(lo: Int, n: Int) = (lo until lo + n).map(i => (i.toLong, s"p${i % 3}", i * 1.0)).toDF("id", "part", "x")
+    var v = VersionedTable.commitPartitioned(spark, root, rows(0, 9), "part", -1L)
+    (1 to 11).foreach(w => v = VersionedTable.appendPartitioned(spark, root, rows(w * 9, 9), "part", v))
+    var u = VersionedTable.commit(spark, flat, rows(0, 5), -1L)
+    u = VersionedTable.append(spark, flat, rows(5, 5), u)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_log", "v00000010.checkpoint")))
+    def snapshot(): Seq[Set[String]] =
+      ((0L to v).map(VersionedTable.readAsOf(spark, root, _)) ++
+        Seq(VersionedTable.read(spark, root), VersionedTable.readPartition(spark, root, "p2"),
+            spark.read.format("graft").load(root), VersionedTable.read(spark, flat),
+            spark.read.format("graft").load(flat)))
+        .map(_.collect().map(_.toString).toSet)
+    val before = snapshot()
+    stripFileLines(root)
+    stripFileLines(flat)
+    assert(VersionedTable.entriesOf(spark, root, v).forall(_.files.isEmpty))
+    assert(snapshot() == before)
+    // a write on top carries the legacy entries as they are
+    val v2 = VersionedTable.appendPartitioned(spark, root, rows(200, 3), "part", v)
+    val es = VersionedTable.entriesOf(spark, root, v2)
+    assert(es.count(_.files.isDefined) == 3 && es.count(_.files.isEmpty) == 36)
+    assert(VersionedTable.read(spark, root).count() == 111)
+  }
+
+  test("file log: file lines survive the checkpoint and vacuum") {
+    val root = tmp("cp_files")
+    var v = VersionedTable.commit(spark, root, spark.range(0, 3).toDF("id"), -1L)
+    (1 to 10).foreach(g => v = VersionedTable.append(spark, root, spark.range(g * 3L, g * 3L + 3).toDF("id"), v))
+    assert(v == 10L)
+    def text(name: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_log", name)), "UTF-8").split("\n").toSeq
+    val head = text("v00000010.commit").filterNot(_.startsWith("#"))
+    assert(head.size == 11 && head.forall(_.split("\t").length == 3), head.take(2))
+    // the checkpoint holds the same entry lines, file fields included
+    val cp = text("v00000010.checkpoint").filter(_.startsWith("10\t")).map(_.stripPrefix("10\t"))
+    assert(cp == head)
+    VersionedTable.vacuum(spark, root, keepLast = 1)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_log", "v00000009.commit")))
+    val kept = VersionedTable.entriesOf(spark, root, 10L)
+    assert(kept.map(_.line) == head)
+    kept.foreach(e => e.files.get.foreach { case (name, len) =>
+      assert(java.nio.file.Files.size(java.nio.file.Paths.get(root, e.rel, name)) == len) })
+    assert(ids(VersionedTable.read(spark, root)) == (0L until 33L).toSet)
+    val v11 = VersionedTable.append(spark, root, spark.range(33, 36).toDF("id"), 10L)
+    assert(VersionedTable.entriesOf(spark, root, v11).forall(_.files.exists(_.nonEmpty)))
+    assert(VersionedTable.read(spark, root).count() == 36)
+  }
+
+  test("file log: an empty write logs zero files and reads 0 rows with the logged schema") {
+    import spark.implicits._
+    val root = tmp("empty_write")
+    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "x")
+    val v0 = VersionedTable.commit(spark, root, df, -1L)
+    val v1 = VersionedTable.deleteKeys(spark, root, df.select("id"), Seq("id"))
+    val e1 = VersionedTable.entriesOf(spark, root, v1)
+    assert(e1.size == 1 && e1.head.files.contains(Nil), e1)
+    assert(VersionedTable.read(spark, root).count() == 0)
+    assert(VersionedTable.read(spark, root).schema == org.apache.spark.sql.graft.SqlShim.nullable(df.schema))
+    assert(VersionedTable.readAsOf(spark, root, v0).count() == 2)
+    val empty = tmp("empty_commit")
+    val e0 = VersionedTable.commit(spark, empty, df.limit(0), -1L)
+    assert(VersionedTable.entriesOf(spark, empty, e0).map(_.files) == Seq(Some(Nil)))
+    assert(spark.read.format("graft").load(empty).count() == 0)
+    assert(spark.read.format("graft").load(empty).schema == org.apache.spark.sql.graft.SqlShim.nullable(df.schema))
+    VersionedTable.append(spark, empty, df, e0)
+    assert(VersionedTable.read(spark, empty).count() == 2)
+  }
+
+  test("staging: the writer's files match df.write.parquet's footer schema and row counts") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footers(dir: String): Seq[(org.apache.parquet.schema.MessageType, Long, Option[String])] = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      val files = try ls.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq finally ls.close()
+      files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try (r.getFileMetaData.getSchema, r.getRecordCount,
+             Option(r.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+        finally r.close()
+      }.sortBy(_._2)
+    }
+    val df = (0 until 300).map(i => (i.toLong, if (i % 7 == 0) null else s"s$i", i * 0.5,
+        BigDecimal(i) / 100, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Seq(i, i + 1), s"p${i % 3}"))
+      .toDF("id", "s", "x", "d", "ts", "arr", "part")
+      .withColumn("st", struct(col("id"), col("s")))
+      .repartition(3)
+    val reference = tmp("footer_ref")
+    df.write.parquet(reference)
+    val root = tmp("footer")
+    val v = VersionedTable.commit(spark, root, df, -1L)
+    val rel = VersionedTable.dirsOf(spark, root, v).head
+    assert(footers(s"$root/$rel") == footers(reference))
+    // partition-scoped: each value's one file carries the same schema
+    // and that value's rows
+    val proot = tmp("footer_part")
+    val pv = VersionedTable.commitPartitioned(spark, proot, df, "part", -1L)
+    val refSchema = footers(reference).head._1
+    VersionedTable.entriesOf(spark, proot, pv).foreach { e =>
+      val got = footers(s"$proot/${e.rel}")
+      assert(got.map(_._1) == Seq(refSchema), e.rel)
+      assert(got.map(_._2).sum == 100)
+    }
+  }
+
+  test("staging: a write starts no output committer, renames nothing and lists no data dir") {
+    import spark.implicits._
+    val root = tmp("no_committer")
+    val flat = tmp("no_committer_flat")
+    def rows(lo: Int, n: Int) = (lo until lo + n).map(i => (i.toLong, s"p${i % 4}", i * 1.0)).toDF("id", "part", "x")
+    val ops = CountingFs.during(spark) {
+      val v0 = VersionedTable.commitPartitioned(spark, root, rows(0, 40), "part", -1L)
+      val v1 = VersionedTable.appendPartitioned(spark, root, rows(40, 8).repartition(2), "part", v0)
+      VersionedTable.mergePartitioned(spark, root, rows(0, 6), Seq("id"), "part")
+      VersionedTable.compactPartitioned(spark, root)
+      val u0 = VersionedTable.commit(spark, flat, rows(0, 10).repartition(3), -1L)
+      VersionedTable.append(spark, flat, rows(10, 5), u0)
+      VersionedTable.appendRebase(spark, flat, rows(15, 5))
+      assert(v1 == 1L)
+    }
+    assert(ops.renames.isEmpty, s"renames: ${ops.renames.take(3)}")
+    assert(dataListings(ops).isEmpty, s"listings: ${dataListings(ops).take(3)}")
+    for (t <- Seq(root, flat)) {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(t))
+      val names = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+                  finally walk.close()
+      assert(!names.exists(n => n.contains("_temporary") || n.contains("_SUCCESS")), names)
+    }
+    assert(VersionedTable.read(spark, root).count() == 48)
+    assert(VersionedTable.read(spark, flat).count() == 20)
+  }
+
+  test("staging: the write runs under one SQL execution described `graft stage <root> v<next>`") {
+    import spark.implicits._
+    val root = tmp("stage_desc")
+    val v0 = VersionedTable.commitPartitioned(spark, root,
+      (0 until 20).map(i => (i.toLong, s"p${i % 2}")).toDF("id", "part"), "part", -1L)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add((j.properties.getProperty("spark.job.description"),
+                  j.properties.getProperty("spark.sql.execution.id"))); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    // an exchange below the write: its stage job and the write job
+    val batch = (20 until 60).map(i => (i.toLong, s"p${i % 3}")).toDF("id", "part")
+      .groupBy("part").agg(org.apache.spark.sql.functions.max("id").as("id"))
+      .select("id", "part")
+    try { VersionedTable.appendPartitioned(spark, root, batch, "part", v0); Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toList
+    assert(seen.size >= 2, seen)
+    assert(seen.forall(_._1 == s"graft stage $root v1"), seen)
+    assert(seen.map(_._2).distinct.size == 1 && seen.head._2 != null, seen)
+    assert(VersionedTable.read(spark, root).count() == 23)
   }
 
   test("format(graft): merge-schema evolution serves the union schema with nulls") {

@@ -3384,17 +3384,17 @@ class GraftSpec extends AnyFunSuite {
       .withColumn("y", (col("id") * 2654435761L) % 10000)
     DataSkipping.zOrderCommit(spark, root, mk(0, 8000), "x", "y", nDirs = 16, base = -1L)
     VersionedTable.append(spark, root, mk(8000, 10000), 0L)
-    val baseEntries = VersionedTable.entryPairsOf(spark, root, 1L)
-    val clustered = baseEntries.filter(_._2.isDefined)
+    val baseEntries = VersionedTable.entriesOf(spark, root, 1L)
+    val clustered = baseEntries.filter(_.part.isDefined)
     // the delta pass rewrites ONLY the appended dir into a fresh tight
     // generation; all 16 clustered dirs are carried forward unchanged
     val v2 = DataSkipping.reclusterDelta(spark, root, "x", "y", nDirs = 4)
     assert(v2 == 2L)
-    val after = VersionedTable.entryPairsOf(spark, root, v2)
+    val after = VersionedTable.entriesOf(spark, root, v2)
     assert(clustered.forall(after.contains), "clustered dirs must carry byte-for-byte")
     val fresh = after.filterNot(baseEntries.contains)
     assert(fresh.nonEmpty && fresh.size <= 4 &&
-      fresh.forall(_._2.exists(_.startsWith("g1-"))),
+      fresh.forall(_.part.exists(_.startsWith("g1-"))),
       s"delta generation mis-staged: $fresh")
     // the stats job after the delta pass scanned ONLY the delta dirs —
     // the 16 carried dirs' bounds were inherited from the base sidecar
@@ -3680,15 +3680,15 @@ class GraftSpec extends AnyFunSuite {
     Scd2.mergeScd2Partitioned(spark, root,
       dim(("eps", "A", 1.0), ("eps", "B", 2.0), ("rev", "A", 100.0), ("fcf", "A", 7.0)),
       keys, "record_type", "2024-01-01 00:00:00")
-    val v0Entries = VersionedTable.entryPairsOf(spark, root, 0L)
-    assert(v0Entries.size == 3 && v0Entries.forall(_._2.isDefined))
+    val v0Entries = VersionedTable.entriesOf(spark, root, 0L)
+    assert(v0Entries.size == 3 && v0Entries.forall(_.part.isDefined))
     // batch touches ONLY eps: one staged dir; rev and fcf dirs carried
     // forward byte-for-byte (the delta-rs copy-on-write boundary)
     val v1 = Scd2.mergeScd2Partitioned(spark, root,
       dim(("eps", "A", 10.0), ("eps", "C", 3.0)),
       keys, "record_type", "2024-02-01 00:00:00")
-    val v1Entries = VersionedTable.entryPairsOf(spark, root, v1)
-    val carried = v0Entries.filterNot(_._2.contains("eps"))
+    val v1Entries = VersionedTable.entriesOf(spark, root, v1)
+    val carried = v0Entries.filterNot(_.part.contains("eps"))
     assert(carried.forall(v1Entries.contains), "untouched partitions must carry")
     assert(v1Entries.filterNot(v0Entries.contains).size == 1,
       "a 1-of-3-partition batch must stage exactly one partition dir")
@@ -3985,7 +3985,7 @@ class GraftSpec extends AnyFunSuite {
     // its predecessor's plus exactly its own append, and every
     // historical snapshot stays readable (append-only chain)
     for (v <- 0L to (n + 1).toLong) {
-      assert(VersionedTable.entryPairsOf(spark, root, v).size == v + 1)
+      assert(VersionedTable.entriesOf(spark, root, v).size == v + 1)
       assert(VersionedTable.readAsOf(spark, root, v).count() == v + 1)
     }
   }
@@ -6434,7 +6434,7 @@ class GraftSpec extends AnyFunSuite {
     assert(jobs <= 8,
       s"commitPartitioned of 24 partitions launched $jobs jobs — the one-wave staging regressed")
     // and the result is a correct partition-native table
-    assert(VersionedTable.entryPairsOf(spark, root, 0L).size == 24)
+    assert(VersionedTable.entriesOf(spark, root, 0L).size == 24)
     assert(VersionedTable.readPartition(spark, root, "p3").count() == 10)
     assert(VersionedTable.read(spark, root).count() == 240)
   }
@@ -6444,9 +6444,9 @@ class GraftSpec extends AnyFunSuite {
   private def stagedFiles(root: String, v: Long, base: Long): Map[String, Int] = {
     import graft.sources.VersionedTable
     val old = if (base < 0) Set.empty[String] else VersionedTable.dirsOf(spark, root, base).toSet
-    VersionedTable.entryPairsOf(spark, root, v).filterNot(e => old(e._1)).map { case (rel, pv) =>
-      java.net.URLDecoder.decode(pv.get, "UTF-8") ->
-        new java.io.File(s"$root/$rel").listFiles().count(_.getName.endsWith(".parquet"))
+    VersionedTable.entriesOf(spark, root, v).filterNot(e => old(e.rel)).map { e =>
+      java.net.URLDecoder.decode(e.part.get, "UTF-8") ->
+        new java.io.File(s"$root/${e.rel}").listFiles().count(_.getName.endsWith(".parquet"))
     }.toMap
   }
 
@@ -6608,15 +6608,15 @@ class GraftSpec extends AnyFunSuite {
       .map(_.getAs[Long]("neighbor_id")).contains(1L))
     // delete vec 1 (home cell 100): only that cell's dir is rewritten;
     // cell 101's inverted list must be CARRIED byte-for-byte
-    val before = VersionedTable.entryPairsOf(spark, s"$root/vectors", 0L)
+    val before = VersionedTable.entriesOf(spark, s"$root/vectors", 0L)
     val nv = VecIndex.delete(spark, root, Seq((1L, v(0.9, 0.1, 0, 0)))
       .toDF("vec_id", "embedding"))
     assert(nv == 1L)
-    val after = VersionedTable.entryPairsOf(spark, s"$root/vectors", nv)
-    val carried101 = before.filter(_._2.contains("101"))
+    val after = VersionedTable.entriesOf(spark, s"$root/vectors", nv)
+    val carried101 = before.filter(_.part.contains("101"))
     assert(carried101.nonEmpty && carried101.forall(after.contains),
       s"cell 101 dirs must be carried untouched: before=$before after=$after")
-    assert(after.filter(_._2.contains("100")) != before.filter(_._2.contains("100")),
+    assert(after.filter(_.part.contains("100")) != before.filter(_.part.contains("100")),
       "cell 100 must have been rewritten")
     // the probe no longer returns the victim; survivors unchanged
     val got = VecIndex.probe(spark, root, q, k = 4, nProbe = 1).collect()

@@ -66,7 +66,9 @@ class LocalFsSpec extends AnyFunSuite {
   test("local FS: write verbs, a checkpoint and vacuum start no chmod, ls, stat or readlink process") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_forks").toString
-    val (pRoot, mRoot) = (s"$tmp/p", s"$tmp/m")
+    val (pRoot, mRoot, lRoot) = (s"$tmp/p", s"$tmp/m", s"$tmp/lex")
+    def docs(ids: Range) = ids.map(i => (i.toLong, s"alpha beta w$i gamma")).toDF("doc_id", "text")
+    graft.operators.LexIndex.build(spark, lRoot, docs(0 until 6))
     def rows(ids: Range, part: String) = ids.map(i => (i.toLong, part, i * 1.5)).toDF("id", "bucket", "qty")
     // warm write, then take the merge table to v8 so the recorded
     // merge and append land v9 and the checkpointing v10
@@ -84,6 +86,8 @@ class LocalFsSpec extends AnyFunSuite {
         VersionedTable.merge(spark, mRoot, rows(0 until 2, "b"), Seq("id"))
         VersionedTable.append(spark, mRoot, rows(20 until 21, "c"), 9L)
         VersionedTable.vacuum(spark, mRoot, keepLast = 1)
+        // three table commits, then the manifest flip
+        graft.operators.LexIndex.ingest(spark, lRoot, docs(6 until 9))
         rec.stop()
         val dump = Files.createTempFile("graft_forks", ".jfr")
         rec.dump(dump)
@@ -95,6 +99,8 @@ class LocalFsSpec extends AnyFunSuite {
     assert(VersionedTable.currentVersion(spark, mRoot).contains(10L))
     assert(Files.exists(Paths.get(s"$mRoot/_log/v00000010.checkpoint")))
     assert(VersionedTable.read(spark, mRoot).count() == 10)
+    assert(graft.operators.LexIndex.probe(spark, lRoot,
+      Seq((100L, "w7")).toDF("doc_id", "text")).collect().map(_.getAs[Long]("doc_id")).contains(7L))
     val forbidden = Set("chmod", "ls", "stat", "readlink")
     val forks = starts.filter(c => forbidden(c.trim.split("\\s+").head.split('/').last))
     assert(forks.size == 0, s"of ${starts.size} process starts, e.g. ${forks.take(3).mkString("; ")}")
