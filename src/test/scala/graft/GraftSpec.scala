@@ -3593,6 +3593,113 @@ class GraftSpec extends AnyFunSuite {
     assert(got == exp && got.nonEmpty)
   }
 
+  /** Root-relative dirs the graft scan under `df` keeps for its pushed
+    * filters, asked of the scan's own file index (planned, not run). */
+  private def keptDirs(root: String, df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val plan = df.queryExecution.executedPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(fail(s"no file scan in\n$plan"))
+    val base = new org.apache.hadoop.fs.Path(root).toUri.getPath + "/"
+    scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+      .flatMap(_.files).map(_.getPath.getParent.toUri.getPath.stripPrefix(base)).toSet
+  }
+
+  test("index skipping, numeric range: keeps exactly the dirs whose [min, max] meets the range") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_ixnum").toString + "/t"
+    // four dirs holding the disjoint id bands [0,100) .. [300,400)
+    var v = VersionedTable.commit(spark, root, spark.range(0, 100).toDF("id"), -1L)
+    (1 until 4).foreach(i =>
+      v = VersionedTable.append(spark, root, spark.range(i * 100, i * 100 + 100).toDF("id"), v))
+    DataSkipping.ensureStats(spark, root, v, Seq("id"))
+    val dirs = VersionedTable.dirsOf(spark, root, v)
+    Seq((150L, 220L) -> Set(1, 2), (0L, 0L) -> Set(0), (99L, 100L) -> Set(0, 1),
+        (400L, 900L) -> Set.empty[Int], (-50L, 1000L) -> Set(0, 1, 2, 3)).foreach {
+      case ((lo, hi), want) =>
+        val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("id").between(lo, hi)))
+        assert(kept == DataSkipping.prunedDirs(spark, root, "id", lo, hi, Some(v)).toSet)
+        assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
+    }
+  }
+
+  test("index skipping, string range: truncated >32-char maxes and a U+FFFF tail stay valid bounds") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    def chain(tag: String, parts: Seq[Seq[String]]): (String, Seq[String]) = {
+      val root = java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+      var v = VersionedTable.commit(spark, root, parts.head.toDF("k"), -1L)
+      parts.tail.foreach(p => v = VersionedTable.append(spark, root, p.toDF("k"), v))
+      DataSkipping.ensureStatsAuto(spark, root, v, Seq("k"), VersionedTable.read(spark, root).schema)
+      root -> VersionedTable.dirsOf(spark, root, v)
+    }
+    def check(root: String, dirs: Seq[String], lo: String, hi: String, want: Set[Int]): Unit = {
+      val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("k").between(lo, hi)))
+      assert(kept == DataSkipping.prunedDirsString(spark, root, "k", lo, hi).toSet)
+      assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
+    }
+    val (days, dayDirs) = chain("graft_ixstr", (1 to 3).map(d => Seq(s"2024-01-0$d")))
+    check(days, dayDirs, "2024-01-02", "2024-01-02", Set(1))
+    check(days, dayDirs, "2024-01-02", "2024-01-03", Set(1, 2))
+    check(days, dayDirs, "2023-12-01", "2024-01-01", Set(0))
+    check(days, dayDirs, "2025-01-01", "2025-12-31", Set.empty)
+    // >32 chars: the first dir's max is stored truncated (bumped past
+    // its prefix), which must still cover its own values
+    val longA = "a" * 40 + "early"; val longB = "a" * 40 + "zlate"
+    val (long, longDirs) = chain("graft_ixstr2", Seq(Seq(longA, longB), Seq("b" * 40 + "x")))
+    check(long, longDirs, longA, longA, Set(0))
+    check(long, longDirs, longB, longB, Set(0))
+    check(long, longDirs, "b" * 40, "c", Set(1))
+    // the max continues with U+FFFF past the prefix: prefix + U+FFFF
+    // would sort below it, so only the bumped bound keeps the dir
+    val evil = "a" * 32 + "￿" + "x"
+    val (ev, evDirs) = chain("graft_ixstr3", Seq(Seq(evil), Seq("b" * 33)))
+    check(ev, evDirs, evil, evil, Set(0))
+  }
+
+  test("index skipping, bloom equality: a point probe keeps the holding dir, range stats alone keep all") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_ixbloom").toString + "/t"
+    // dir i holds k % 8 == i over 0..7999: every [min, max] spans the domain
+    def mk(i: Int) = spark.range(0, 8000).toDF("k").filter(col("k") % 8 === i)
+    var v = VersionedTable.commit(spark, root, mk(0), -1L)
+    (1 until 8).foreach(i => v = VersionedTable.append(spark, root, mk(i), v))
+    val dirs = VersionedTable.dirsOf(spark, root, v)
+    def probe(k: Long) = keptDirs(root, VersionedTable.read(spark, root).filter(col("k") === k))
+    DataSkipping.ensureStats(spark, root, v, Seq("k"))
+    assert(probe(4437L) == dirs.toSet, "range stats pruned an interleaved layout")
+    DataSkipping.ensureBloom(spark, root, v, "k")
+    Seq(4437L -> Set(5), 1777L -> Set(1), 123456789L -> Set.empty[Int]).foreach { case (k, want) =>
+      val kept = probe(k)
+      assert(kept == DataSkipping.prunedDirsBloom(spark, root, "k", k, Some(v)).toSet)
+      assert(kept == want.map(dirs), s"k = $k kept $kept")
+    }
+  }
+
+  test("index skipping: all-null and pre-column dirs carry the NaN sentinel and are always kept") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_ixnan").toString + "/t"
+    def band(i: Int) = spark.range(i * 100, i * 100 + 100).toDF("id")
+    // dir 0 predates x; dir 2's x is all null; dirs 1 and 3 hold x = id
+    var v = VersionedTable.commit(spark, root, band(0), -1L)
+    v = VersionedTable.append(spark, root, band(1).withColumn("x", col("id")), v)
+    v = VersionedTable.append(spark, root, band(2).withColumn("x", lit(null).cast("long")), v)
+    v = VersionedTable.append(spark, root, band(3).withColumn("x", col("id")), v)
+    val stats = DataSkipping.ensureStats(spark, root, v, Seq("x"))
+    val dirs = VersionedTable.dirsOf(spark, root, v)
+    assert(Seq(0, 2).forall(i => stats(dirs(i))("x")._1.isNaN), s"sentinels missing: $stats")
+    Seq((150L, 160L) -> Set(0, 1, 2), (500L, 600L) -> Set(0, 2), (0L, 1000L) -> Set(0, 1, 2, 3)).foreach {
+      case ((lo, hi), want) =>
+        val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("x").between(lo, hi)))
+        assert(kept == DataSkipping.prunedDirs(spark, root, "x", lo, hi, Some(v)).toSet)
+        assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
+    }
+  }
+
   test("MaterializedAgg.applyChangeFeedMax: max maintained from the feed; only retracted-max groups rescan") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
