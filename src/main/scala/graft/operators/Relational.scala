@@ -1863,11 +1863,9 @@ object Relational {
     * `spark.read.format("graft")`: the pushed-down `l_quantity >= 40`
     * reaches [[graft.sources.GraftFileIndex]], which opens 1 of the 3
     * dirs (min/max sidecar pruning, asserted in GraftSourceSpec), and
-    * the parquet reader gets the same filter for row-group pruning.
-    * Every earlier skipping row (q02-style readWhere) calls the
-    * pruning API explicitly; this row proves the AUTOMATIC path — at
-    * 100 TB the difference between an engine feature and a library
-    * convention users must remember to invoke. */
+    * the parquet reader gets the same filter for row-group pruning —
+    * skipping as an engine feature of every filtered read, not an API
+    * users must remember to invoke. */
   def lakeScanPruned(lineitem: DataFrame): DataFrame = {
     val spark = lineitem.sparkSession
     val root =

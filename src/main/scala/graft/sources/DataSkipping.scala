@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** File-level DATA SKIPPING for [[VersionedTable]] — the per-file
   * min/max stats pruning a lakehouse read path lives on (delta-rs
@@ -9,9 +11,12 @@ import org.apache.spark.sql.functions._
   * predicate-pushdown scans lean on them:
   * services/workers/tasks/update_stock_metadata.py:195-291): per-dir
   * column statistics are computed ONCE per (version, column), cached
-  * as a sidecar next to the commit file, and a range read opens only
-  * the dirs whose [min, max] intersects the predicate — IO scales
-  * with the data that can match, not the table.
+  * as a sidecar next to the commit file, and every read of the table
+  * ([[GraftFileIndex]], under `VersionedTable.read(...).filter(...)`
+  * and `format("graft")` alike) opens only the dirs whose [min, max]
+  * can meet its pushed predicates — IO scales with the data that can
+  * match, not the table. This object builds the sidecars; the index
+  * only consumes them.
   *
   * Skipping only pays when the layout CLUSTERS values — stats over a
   * random layout span everything and prune nothing. [[zOrderCommit]]
@@ -26,23 +31,25 @@ import org.apache.spark.sql.functions._
   * Numeric stats cast to double; STRING stats are binary-collation
   * min/max truncated Delta-style to a [[StringStatPrefix]]-char
   * prefix — the stored min prefix is a valid lower bound as-is, and
-  * a truncated max gets `￿` appended so every string sharing the
-  * prefix stays under it (the standard tie-upper-bound trick;
-  * surrogate-pair edge cases are out of scope and only cost pruning,
-  * never correctness, because bounds only ever widen).
+  * a truncated max has its last incrementable character bumped one
+  * code point, so every string sharing the prefix stays under it.
+  * Spark computes the bounds in UTF8_BINARY order and the index
+  * compares in Java UTF-16 order: identical for BMP text (keys,
+  * tickers, dates, record types), while supplementary-plane
+  * characters near a bound are out of scope.
   *
   * The stats build is one job over ONLY the dirs that lack entries
   * for the requested columns (an append-then-read computes stats for
   * the ONE new dir, not the table), grouped by parent dir; its
   * collected result is one row per dir — bounded by the layout, never
   * by data. The sidecar republish is atomic (temp + rename); a lost
-  * race just means the next reader recomputes into the cache again.
+  * race just means the next build recomputes into the cache again.
   */
 object DataSkipping {
 
   /** Times a stats sidecar was actually computed (not served from
-    * cache) — spec evidence that repeated pruned reads are IO-free
-    * on the stats side. */
+    * cache) — spec evidence that a repeated build over covered
+    * columns is IO-free. */
   @volatile var statsBuilds: Long = 0L
 
   /** Dirs the most recent stats build actually scanned — spec
@@ -234,57 +241,6 @@ object DataSkipping {
       rel -> cs.collect { case (c, NumStat(mn, mx)) => c -> (mn, mx) }
     }
 
-  /** The dirs of `version` a [lo, hi] predicate on `column` can touch
-    * — the skipping decision itself, exposed so callers (and specs)
-    * can see exactly what a pruned read opens. Dirs without stats for
-    * the column are kept (no stats never means no data). */
-  def prunedDirs(spark: SparkSession, root: String, column: String,
-                 lo: Double, hi: Double, version: Option[Long] = None): Seq[String] = {
-    val v = version.orElse(VersionedTable.currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val stats = ensureStatsTyped(spark, root, v, Seq(column), Nil)
-    VersionedTable.dirsOf(spark, root, v).filter { rel =>
-      stats.get(rel).flatMap(_.get(column)) match {
-        case Some(NumStat(mn, mx)) => !(mx < lo || mn > hi)
-        case _ => true
-      }
-    }
-  }
-
-  /** [[prunedDirs]] for a STRING range predicate. Collation is
-    * binary: Spark computes the bounds in UTF8_BINARY order and the
-    * pruning compare here is Java UTF-16 order — identical for BMP
-    * text; strings with supplementary-plane characters near a bound
-    * can disagree between the two orders, so this path is documented
-    * for BMP data (keys, tickers, dates, record types — the corpus's
-    * string predicates), not emoji-boundary ranges. Truncation and
-    * sentinel rules are identical to the numeric path. */
-  def prunedDirsString(spark: SparkSession, root: String, column: String,
-                       lo: String, hi: String, version: Option[Long] = None): Seq[String] = {
-    val v = version.orElse(VersionedTable.currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val stats = ensureStatsTyped(spark, root, v, Nil, Seq(column))
-    VersionedTable.dirsOf(spark, root, v).filter { rel =>
-      stats.get(rel).flatMap(_.get(column)) match {
-        case Some(StrStat(mn, mx)) => !(mx.compareTo(lo) < 0 || mn.compareTo(hi) > 0)
-        case _ => true
-      }
-    }
-  }
-
-  /** Range read with file-level skipping: opens only [[prunedDirs]],
-    * then applies the row-level predicate — by construction equal to
-    * `read(root).filter(column between lo and hi)` (spec-asserted),
-    * with IO proportional to the dirs that can match. */
-  def readWhere(spark: SparkSession, root: String, column: String,
-                lo: Double, hi: Double): DataFrame = {
-    val v = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val pred = col(column).cast("double").between(lo, hi)
-    VersionedTable.readDirs(spark, root, v, prunedDirs(spark, root, column, lo, hi, Some(v)))
-      .filter(pred)
-  }
-
   /** Morton interleave of two `bits`-bit rank columns (a gets the odd
     * bits) — plain codegen'd integer arithmetic, no UDF. */
   private def interleave(a: Column, b: Column, bits: Int): Column =
@@ -409,18 +365,6 @@ object DataSkipping {
     v
   }
 
-  /** [[readWhere]] for a STRING range: opens only
-    * [[prunedDirsString]], then applies the row-level predicate — by
-    * construction equal to the unpruned filter (spec-asserted). */
-  def readWhereString(spark: SparkSession, root: String, column: String,
-                      lo: String, hi: String): DataFrame = {
-    val v = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val pred = col(column).cast("string").between(lo, hi)
-    VersionedTable.readDirs(spark, root, v, prunedDirsString(spark, root, column, lo, hi, Some(v)))
-      .filter(pred)
-  }
-
   /** Dirs the most recent [[mergeSkipping]] rewrote / carried — spec
     * evidence that the merge boundary is file-level: a narrow batch
     * against a clustered table rewrites the intersecting dirs only. */
@@ -443,8 +387,7 @@ object DataSkipping {
     *
     * Contracts, stated honestly:
     *  - `statKey` must be one of `keys` and numeric-comparable (the
-    *    pruning compare casts to double — the same domain rule as
-    *    [[prunedDirs]]).
+    *    batch range and the dir bounds compare as doubles).
     *  - the table's dirs must be KEY-DISJOINT for the merge keys (each
     *    key lives in one dir): true of tables built by merges,
     *    clustering commits of merged snapshots, and appends of
@@ -484,7 +427,13 @@ object DataSkipping {
           return VersionedTable.commit(spark, root,
             graft.operators.Relational.mergeUpsert(src.limit(0), src, keys, tb),
             base)
-        val touched = prunedDirs(spark, root, statKey, lo, hi, Some(base)).toSet
+        // the index consumes stats and never builds them: build (or
+        // inherit) the base's bounds for statKey first
+        ensureStatsTyped(spark, root, base, Seq(statKey), Nil)
+        val k = AttributeReference(statKey, DoubleType)()
+        val touched = VersionedTable.fileIndex(spark, root, base)
+          .keptRels(Seq(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))))
+          .toSet
         val carried = VersionedTable.entriesOf(spark, root, base)
           .filterNot(e => touched.contains(e.rel))
         lastMergeRewrote = touched.size
@@ -733,42 +682,6 @@ object DataSkipping {
       else readable.filterNot(built.contains)
         .map(_ -> BloomFilter.create(BloomMinItems, BloomFpp)).toMap
     built ++ empties
-  }
-
-  /** The dirs of `version` an equality probe `column = value` can
-    * touch, by bloom membership. Dirs without a filter are kept (the
-    * no-stats-never-means-no-data rule). */
-  def prunedDirsBloom(spark: SparkSession, root: String, column: String,
-                      value: Any, version: Option[Long] = None): Seq[String] = {
-    val v = version.orElse(VersionedTable.currentVersion(spark, root)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val blooms = ensureBloom(spark, root, v, column)
-    VersionedTable.dirsOf(spark, root, v).filter { rel =>
-      blooms.get(rel) match {
-        case Some(bf) => value match {
-          case s: String => bf.mightContainString(s)
-          case n: Long => bf.mightContainLong(n)
-          case n: Int => bf.mightContainLong(n.toLong)
-          case n: Short => bf.mightContainLong(n.toLong)
-          case n: Byte => bf.mightContainLong(n.toLong)
-          case other => bf.mightContain(other)
-        }
-        case None => true
-      }
-    }
-  }
-
-  /** Point-lookup read with bloom skipping: opens only
-    * [[prunedDirsBloom]], then applies the row predicate — equal to
-    * `read(root).filter(column = value)` by the no-false-negative
-    * guarantee (spec-asserted). */
-  def readWhereEquals(spark: SparkSession, root: String, column: String,
-                      value: Any): DataFrame = {
-    val v = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val pred = col(column) === lit(value)
-    VersionedTable.readDirs(spark, root, v, prunedDirsBloom(spark, root, column, value, Some(v)))
-      .filter(pred)
   }
 
   /** Re-cluster the CURRENT version (OPTIMIZE): plain appends land as

@@ -27,17 +27,15 @@ import org.apache.spark.sql.SaveMode
   * codegen'd columnar scan, filters pushed to the parquet reader,
   * column pruning), EXCEPT the file listing consults the table's
   * stats/bloom sidecars against the pushed predicates — automatic
-  * file-level skipping inside any query shape, no explicit
-  * `DataSkipping.readWhere` call. This is the architecture Delta
-  * Lake ships on Spark (log-backed file index under an ordinary
-  * relation), rebuilt on this repo's commit log.
+  * file-level skipping inside any query shape. This is the
+  * architecture Delta Lake ships on Spark (log-backed file index
+  * under an ordinary relation), rebuilt on this repo's commit log.
   *
   * The streaming source reads the COMMIT LOG, not the directory tree
-  * (version offsets, committed dirs only) — closing the staged-dir
-  * races the docstring of [[VersionedTable.streamAppends]] has to
-  * disclaim: an uncommitted or lost-race dir is simply never listed,
-  * and a batch is reproducible from its (start, end] version range
-  * alone. The sink appends each micro-batch with a `#txn` marker in
+  * (version offsets, committed dirs and their logged files only): an
+  * uncommitted or lost-race dir, or a file no commit names, is never
+  * delivered, and a batch is reproducible from its (start, end]
+  * version range alone. The sink appends each micro-batch with a `#txn` marker in
   * the same atomic commit (Delta's txnAppId/txnVersion), so a
   * restarted query skips replayed batches instead of double-writing.
   *
@@ -243,12 +241,17 @@ object GraftDataSource {
     * of the version-offset streams. A commit that drops prior entries
     * (merge/compact/restore) fails the stream, or with
     * `skipChangeCommits` is skipped whole: its adds re-package rows
-    * already delivered. */
+    * already delivered. Each commit file is read once: the walk
+    * carries a commit's dirs forward as its successor's predecessor
+    * set, so (startV, endV] opens endV - startV + 1 commits (one
+    * fewer from the start of the log). */
   private[sources] def addedDirs(spark: SparkSession, root: String, startV: Long,
-                                 endV: Long, skipChangeCommits: Boolean): Seq[VersionedTable.Entry] =
-    (math.max(0L, startV + 1L) to endV).flatMap { v =>
-      val prev = if (v == 0) Set.empty[String] else VersionedTable.dirsOf(spark, root, v - 1).toSet
-      val cur = VersionedTable.entriesOf(spark, root, v)
+                                 endV: Long, skipChangeCommits: Boolean): Seq[VersionedTable.Entry] = {
+    val first = math.max(0L, startV + 1L)
+    val commits = (first to endV).map(v => v -> VersionedTable.entriesOf(spark, root, v))
+    val base = if (first == 0 || commits.isEmpty) Nil else VersionedTable.dirsOf(spark, root, first - 1)
+    commits.zip(base +: commits.map(_._2.map(_.rel))).flatMap { case ((v, cur), before) =>
+      val prev = before.toSet
       val removed = prev -- cur.map(_.rel)
       if (removed.isEmpty) cur.filterNot(e => prev(e.rel))
       else if (skipChangeCommits) Nil
@@ -259,6 +262,7 @@ object GraftDataSource {
           "commits (later appends still stream), or consume the " +
           "change feed (readChangeFeed / graft_table_changes) for CDC semantics.")
     }
+  }
 
   private[sources] def headSchema(spark: SparkSession, root: String): StructType =
     VersionedTable.schemaOf(spark, root, VersionedTable.headVersion(spark, root))

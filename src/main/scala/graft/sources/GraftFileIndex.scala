@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `listFiles`; this index answers with ONLY the data dirs whose
   * min/max (and, for equality probes, bloom) sidecar stats can
   * possibly match — so file skipping happens automatically inside any
-  * plan that reads the table, with no explicit `readWhere` call. The
+  * plan that reads the table; [[keptRels]] makes that decision. The
   * same consume-what-the-writers-left rule as Delta: a scan never
   * builds stats (reads must not mutate the log); dirs without stats
   * for a referenced column are always kept (no stats never means no
@@ -118,9 +118,7 @@ final class GraftFileIndex(spark: SparkSession, private val root: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keep =
-      if (dataFilters.isEmpty) rels
-      else rels.filter(rel => dataFilters.forall(f => dirMayMatch(rel, f)))
+    val keep = keptRels(dataFilters)
     GraftFileIndex.lastDirsTotal = rels.size
     GraftFileIndex.lastDirsKept = keep.size
     val files = keep.toArray.flatMap(filesByRel.getOrElse(_, Array.empty[FileStatus]))
@@ -128,6 +126,12 @@ final class GraftFileIndex(spark: SparkSession, private val root: String,
   }
 
   // ── dir-level predicate evaluation ────────────────────────────────
+
+  /** The dirs that may hold a row satisfying every conjunct of
+    * `filters` — the skipping decision behind every scan and
+    * [[DataSkipping.mergeSkipping]]'s choice of dirs to rewrite. */
+  private[sources] def keptRels(filters: Seq[Expression]): Seq[String] =
+    rels.filter(rel => filters.forall(f => dirMayMatch(rel, f)))
 
   /** true unless the sidecar PROVES `rel` holds no row satisfying `e`. */
   private def dirMayMatch(rel: String, e: Expression): Boolean = e match {

@@ -275,8 +275,8 @@ object VersionedTable {
     currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
 
-  /** Root-relative data dirs of a version — the read-only view the
-    * stats/data-skipping layer ([[DataSkipping]]) prunes over. */
+  /** Root-relative data dirs of a version — the set the stats and
+    * bloom sidecar builds ([[DataSkipping]]) cover. */
   private[graft] def dirsOf(spark: SparkSession, root: String, v: Long): Seq[String] =
     entriesOf(spark, root, v).map(_.rel)
 
@@ -429,15 +429,22 @@ object VersionedTable {
   }
 
   /** A read of only the dirs `rels` of version `v`, with the version's
-    * logged schema — the dir-subset read [[DataSkipping]]'s pruned
-    * reads, stats builds and stats-pruned merges take. No `rels` is an
-    * empty frame of that schema. */
+    * logged schema — the dir-subset read [[DataSkipping]]'s stats
+    * builds and stats-pruned merges take. No `rels` is an empty frame
+    * of that schema. */
   private[graft] def readDirs(spark: SparkSession, root: String, v: Long,
                               rels: Seq[String]): DataFrame = {
     val c = commitOf(spark, root, v)
     val want = rels.toSet
     spark.baseRelationToDataFrame(
       relationOver(spark, root, v, c, c.entries.filter(e => want(e.rel))))
+  }
+
+  /** The file index over every dir of version `v` — the pruning a
+    * read of `v` applies, for callers choosing dirs without a scan. */
+  private[graft] def fileIndex(spark: SparkSession, root: String, v: Long): GraftFileIndex = {
+    val c = commitOf(spark, root, v)
+    new GraftFileIndex(spark, root, v, c.entries, c.partCol)
   }
 
   private def relationOver(spark: SparkSession, root: String, v: Long, c: Commit,
@@ -614,6 +621,20 @@ object VersionedTable {
       throw new java.io.FileNotFoundException(
         s"no version committed at or before $tsMillis at $root")))
 
+  /** STREAMING reads of the table's appends — the Delta-streaming-
+    * source capability (a versioned table doubles as a stream of its
+    * appends): the log-fed `readStream.format("graft")` source
+    * ([[GraftStreamSource]]). Offsets are committed versions, and each
+    * micro-batch reads the files the commits in its version range
+    * logged, so an uncommitted dir or a file no commit names is never
+    * delivered, and each consumer tracks its offset in its own
+    * checkpoint with no coordination with writers. A history with a
+    * rewriting commit ([[merge]], [[compact]], [[restore]]) fails the
+    * stream loudly at that version; consume the change feed for
+    * non-append workloads. */
+  def streamAppends(spark: SparkSession, root: String): DataFrame =
+    spark.readStream.format("graft").load(root)
+
   /** Fold the current version's dir list into a single full snapshot
     * — commits a NEW version (history stays time-travelable until
     * vacuum). The maintenance pass that bounds small-file growth
@@ -621,74 +642,6 @@ object VersionedTable {
     * snapshot — on a partition-native table use
     * [[compactPartitioned]] instead, or the partition annotations
     * (and with them [[mergePartitioned]]) are lost. */
-  /** STREAMING reads from an append-only table — the Delta-streaming-
-    * source capability (a versioned table doubles as a stream of its
-    * appends), realized Spark-first by pointing the built-in FILE
-    * streaming source at the table's data dirs: the file source's own
-    * seen-files log gives exactly-once delivery per file, and this
-    * table's append protocol makes that sufficient —
-    *
-    *  - data dirs are IMMUTABLE (no file is ever rewritten in place),
-    *  - an append's staged dir is never orphaned: a lost publish race
-    *    republishes the SAME staged dir ([[appendRebase]]), so every
-    *    data file an append writes belongs to exactly one eventual
-    *    commit.
-    *
-    * Contract, stated honestly (Delta's streaming source has the same
-    * default restriction): the table must be APPEND-ONLY from the
-    * stream's start point. [[merge]]/[[compact]]/[[restore]] publish
-    * new dirs holding already-delivered rows (re-delivery), and a
-    * plain [[append]] (not [[appendRebase]]) that LOSES a race deletes
-    * its staged dir — a listing in that window could deliver phantom
-    * rows. Non-append workloads should consume the CHANGE FEED through
-    * [[MaterializedAgg.applyChangeFeed]]'s loop instead. Readers also
-    * see a dir's files marginally before its commit publishes (bounded
-    * by the staging-to-publish window) — acceptable for feeds, not for
-    * time-travel semantics.
-    *
-    * At 100 TB this is the ingest fan-out shape: one landed table,
-    * many downstream streaming consumers, each tracking its own file
-    * offset in its own checkpoint — no coordination with writers. */
-  /** True iff every commit in the table's log carries every entry of
-    * its predecessor forward — the append-only property
-    * [[streamAppends]]'s delivery contract depends on. Merge, compact
-    * and restore all publish heads that DROP (or re-reference) prior
-    * entries, so they fail this containment check; appends (scoped or
-    * not, rebased or not) always pass. Cost: one log walk, entry
-    * lists are metadata-sized. */
-  def appendOnlyHistory(spark: SparkSession, root: String): Boolean = {
-    val head = currentVersion(spark, root).getOrElse(return true)
-    (1L to head).forall { v =>
-      val prev = entriesOf(spark, root, v - 1).map(_.line).toSet
-      prev.subsetOf(entriesOf(spark, root, v).map(_.line).toSet)
-    }
-  }
-
-  def streamAppends(spark: SparkSession, root: String): DataFrame = {
-    val head = headVersion(spark, root)
-    // the docstring's append-only restriction, DETECTED at stream
-    // construction rather than trusted: a table whose history already
-    // violates it gets a loud warning (delivery may duplicate; a
-    // lost plain-append race in flight can surface phantom rows) —
-    // such workloads should consume the change feed instead
-    if (!appendOnlyHistory(spark, root))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"streamAppends($root): table history contains non-append " +
-          "commits (merge/compact/restore); streaming delivery may " +
-          "re-deliver rows — consume the change feed for non-append " +
-          "workloads")
-    val schema = schemaOf(spark, root, head)
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      // partition-scoped appends nest one level deeper
-      // (data/<parent>/p=<val>/...); partition values are also stored
-      // IN the files (stagePartitions writes full rows), so recursive
-      // lookup loses nothing
-      .option("recursiveFileLookup", "true")
-      .parquet(s"$root/data/*")
-  }
-
   def compact(spark: SparkSession, root: String): Long = {
     val base = headVersion(spark, root)
     commit(spark, root, readAsOf(spark, root, base), base)

@@ -170,15 +170,18 @@ object Demo {
     // 13. DATA SKIPPING: z-order the order facts by (custkey, total),
     //     then range-read each column — both prune dirs, the full scan
     //     doesn't
-    import graft.sources.DataSkipping
+    import graft.sources.{DataSkipping, GraftFileIndex}
+    // the dirs a filtered read's scan opens, from the file index
+    def dirsKept(df: org.apache.spark.sql.DataFrame): Int = { df.count(); GraftFileIndex.lastDirsKept }
     val zRoot = s"$work/versioned/zorders"
     DataSkipping.zOrderCommit(spark, zRoot, rawOrders.select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
       "o_custkey", "o_totalprice", nDirs = 8, base = -1L)
-    val allDirs = graft.sources.VersionedTable
-      .dirsOf(spark, zRoot, 0L).size
-    val custDirs = DataSkipping.prunedDirs(spark, zRoot, "o_custkey", 0, 50).size
-    val priceDirs = DataSkipping.prunedDirs(spark, zRoot, "o_totalprice", 0, 20000).size
+    val allDirs = VersionedTable.dirsOf(spark, zRoot, 0L).size
+    val custDirs = dirsKept(VersionedTable.read(spark, zRoot)
+      .filter(col("o_custkey").between(0, 50)))
+    val priceDirs = dirsKept(VersionedTable.read(spark, zRoot)
+      .filter(col("o_totalprice").between(0, 20000)))
     println(s"13. data skipping: custkey range opens $custDirs/$allDirs dirs, " +
       s"totalprice range opens $priceDirs/$allDirs — either column prunes under z-order")
 
@@ -192,7 +195,8 @@ object Demo {
     VersionedTable.append(spark, zRoot, zAppend, 0L)
     val dv = DataSkipping.reclusterDelta(spark, zRoot, "o_custkey", "o_totalprice", nDirs = 4)
     val dirsNow = VersionedTable.dirsOf(spark, zRoot, dv).size
-    val custDirs2 = DataSkipping.prunedDirs(spark, zRoot, "o_custkey", 0, 50, Some(dv)).size
+    val custDirs2 = dirsKept(VersionedTable.readAsOf(spark, zRoot, dv)
+      .filter(col("o_custkey").between(0, 50)))
     println(s"14. optimize tiers: delta recluster v$dv scanned " +
       s"${DataSkipping.lastStatsDirsScanned} new dir(s) for stats, " +
       s"custkey range now opens $custDirs2/$dirsNow dirs across generations")
@@ -210,8 +214,10 @@ object Demo {
     sv = VersionedTable.append(spark, sRoot,
       rawOrders.orderBy(col("o_orderkey")).limit(100)
         .withColumn("day", lit("2024-01-03")), sv)
-    val dayDirs = DataSkipping.prunedDirsString(spark, sRoot, "day",
-      "2024-01-02", "2024-01-02").size
+    DataSkipping.ensureStatsAuto(spark, sRoot, sv, Seq("day"),
+      VersionedTable.schemaOf(spark, sRoot, sv))
+    val dayDirs = dirsKept(VersionedTable.read(spark, sRoot)
+      .filter(col("day").between("2024-01-02", "2024-01-02")))
     println(s"14b. string skipping: one-day range opens $dayDirs/3 dirs " +
       "(min/max string stats on the append chain)")
 
@@ -365,11 +371,12 @@ object Demo {
     // would sit on the dir minimums and let range stats prune)
     val needleKey = rawOrders.filter(col("o_orderkey") >= 1000)
       .select("o_orderkey").head.getLong(0)
-    val rangeKeptDirs = DataSkipping.prunedDirs(spark, br, "o_orderkey",
-      needleKey.toDouble, needleKey.toDouble, Some(bv)).size
-    val bloomDirs = DataSkipping.prunedDirsBloom(spark, br, "o_orderkey",
-      needleKey, Some(bv)).size
-    val hit = DataSkipping.readWhereEquals(spark, br, "o_orderkey", needleKey).count()
+    def lookup = VersionedTable.read(spark, br).filter(col("o_orderkey") === needleKey)
+    DataSkipping.ensureStats(spark, br, bv, Seq("o_orderkey"))
+    val rangeKeptDirs = dirsKept(lookup)
+    DataSkipping.ensureBloom(spark, br, bv, "o_orderkey")
+    val hit = lookup.count()
+    val bloomDirs = GraftFileIndex.lastDirsKept
     println(s"22. bloom skipping: range stats keep $rangeKeptDirs dirs for key " +
       s"$needleKey (interleaved layout), blooms keep $bloomDirs; " +
       s"lookup returned $hit row(s)")

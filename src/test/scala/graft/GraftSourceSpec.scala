@@ -774,6 +774,25 @@ class GraftSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("graft stream: a batch reads each commit of its version range once") {
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    val root = tmp("src_stream_reads")
+    var v = VersionedTable.commit(spark, root, spark.range(0, 2).toDF("id"), -1L)
+    (1 to 4).foreach(i =>
+      v = VersionedTable.append(spark, root, spark.range(i * 2L, i * 2L + 2).toDF("id"), v))
+    val src = new graft.sources.GraftStreamSource(spark, root,
+      VersionedTable.read(spark, root).schema, startingVersion = 0L, skipChangeCommits = false)
+    def commitsRead(start: Option[Long], end: Long): Seq[String] =
+      CountingFs.during(spark) { src.getBatch(start.map(LongOffset(_)), LongOffset(end)); () }
+        .opens.filter(_.endsWith(".commit"))
+    // (1, 4]: commit 1 for its dirs, then 2, 3 and 4, each once
+    val mid = commitsRead(Some(1L), 4L)
+    assert(mid.size == 4 && mid.distinct.size == 4, s"(1, 4] read $mid")
+    // from the start of the log there is no predecessor to read
+    val all = commitsRead(None, 4L)
+    assert(all.size == 5 && all.distinct.size == 5, s"(-1, 4] read $all")
+  }
+
   test("graft stream: change commits fail by default, skipChangeCommits skips them") {
     val root = tmp("src_stream_chg")
     val v0 = VersionedTable.commit(spark, root, spark.range(0, 4).toDF("id"), -1L)

@@ -1640,7 +1640,8 @@ class GraftSpec extends AnyFunSuite {
     val postingFiles = probed.inputFiles.filter(_.contains("/postings/"))
     assert(postingFiles.nonEmpty, "probe read no postings files")
     val openedBuckets = postingFiles.flatMap(
-      "__graft_p=([0-9]+)".r.findFirstMatchIn(_).map(_.group(1))).toSet
+      "/p=([0-9]+)/".r.findFirstMatchIn(_).map(_.group(1))).toSet
+    assert(openedBuckets.nonEmpty, s"no bucket dir in the postings paths: ${postingFiles.toSeq}")
     val termBuckets = qframe
       .select(explode(split(lower(col("text")), " ")).as("term"))
       .filter(length(col("term")) > 0)
@@ -2084,20 +2085,23 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("VersionedTable: streamAppends' append-only contract is detected, not just documented") {
-    import org.apache.spark.sql.functions._
     import graft.sources.VersionedTable
     val root = java.nio.file.Files.createTempDirectory("graft_aoh").toString + "/t"
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
     val v0 = VersionedTable.commit(spark, root, mk(0, 5), -1L)
     VersionedTable.append(spark, root, mk(5, 8), v0)
-    assert(VersionedTable.appendOnlyHistory(spark, root),
-      "commit + append history must pass the containment check")
+    def drain(name: String): Long = {
+      val q = VersionedTable.streamAppends(spark, root)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try { q.processAllAvailable(); spark.table(name).count() } finally q.stop()
+    }
+    assert(drain("graft_aoh_appends") == 8, "commit + append history streams every row once")
+    // a compact re-packages delivered rows: the stream fails at that
+    // version instead of re-delivering them
     VersionedTable.compact(spark, root)
-    assert(!VersionedTable.appendOnlyHistory(spark, root),
-      "a compact drops prior entries and must fail the check")
-    // streamAppends still constructs (warning, not error) — re-delivery
-    // is the documented behavior for non-append histories
-    VersionedTable.streamAppends(spark, root)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain("graft_aoh_compact"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("skipChangeCommits")), e.getMessage)
   }
 
   test("bloom skipping: a dir predating the column (merge-schema evolution) stays unpruned, not an error") {
@@ -2115,17 +2119,17 @@ class GraftSpec extends AnyFunSuite {
     val blooms = DataSkipping.ensureBloom(spark, root, head, "region")
     val dirs = VersionedTable.dirsOf(spark, root, head)
     assert(blooms.size == 1, "only the dir carrying the column gets a filter")
+    def probe(r: String) = VersionedTable.read(spark, root).filter(col("region") === r)
     // pruning keeps the filterless old dir (no-stats-never-means-no-data)
-    val kept = DataSkipping.prunedDirsBloom(spark, root, "region", "eu-1", Some(head))
-    assert(kept.toSet.size == 2 && kept.toSet == dirs.toSet,
+    val kept = keptDirs(root, probe("eu-1"))
+    assert(kept.size == 2 && kept == dirs.toSet,
       "the pre-evolution dir must always be kept")
     // a miss still prunes the dir that HAS the filter
-    val missed = DataSkipping.prunedDirsBloom(spark, root, "region", "zz-0", Some(head))
+    val missed = keptDirs(root, probe("zz-0")).toSeq
     assert(missed.size == 1 && !blooms.contains(missed.head),
       "bloom must prune the covered dir on a miss while keeping the uncovered one")
     // and the skipped read still returns the right rows
-    val got = DataSkipping.readWhereEquals(spark, root, "region", "eu-1")
-      .select(col("k")).collect().map(_.getLong(0)).toSet
+    val got = probe("eu-1").select(col("k")).collect().map(_.getLong(0)).toSet
     assert(got == Set(3L))
   }
 
@@ -2170,8 +2174,9 @@ class GraftSpec extends AnyFunSuite {
     drain()
     assert(got.size == before && got.values.forall(_ == 1L))
     // partition-scoped appends nest one dir level deeper — the feed
-    // must still see them (recursive lookup), with the partition
-    // column intact from the file bytes
+    // must still see them (each commit logs its p=<value> dirs and
+    // their files), with the partition column intact from the file
+    // bytes
     val proot = java.nio.file.Files.createTempDirectory("graft_feedp").toString
     val pck = java.nio.file.Files.createTempDirectory("graft_feedp_ck").toString
     val pdf = mk(0, 4).withColumn("pv", (col("id") % 2).cast("string"))
@@ -3113,7 +3118,7 @@ class GraftSpec extends AnyFunSuite {
   test("DataSkipping: z-order prunes on EITHER column; linear sort only on its leading one") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.sources.{DataSkipping, VersionedTable}
+    import graft.sources.{DataSkipping, GraftFileIndex, VersionedTable}
     val base = java.nio.file.Files.createTempDirectory("graft_skip").toString
     val zRoot = s"$base/z"; val linRoot = s"$base/lin"
     // x uniform, y a decorrelated permutation-ish hash of x
@@ -3124,41 +3129,47 @@ class GraftSpec extends AnyFunSuite {
     VersionedTable.commitPartitioned(spark, linRoot,
       df.withColumn("zb", floor(col("x") / 625).cast("string")), "zb", -1L)
     // write-time stats: the z-order write published its sidecar, so
-    // the FIRST pruned read triggers no stats build
+    // asking for its columns' stats triggers no build
     val builds0 = DataSkipping.statsBuilds
-    val zx = DataSkipping.prunedDirs(spark, zRoot, "x", 0, 624).size
-    val zy = DataSkipping.prunedDirs(spark, zRoot, "y", 0, 624).size
+    DataSkipping.ensureStats(spark, zRoot, 0L, Seq("x", "y"))
     assert(DataSkipping.statsBuilds == builds0,
       "first read after a z-order write rebuilt stats the write already published")
-    val lx = DataSkipping.prunedDirs(spark, linRoot, "x", 0, 624).size
-    val ly = DataSkipping.prunedDirs(spark, linRoot, "y", 0, 624).size
+    def range(root: String, c: String, lo: Long, hi: Long) =
+      VersionedTable.read(spark, root).filter(col(c).between(lo, hi))
+    def opened(df: org.apache.spark.sql.DataFrame): Int = { df.count(); GraftFileIndex.lastDirsKept }
+    val zx = opened(range(zRoot, "x", 0, 624))
+    val zy = opened(range(zRoot, "y", 0, 624))
+    DataSkipping.ensureStats(spark, linRoot, 0L, Seq("x", "y"))
+    val lx = opened(range(linRoot, "x", 0, 624))
+    val ly = opened(range(linRoot, "y", 0, 624))
     assert(lx == 1, s"linear layout should be exact on its sort column, opened $lx")
     assert(ly == 16, "y is decorrelated from the linear sort — nothing should prune")
     // the z-order point: a 1/16 range on EITHER column touches ~one
     // column/row of the 4x4 Morton grid, not the whole table
     assert(zx <= 6 && zy <= 6, s"z-order opened x:$zx y:$zy of 16 dirs")
     // parity: the pruned read equals the full-scan filter exactly
-    val got = DataSkipping.readWhere(spark, zRoot, "y", 0, 624)
+    val got = range(zRoot, "y", 0, 624)
       .select("id").collect().map(_.getLong(0)).toSet
-    val exp = VersionedTable.read(spark, zRoot)
-      .filter(col("y").between(0, 624)).select("id").collect().map(_.getLong(0)).toSet
+    val exp = df.filter(col("y").between(0, 624)).select("id").collect().map(_.getLong(0)).toSet
     assert(got == exp && got.nonEmpty)
     // the pruned read's scan opens exactly the surviving dirs
-    val rw = DataSkipping.readWhere(spark, zRoot, "x", 0, 624)
-    val openedDirs = rw.inputFiles.map(_.replaceAll("/[^/]*$", "")).toSet
+    val openedDirs = keptDirs(zRoot, range(zRoot, "x", 0, 624))
     assert(openedDirs.size == zx, s"scan opened ${openedDirs.size} dirs, stats kept $zx")
     // stats are computed once per (version, column) and served from
-    // the sidecar afterwards — a different range triggers no rebuild
+    // the sidecar afterwards — reads of other ranges rebuild nothing
     val builds = DataSkipping.statsBuilds
-    DataSkipping.prunedDirs(spark, zRoot, "y", 2000, 3000)
-    DataSkipping.prunedDirs(spark, zRoot, "x", 9000, 9999)
+    opened(range(zRoot, "y", 2000, 3000))
+    opened(range(zRoot, "x", 9000, 9999))
+    DataSkipping.ensureStats(spark, zRoot, 0L, Seq("x", "y"))
     assert(DataSkipping.statsBuilds == builds, "stats sidecar was rebuilt on a cached read")
     // an out-of-range predicate opens nothing but keeps the schema
-    assert(DataSkipping.readWhere(spark, zRoot, "x", 20000, 30000).collect().isEmpty)
+    val none = range(zRoot, "x", 20000, 30000)
+    assert(none.collect().isEmpty && GraftFileIndex.lastDirsKept == 0)
+    assert(none.schema == VersionedTable.read(spark, zRoot).schema)
     // vacuum: an expired version's stats sidecar dies with its commit
     VersionedTable.commitPartitioned(spark, linRoot,
       df.withColumn("zb", floor(col("x") / 625).cast("string")), "zb", 0L)
-    DataSkipping.prunedDirs(spark, linRoot, "x", 0, 624) // builds v1 stats
+    DataSkipping.ensureStats(spark, linRoot, 1L, Seq("x")) // builds v1 stats
     assert(new java.io.File(s"$linRoot/_log/v00000000.stats").exists)
     VersionedTable.vacuum(spark, linRoot)
     assert(!new java.io.File(s"$linRoot/_log/v00000000.stats").exists,
@@ -3244,10 +3255,9 @@ class GraftSpec extends AnyFunSuite {
     // and the filters are real: every dir covered, a point probe
     // keeps its holding dir and prunes others
     assert(blooms.keySet == dirs.toSet)
-    val kept = DataSkipping.prunedDirsBloom(spark, root, "k", 1777L, Some(v))
-    assert(kept.size < dirs.size, "backfilled filters prune nothing")
-    assert(DataSkipping.readWhereEquals(spark, root, "k", 1777L)
-      .collect().map(_.getAs[Long]("payload")).toSeq == Seq(1777L * 3))
+    val needle = VersionedTable.read(spark, root).filter(col("k") === 1777L)
+    assert(keptDirs(root, needle).size < dirs.size, "backfilled filters prune nothing")
+    assert(needle.collect().map(_.getAs[Long]("payload")).toSeq == Seq(1777L * 3))
   }
 
   test("DataSkipping bloom tier: equality probes prune where min/max cannot") {
@@ -3264,36 +3274,40 @@ class GraftSpec extends AnyFunSuite {
     (1 until 8).foreach { i => v = VersionedTable.append(spark, root, mk(i), v) }
     val nDirs = VersionedTable.dirsOf(spark, root, v).size
     val probe = 4437L // lives in exactly one dir (4437 % 8 == 5)
-    assert(DataSkipping.prunedDirs(spark, root, "k", 4437, 4437).size == nDirs,
-      "range stats pruned an interleaved layout — test premise broken")
-    val kept = DataSkipping.prunedDirsBloom(spark, root, "k", probe, Some(v))
+    def needle(k: Long) = VersionedTable.read(spark, root).filter(col("k") === k)
+    // before any bloom sidecar exists the index prunes on range stats
+    // alone, and those cannot split an interleaved layout
+    DataSkipping.ensureStats(spark, root, v, Seq("k"))
+    assert(keptDirs(root, VersionedTable.read(spark, root).filter(col("k").between(4437, 4437)))
+      .size == nDirs, "range stats pruned an interleaved layout — test premise broken")
+    DataSkipping.ensureBloom(spark, root, v, "k")
+    val kept = keptDirs(root, needle(probe))
     // no false negative: the holding dir is kept; and the filter
     // actually prunes (at 1% fpp over 8 dirs, spurious keeps are
     // possible but 8 would mean the filters carry no signal)
     assert(kept.size < nDirs, s"bloom kept all $nDirs dirs")
-    val viaBloom = DataSkipping.readWhereEquals(spark, root, "k", probe).collect()
-    val full = VersionedTable.readAsOf(spark, root, v)
+    val viaBloom = needle(probe).collect()
+    val full = spark.range(0, 8000).toDF("k").withColumn("payload", col("k") * 7)
       .filter(col("k") === probe).collect()
     assert(viaBloom.map(_.toString).sorted.sameElements(full.map(_.toString).sorted))
     assert(viaBloom.length == 1 && viaBloom.head.getAs[Long]("payload") == probe * 7)
     // absent key: still zero rows through whatever dirs fpp keeps
-    assert(DataSkipping.readWhereEquals(spark, root, "k", 123456789L).collect().isEmpty)
+    assert(needle(123456789L).collect().isEmpty)
     // filters are per-dir artifacts: an append builds ONLY the new
     // dir's filter (inheritance seeds the rest), and a repeat probe
     // builds nothing
     val builds0 = DataSkipping.bloomBuilds
-    DataSkipping.prunedDirsBloom(spark, root, "k", probe, Some(v))
+    DataSkipping.ensureBloom(spark, root, v, "k")
     assert(DataSkipping.bloomBuilds == builds0, "repeat probe rebuilt bloom filters")
     v = VersionedTable.append(spark, root,
       spark.range(8000, 8100).toDF("k").withColumn("payload", col("k") * 7), v)
-    DataSkipping.prunedDirsBloom(spark, root, "k", 8050L, Some(v))
+    DataSkipping.ensureBloom(spark, root, v, "k")
     assert(DataSkipping.bloomBuilds == builds0 + 1)
     assert(DataSkipping.lastBloomDirsScanned == 1,
       s"append bloom job scanned ${DataSkipping.lastBloomDirsScanned} dirs, want 1")
-    val kept2 = DataSkipping.prunedDirsBloom(spark, root, "k", 8050L, Some(v))
+    val kept2 = keptDirs(root, needle(8050L))
     assert(kept2.nonEmpty && kept2.size < nDirs + 1)
-    assert(DataSkipping.readWhereEquals(spark, root, "k", 8050L)
-      .collect().map(_.getAs[Long]("payload")).toSeq == Seq(8050L * 7))
+    assert(needle(8050L).collect().map(_.getAs[Long]("payload")).toSeq == Seq(8050L * 7))
   }
 
   test("DataSkipping bloom: NULL-only dirs build ONCE as empty filters and prune exactly") {
@@ -3311,16 +3325,16 @@ class GraftSpec extends AnyFunSuite {
     assert(DataSkipping.bloomBuilds == builds0 + 1)
     assert(blooms.size == 2,
       "the NULL-only dir must get a (empty) sidecar entry — build-once")
-    // build-once: a repeat probe launches NO further build
-    DataSkipping.prunedDirsBloom(spark, root, "k", "key-5", Some(v))
+    // build-once: a repeat build launches NO further build
+    DataSkipping.ensureBloom(spark, root, v, "k")
     assert(DataSkipping.bloomBuilds == builds0 + 1,
       "NULL-only dir re-entered the build set on a repeat probe")
     // and the empty filter is EXACT for equality: nulls can never
     // match `k = value`, so the NULL-only dir prunes outright
-    val kept = DataSkipping.prunedDirsBloom(spark, root, "k", "key-5", Some(v))
+    val needle = graft.sources.VersionedTable.read(spark, root).filter(col("k") === "key-5")
+    val kept = keptDirs(root, needle)
     assert(kept.size == 1, s"equality probe must open only the data dir, kept $kept")
-    assert(DataSkipping.readWhereEquals(spark, root, "k", "key-5")
-      .collect().map(_.getAs[Long]("id")).toSeq == Seq(5L))
+    assert(needle.collect().map(_.getAs[Long]("id")).toSeq == Seq(5L))
   }
 
   test("DataSkipping bloom: percent-encoded partition dir names survive the grouped build") {
@@ -3336,27 +3350,34 @@ class GraftSpec extends AnyFunSuite {
     // every committed dir mapped: no crash, no dropped dir
     assert(blooms.keySet == VersionedTable.dirsOf(spark, root, v).toSet,
       s"grouped build lost dirs: ${blooms.keySet}")
-    val kept = DataSkipping.prunedDirsBloom(spark, root, "id", 3L, Some(v))
+    val needle = VersionedTable.read(spark, root).filter(org.apache.spark.sql.functions.col("id") === 3L)
+    val kept = keptDirs(root, needle)
     assert(kept.size < 3, "filters over encoded dirs prune nothing")
-    assert(DataSkipping.readWhereEquals(spark, root, "id", 3L)
-      .collect().map(_.getAs[String]("pv")).toSeq == Seq("c%d"))
+    assert(needle.collect().map(_.getAs[String]("pv")).toSeq == Seq("c%d"))
   }
 
   test("DataSkipping.recluster: appends degrade pruning; OPTIMIZE restores it") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.sources.{DataSkipping, VersionedTable}
+    import graft.sources.{DataSkipping, GraftFileIndex, VersionedTable}
     val root = java.nio.file.Files.createTempDirectory("graft_opt").toString + "/t"
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
       .withColumn("x", col("id"))
       .withColumn("y", (col("id") * 2654435761L) % 10000)
     DataSkipping.zOrderCommit(spark, root, mk(0, 8000), "x", "y", nDirs = 16, base = -1L)
-    val prunedV0 = DataSkipping.prunedDirs(spark, root, "y", 0, 624, Some(0L)).size
+    // dirs a y-range read of version `v` opens (stats built first: the
+    // index never builds them)
+    def yRange(v: Long) = {
+      DataSkipping.ensureStats(spark, root, v, Seq("y"))
+      VersionedTable.readAsOf(spark, root, v).filter(col("y").between(0, 624))
+    }
+    def opened(v: Long): Int = { yRange(v).count(); GraftFileIndex.lastDirsKept }
+    val prunedV0 = opened(0L)
     assert(prunedV0 < 16)
     // a plain append lands ONE dir whose y spans the whole space — its
     // stats can never prune it, so every y-range read now opens it too
     VersionedTable.append(spark, root, mk(8000, 10000), 0L)
-    val prunedV1 = DataSkipping.prunedDirs(spark, root, "y", 0, 624, Some(1L)).size
+    val prunedV1 = opened(1L)
     assert(prunedV1 == prunedV0 + 1, "the unclustered append should always survive pruning")
     // OPTIMIZE: one z-ordered rewrite folds the table back into tight
     // dirs as a new version; pruning recovers, parity holds
@@ -3365,11 +3386,10 @@ class GraftSpec extends AnyFunSuite {
     // repartitionByRange's sampled bounds wobble a dir either way, so
     // pin the property (a 1/16 range opens at most half the table,
     // vs 16/16 unclustered) rather than an exact grid count
-    val prunedV2 = DataSkipping.prunedDirs(spark, root, "y", 0, 624, Some(v2)).size
+    val prunedV2 = opened(v2)
     assert(prunedV2 <= 8, s"post-OPTIMIZE y-range still opens $prunedV2/16 dirs")
-    val got = DataSkipping.readWhere(spark, root, "y", 0, 624)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val exp = VersionedTable.read(spark, root)
+    val got = yRange(v2).select("id").collect().map(_.getLong(0)).toSet
+    val exp = mk(0, 10000)
       .filter(col("y").between(0, 624)).select("id").collect().map(_.getLong(0)).toSet
     assert(got == exp && got.nonEmpty)
   }
@@ -3402,10 +3422,10 @@ class GraftSpec extends AnyFunSuite {
       s"stats rescanned ${DataSkipping.lastStatsDirsScanned} dirs — inheritance broken")
     // pruning works ACROSS generations (both are tight), and the
     // pruned read equals the full filter
-    val pruned = DataSkipping.prunedDirs(spark, root, "x", 8200, 8800, Some(v2))
+    val xRange = VersionedTable.readAsOf(spark, root, v2).filter(col("x").between(8200, 8800))
+    val pruned = keptDirs(root, xRange)
     assert(pruned.size < after.size, "nothing pruned post-delta-recluster")
-    val got = DataSkipping.readWhere(spark, root, "x", 8200, 8800)
-      .select("id").collect().map(_.getLong(0)).toSet
+    val got = xRange.select("id").collect().map(_.getLong(0)).toSet
     assert(got == (8200L to 8800L).toSet)
     // no loose dirs left -> a second delta pass is a commitless no-op
     assert(DataSkipping.reclusterDelta(spark, root, "x", "y", nDirs = 4) == v2)
@@ -3493,7 +3513,7 @@ class GraftSpec extends AnyFunSuite {
     DataSkipping.zOrderCommit(spark, root, mk(0, 4000), "x", "y", nDirs = 8, base = -1L)
     VersionedTable.append(spark, root, mk(4000, 4100), 0L)
     val builds = DataSkipping.statsBuilds
-    DataSkipping.prunedDirs(spark, root, "x", 0, 100, Some(1L))
+    DataSkipping.ensureStats(spark, root, 1L, Seq("x"))
     // exactly one build, and it scanned exactly the ONE new dir: the 8
     // z-dirs' bounds came from v0's sidecar, not a table re-scan
     assert(DataSkipping.statsBuilds == builds + 1)
@@ -3514,18 +3534,24 @@ class GraftSpec extends AnyFunSuite {
     var v = VersionedTable.commit(spark, root, day(1, 50), -1L)
     v = VersionedTable.append(spark, root, day(2, 50), v)
     v = VersionedTable.append(spark, root, day(3, 50), v)
-    val keep = DataSkipping.prunedDirsString(spark, root, "day",
-      "2024-01-02", "2024-01-02", Some(v))
+    // string stats for column `c` of the table at `r` (the index
+    // prunes from them and never builds them), then a range read
+    def stats(r: String, c: String): Unit = DataSkipping.ensureStatsAuto(spark, r,
+      VersionedTable.currentVersion(spark, r).get, Seq(c), VersionedTable.read(spark, r).schema)
+    def between(r: String, c: String, lo: String, hi: String) =
+      VersionedTable.read(spark, r).filter(col(c).between(lo, hi))
+    stats(root, "day")
+    val keep = keptDirs(root, between(root, "day", "2024-01-02", "2024-01-02"))
     assert(keep.size == 1, s"day predicate opened ${keep.size}/3 dirs")
-    val got = DataSkipping.readWhereString(spark, root, "day", "2024-01-02", "2024-01-03")
+    val got = between(root, "day", "2024-01-02", "2024-01-03")
       .select("id").collect().map(_.getLong(0)).toSet
-    val exp = VersionedTable.read(spark, root)
+    val exp = (1 to 3).map(day(_, 50)).reduce(_ union _)
       .filter(col("day").between("2024-01-02", "2024-01-03"))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got == exp && got.nonEmpty)
     // disjoint range: everything pruned, schema-correct empty result
-    assert(DataSkipping.readWhereString(spark, root, "day",
-      "2025-01-01", "2025-12-31").isEmpty)
+    val disjoint = between(root, "day", "2025-01-01", "2025-12-31")
+    assert(disjoint.isEmpty && keptDirs(root, disjoint).isEmpty)
     // truncation safety: >32-char strings share a prefix; bounds are
     // widened (min-prefix + max-prefix￿), so the dir is KEPT for any
     // in-prefix range — truncation may keep extra dirs, never drops one
@@ -3533,7 +3559,8 @@ class GraftSpec extends AnyFunSuite {
     val longA = "a" * 40 + "early"; val longB = "a" * 40 + "zlate"
     VersionedTable.commit(spark, root2,
       Seq((longA, 1L), (longB, 2L)).toDF("k", "id"), -1L)
-    val got2 = DataSkipping.readWhereString(spark, root2, "k", longA, longA)
+    stats(root2, "k")
+    val got2 = between(root2, "k", longA, longA)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got2 == Set(1L))
     // the truncation killer: the real max CONTINUES with U+FFFF past
@@ -3542,7 +3569,8 @@ class GraftSpec extends AnyFunSuite {
     val root3 = java.nio.file.Files.createTempDirectory("graft_sstr3").toString + "/t"
     val evil = "a" * 32 + "￿" + "x"
     VersionedTable.commit(spark, root3, Seq((evil, 9L)).toDF("k", "id"), -1L)
-    val got3 = DataSkipping.readWhereString(spark, root3, "k", evil, evil)
+    stats(root3, "k")
+    val got3 = between(root3, "k", evil, evil)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got3 == Set(9L), "truncated max pruned a dir containing its own maximum")
   }
@@ -3562,9 +3590,10 @@ class GraftSpec extends AnyFunSuite {
     // the read side then has everything: NO stats job on first use,
     // numeric and string pruning both live
     val builds = DataSkipping.statsBuilds
-    assert(DataSkipping.prunedDirs(spark, root, "x", 1200, 1300, Some(v)).size == 1)
-    assert(DataSkipping.prunedDirsString(spark, root, "day",
-      "2024-01-02", "2024-01-02", Some(v)).size == 1)
+    val head = graft.sources.VersionedTable.readAsOf(spark, root, v)
+    DataSkipping.ensureStatsAuto(spark, root, v, Seq("x", "day"), head.schema)
+    assert(keptDirs(root, head.filter(col("x").between(1200, 1300))).size == 1)
+    assert(keptDirs(root, head.filter(col("day").between("2024-01-02", "2024-01-02"))).size == 1)
     assert(DataSkipping.statsBuilds == builds, "pruned read rebuilt write-time stats")
   }
 
@@ -3581,13 +3610,14 @@ class GraftSpec extends AnyFunSuite {
       .withColumn("amt", (col("id") * 2654435761L) % 10000)
     val root = java.nio.file.Files.createTempDirectory("graft_zstr").toString + "/t"
     val v = DataSkipping.zOrderCommit(spark, root, rows, "day", "amt", nDirs = 16, base = -1L)
-    val dayDirs = DataSkipping.prunedDirsString(spark, root, "day",
-      "2024-01-03", "2024-01-04", Some(v)).size
-    val amtDirs = DataSkipping.prunedDirs(spark, root, "amt", 0, 624, Some(v)).size
+    val days = graft.sources.VersionedTable.readAsOf(spark, root, v)
+      .filter(col("day").between("2024-01-03", "2024-01-04"))
+    val dayDirs = keptDirs(root, days).size
+    val amtDirs = keptDirs(root, graft.sources.VersionedTable.readAsOf(spark, root, v)
+      .filter(col("amt").between(0, 624))).size
     assert(dayDirs <= 8, s"day range opened $dayDirs/16 dirs — string surrogate not clustering")
     assert(amtDirs <= 8, s"amt range opened $amtDirs/16 dirs")
-    val got = DataSkipping.readWhereString(spark, root, "day", "2024-01-03", "2024-01-04")
-      .select("id").collect().map(_.getLong(0)).toSet
+    val got = days.select("id").collect().map(_.getLong(0)).toSet
     val exp = rows.filter(col("day").between("2024-01-03", "2024-01-04"))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got == exp && got.nonEmpty)
@@ -3619,7 +3649,6 @@ class GraftSpec extends AnyFunSuite {
         (400L, 900L) -> Set.empty[Int], (-50L, 1000L) -> Set(0, 1, 2, 3)).foreach {
       case ((lo, hi), want) =>
         val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("id").between(lo, hi)))
-        assert(kept == DataSkipping.prunedDirs(spark, root, "id", lo, hi, Some(v)).toSet)
         assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
     }
   }
@@ -3637,7 +3666,6 @@ class GraftSpec extends AnyFunSuite {
     }
     def check(root: String, dirs: Seq[String], lo: String, hi: String, want: Set[Int]): Unit = {
       val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("k").between(lo, hi)))
-      assert(kept == DataSkipping.prunedDirsString(spark, root, "k", lo, hi).toSet)
       assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
     }
     val (days, dayDirs) = chain("graft_ixstr", (1 to 3).map(d => Seq(s"2024-01-0$d")))
@@ -3674,7 +3702,6 @@ class GraftSpec extends AnyFunSuite {
     DataSkipping.ensureBloom(spark, root, v, "k")
     Seq(4437L -> Set(5), 1777L -> Set(1), 123456789L -> Set.empty[Int]).foreach { case (k, want) =>
       val kept = probe(k)
-      assert(kept == DataSkipping.prunedDirsBloom(spark, root, "k", k, Some(v)).toSet)
       assert(kept == want.map(dirs), s"k = $k kept $kept")
     }
   }
@@ -3695,7 +3722,6 @@ class GraftSpec extends AnyFunSuite {
     Seq((150L, 160L) -> Set(0, 1, 2), (500L, 600L) -> Set(0, 2), (0L, 1000L) -> Set(0, 1, 2, 3)).foreach {
       case ((lo, hi), want) =>
         val kept = keptDirs(root, VersionedTable.read(spark, root).filter(col("x").between(lo, hi)))
-        assert(kept == DataSkipping.prunedDirs(spark, root, "x", lo, hi, Some(v)).toSet)
         assert(kept == want.map(dirs), s"[$lo, $hi] kept $kept")
     }
   }
@@ -6676,7 +6702,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("DataSkipping's dir-subset reads are log-fed: the version's schema, no listing or footer-merge job") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit}
     import graft.sources.{DataSkipping, VersionedTable}
     val root = java.nio.file.Files.createTempDirectory("graft_dsk_log").toString + "/t"
     def wave(w: Int) = (0 until 4).map(p => ((w * 4 + p).toLong, s"p$p")).toDF("id", "part")
@@ -6691,11 +6717,13 @@ class GraftSpec extends AnyFunSuite {
     assert(jobs <= 2, s"stats build over 44 fresh dirs launched $jobs jobs")
     // a pruned read keeping only pre-evolution dirs serves the version's
     // schema, the evolved column as null
-    val got = DataSkipping.readWhere(spark, root, "id", 0, 3)
-    assert(got.schema == VersionedTable.read(spark, root).schema)
+    def ids(lo: Long, hi: Long) = VersionedTable.read(spark, root).filter(col("id").between(lo, hi))
+    val got = ids(0, 3)
+    assert(keptDirs(root, got).size == 4, "the read must keep only the first wave's dirs")
+    assert(got.schema == VersionedTable.readAsOf(spark, root, 0L).schema.add("note", "string"))
     assert(got.as[(Long, String, String)].collect().toSet ==
       (0 until 4).map(p => (p.toLong, s"p$p", null: String)).toSet)
-    assert(DataSkipping.readWhere(spark, root, "id", 100, 200).schema == got.schema)
+    assert(keptDirs(root, ids(100, 200)).isEmpty && ids(100, 200).schema == got.schema)
   }
 
   test("VecIndex: delete rewrites only the victim's cell, is idempotent, and equals an index never holding the victim") {
