@@ -428,10 +428,11 @@ object DataSkipping {
             graft.operators.Relational.mergeUpsert(src.limit(0), src, keys, tb),
             base)
         // the index consumes stats and never builds them: build (or
-        // inherit) the base's bounds for statKey first
-        ensureStatsTyped(spark, root, base, Seq(statKey), Nil)
+        // inherit) the base's bounds for statKey first, and hand the
+        // index those bounds rather than a second sidecar read
+        val stats = ensureStatsTyped(spark, root, base, Seq(statKey), Nil)
         val k = AttributeReference(statKey, DoubleType)()
-        val touched = VersionedTable.fileIndex(spark, root, base)
+        val touched = VersionedTable.fileIndex(spark, root, base, Some(stats))
           .keptRels(Seq(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))))
           .toSet
         val carried = VersionedTable.entriesOf(spark, root, base)

@@ -244,12 +244,53 @@ object GraftDataSource {
     * already delivered. Each commit file is read once: the walk
     * carries a commit's dirs forward as its successor's predecessor
     * set, so (startV, endV] opens endV - startV + 1 commits (one
-    * fewer from the start of the log). */
+    * fewer from the start of the log).
+    *
+    * A stream from the start of a log whose oldest commits [[VersionedTable.vacuum]]
+    * expired takes the oldest retained version's entries whole — that
+    * version's snapshot, as Delta's initial snapshot — then the adds
+    * after it. Any other range whose commits are expired fails: the
+    * rows it added can no longer be told from delivered ones. */
   private[sources] def addedDirs(spark: SparkSession, root: String, startV: Long,
                                  endV: Long, skipChangeCommits: Boolean): Seq[VersionedTable.Entry] = {
     val first = math.max(0L, startV + 1L)
+    if (first > endV) return Nil
+    try addedAfter(spark, root, first, endV, skipChangeCommits,
+      if (first == 0) Nil else VersionedTable.dirsOf(spark, root, first - 1))
+    catch {
+      case e: java.io.FileNotFoundException =>
+        VersionedTable.oldestVersion(spark, root) match {
+          case Some(o) if first == 0 && o > 0 && o <= endV =>
+            val snapshot = VersionedTable.entriesOf(spark, root, o)
+            snapshot ++ addedAfter(spark, root, o + 1, endV, skipChangeCommits, snapshot.map(_.rel))
+          case oldest => throw new IllegalStateException(
+            s"graft stream over $root: the commits of versions ($startV, $endV] " +
+              s"were expired by vacuum (oldest retained version: ${oldest.getOrElse("none")}), " +
+              "so the rows they added cannot be told from delivered ones. Restart " +
+              "on a fresh checkpoint, with startingVersion above the oldest retained " +
+              "version, or without it to start from that version's snapshot.", e)
+        }
+    }
+  }
+
+  /** The end version of a batch that starts after `startV`, under a
+    * `maxVersionsPerTrigger` cap. A batch from the log's start is never
+    * cut below the oldest retained version: after a vacuum its first
+    * batch is that version's snapshot ([[addedDirs]]). */
+  private[sources] def cappedEnd(spark: SparkSession, root: String, startV: Long,
+                                 head: Long, maxPerTrigger: Option[Long]): Long =
+    maxPerTrigger match {
+      case Some(m) if startV + m < head =>
+        if (startV >= 0) startV + m
+        else math.max(startV + m, VersionedTable.oldestVersion(spark, root).getOrElse(0L))
+      case _ => head
+    }
+
+  /** The adds of the commits in [first, endV], given the dirs of
+    * version first - 1. */
+  private def addedAfter(spark: SparkSession, root: String, first: Long, endV: Long,
+                         skipChangeCommits: Boolean, base: Seq[String]): Seq[VersionedTable.Entry] = {
     val commits = (first to endV).map(v => v -> VersionedTable.entriesOf(spark, root, v))
-    val base = if (first == 0 || commits.isEmpty) Nil else VersionedTable.dirsOf(spark, root, first - 1)
     commits.zip(base +: commits.map(_._2.map(_.rel))).flatMap { case ((v, cur), before) =>
       val prev = before.toSet
       val removed = prev -- cur.map(_.rel)
@@ -330,8 +371,8 @@ private[sources] final class VersionRateGate(startingVersion: Long,
                                              maxPerTrigger: Option[Long]) {
   @volatile private var lastSeen: Long = startingVersion - 1L
   def seen(v: Long): Unit = { if (v > lastSeen) lastSeen = v }
-  def cap(head: Long): Long =
-    maxPerTrigger.map(m => math.min(head, lastSeen + m)).getOrElse(head)
+  def cap(spark: SparkSession, root: String, head: Long): Long =
+    GraftDataSource.cappedEnd(spark, root, lastSeen, head, maxPerTrigger)
 }
 
 /** Version-offset streaming source over the commit log. Offsets are
@@ -368,7 +409,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
   }
 
   override def getOffset: Option[Offset] =
-    VersionedTable.currentVersion(spark, root).map(h => LongOffset(gate.cap(h)))
+    VersionedTable.currentVersion(spark, root).map(h => LongOffset(gate.cap(spark, root, h)))
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val startV = start.map(versionOf).getOrElse(startingVersion - 1L)
@@ -427,7 +468,7 @@ final class GraftChangeFeedSource(spark: SparkSession, root: String,
   }
 
   override def getOffset: Option[Offset] =
-    VersionedTable.currentVersion(spark, root).map(h => LongOffset(gate.cap(h)))
+    VersionedTable.currentVersion(spark, root).map(h => LongOffset(gate.cap(spark, root, h)))
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val startV = math.max(0L, start.map(versionOf).getOrElse(startingVersion))

@@ -51,7 +51,8 @@ import org.apache.spark.unsafe.types.UTF8String
 final class GraftFileIndex(spark: SparkSession, private val root: String,
                            val version: Long,
                            entries: Seq[VersionedTable.Entry],
-                           partCol: Option[String])
+                           partCol: Option[String],
+                           knownStats: Option[Map[String, Map[String, DataSkipping.Stat]]] = None)
   extends FileIndex {
 
   private val rels: Seq[String] = entries.map(_.rel)
@@ -87,9 +88,10 @@ final class GraftFileIndex(spark: SparkSession, private val root: String,
   }
 
   // sidecars read ONCE per index (snapshot; sidecar files are
-  // cache-replace, so a later richer version only helps a new index)
+  // cache-replace, so a later richer version only helps a new index),
+  // or not at all when the caller already holds the version's stats
   private lazy val stats: Map[String, Map[String, DataSkipping.Stat]] =
-    DataSkipping.sidecarStatsView(spark, root, version)
+    knownStats.getOrElse(DataSkipping.sidecarStatsView(spark, root, version))
   private lazy val bloomCols: Set[String] =
     DataSkipping.bloomColumnsView(spark, root, version).toSet
   private val bloomCache =

@@ -282,7 +282,7 @@ private[sources] final class GraftMicroBatchStream(
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
     val head = VersionedTable.currentVersion(spark, root).getOrElse(return null)
     val s = start.asInstanceOf[GraftOffset].v
-    val capped = maxVersionsPerTrigger.map(m => math.min(head, s + m)).getOrElse(head)
+    val capped = GraftDataSource.cappedEnd(spark, root, s, head, maxVersionsPerTrigger)
     if (capped <= s) null else GraftOffset(capped)
   }
 

@@ -258,15 +258,25 @@ object VersionedTable {
         Some(v)
       case None =>
         lastResolveLogReads = 1 // one listing
-        val ld = p(s"$root/_log")
-        if (!f.exists(ld)) None
-        else {
-          val vs = f.listStatus(ld)
-            .filter(st => st.getPath.getName.matches("v\\d{8}\\.commit") && st.getLen > 0)
-            .map(_.getPath.getName.stripPrefix("v").stripSuffix(".commit").toLong)
-          if (vs.isEmpty) None else Some(vs.max)
-        }
+        committedVersions(f, root).lastOption
     }
+  }
+
+  /** Oldest version whose commit is still in the log ([[vacuum]]
+    * expires the older ones), or None for a table with no commit. One
+    * log listing. */
+  private[graft] def oldestVersion(spark: SparkSession, root: String): Option[Long] =
+    committedVersions(fs(spark, root), root).headOption
+
+  /** The versions with a non-empty commit file, ascending (one log
+    * listing; empty when the log is absent). */
+  private def committedVersions(f: org.apache.hadoop.fs.FileSystem, root: String): Seq[Long] = {
+    val ld = p(s"$root/_log")
+    if (!f.exists(ld)) Nil
+    else f.listStatus(ld)
+      .filter(st => st.getPath.getName.matches("v\\d{8}\\.commit") && st.getLen > 0)
+      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".commit").toLong)
+      .sorted.toSeq
   }
 
   /** [[currentVersion]], or FileNotFoundException for a table with no
@@ -441,10 +451,14 @@ object VersionedTable {
   }
 
   /** The file index over every dir of version `v` — the pruning a
-    * read of `v` applies, for callers choosing dirs without a scan. */
-  private[graft] def fileIndex(spark: SparkSession, root: String, v: Long): GraftFileIndex = {
+    * read of `v` applies, for callers choosing dirs without a scan.
+    * `stats`, when given, are `v`'s range stats in place of its
+    * sidecar (a caller that just built them reads no file twice). */
+  private[sources] def fileIndex(spark: SparkSession, root: String, v: Long,
+                                 stats: Option[Map[String, Map[String, DataSkipping.Stat]]] = None
+                                ): GraftFileIndex = {
     val c = commitOf(spark, root, v)
-    new GraftFileIndex(spark, root, v, c.entries, c.partCol)
+    new GraftFileIndex(spark, root, v, c.entries, c.partCol, stats)
   }
 
   private def relationOver(spark: SparkSession, root: String, v: Long, c: Commit,
@@ -631,7 +645,10 @@ object VersionedTable {
     * checkpoint with no coordination with writers. A history with a
     * rewriting commit ([[merge]], [[compact]], [[restore]]) fails the
     * stream loudly at that version; consume the change feed for
-    * non-append workloads. */
+    * non-append workloads. After [[vacuum]] expired the log's oldest
+    * commits, a new consumer's first batch is the oldest retained
+    * version's snapshot; a consumer whose offset lies below the cutoff
+    * fails, as the rows it has not seen can no longer be told apart. */
   def streamAppends(spark: SparkSession, root: String): DataFrame =
     spark.readStream.format("graft").load(root)
 
@@ -950,10 +967,7 @@ object VersionedTable {
     try {
       val f = logFs(spark, root)
       val prior = checkpointState(spark, root).getOrElse(Map.empty)
-      val versions = f.listStatus(p(s"$root/_log"))
-        .filter(st => st.getPath.getName.matches("v\\d{8}\\.commit") && st.getLen > 0)
-        .map(_.getPath.getName.stripPrefix("v").stripSuffix(".commit").toLong)
-        .sorted.toSeq
+      val versions = committedVersions(f, root)
       val lines = versions.flatMap { ver =>
         prior.getOrElse(ver, entriesOf(spark, root, ver)).map(e => s"$ver\t${e.line}")
       }

@@ -939,6 +939,65 @@ class GraftSourceSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("graft stream after vacuum: a new consumer drains every row once, a lagging one fails") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val root = tmp("src_vac")
+    var v = VersionedTable.commit(spark, root, spark.range(0, 10).toDF("id"), -1L)
+    v = VersionedTable.append(spark, root, spark.range(10, 20).toDF("id"), v)
+    // consumers that count the rows they are delivered, each resuming
+    // from its own checkpoint
+    final class Consumer(tag: String) {
+      private val cp = java.nio.file.Files.createTempDirectory(s"graft_vac_$tag").toString
+      val rows = new java.util.concurrent.atomic.AtomicLong()
+      def start() = spark.readStream.format("graft").load(root)
+        .writeStream.option("checkpointLocation", cp)
+        .foreachBatch { (b: DataFrame, _: Long) => rows.addAndGet(b.count()); () }
+        .start()
+      def drain(): Long = { val q = start(); try q.processAllAvailable() finally q.stop(); rows.get }
+    }
+    // one consumer drains v0 and v1, then falls behind
+    val lagging = new Consumer("lag")
+    assert(lagging.drain() == 20)
+    (2 until 5).foreach { g =>
+      v = VersionedTable.append(spark, root, spark.range(g * 10L, g * 10L + 10).toDF("id"), v)
+    }
+    // another is caught up with the head when the vacuum runs
+    val caughtUp = new Consumer("head")
+    assert(caughtUp.drain() == 50)
+    VersionedTable.vacuum(spark, root, keepLast = 1)
+    assert(VersionedTable.oldestVersion(spark, root).contains(v))
+    // a new stream's first batch is the retained version's snapshot
+    val q = VersionedTable.streamAppends(spark, root)
+      .writeStream.format("memory").queryName("graft_src_vac").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(ids(spark.table("graft_src_vac")) == (0L until 50L).toSet)
+      assert(spark.table("graft_src_vac").count() == 50, "no row delivered twice")
+      v = VersionedTable.append(spark, root, spark.range(50, 55).toDF("id"), v)
+      q.processAllAvailable()
+      assert(ids(spark.table("graft_src_vac")) == (0L until 55L).toSet)
+      assert(spark.table("graft_src_vac").count() == 55)
+    } finally q.stop()
+    // the caught-up consumer's offset is the retained head: it resumes
+    assert(caughtUp.drain() == 55)
+    // under a rate cap the first batch still reaches the snapshot
+    // version, then the later commits stream one by one
+    VersionedTable.append(spark, root, spark.range(55, 60).toDF("id"), v)
+    VersionedTable.vacuum(spark, root, keepLast = 2)
+    val q2 = spark.readStream.format("graft").option("maxVersionsPerTrigger", "1").load(root)
+      .writeStream.format("memory").queryName("graft_src_vac_rate").outputMode("append").start()
+    try {
+      q2.processAllAvailable()
+      assert(ids(spark.table("graft_src_vac_rate")) == (0L until 60L).toSet)
+      assert(spark.table("graft_src_vac_rate").count() == 60)
+    } finally q2.stop()
+    // the lagging consumer's next range lies below the cutoff: its
+    // unseen rows cannot be told from the ones it has, so it fails
+    val e = intercept[StreamingQueryException](lagging.drain())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("expired by vacuum")), e.getMessage)
+  }
+
   test("graft CDC stream: rate-limited windows still converge to the final images") {
     import spark.implicits._
     val root = tmp("src_cdc_rate")

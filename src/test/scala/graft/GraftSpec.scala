@@ -3118,7 +3118,7 @@ class GraftSpec extends AnyFunSuite {
   test("DataSkipping: z-order prunes on EITHER column; linear sort only on its leading one") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.sources.{DataSkipping, GraftFileIndex, VersionedTable}
+    import graft.sources.{DataSkipping, VersionedTable}
     val base = java.nio.file.Files.createTempDirectory("graft_skip").toString
     val zRoot = s"$base/z"; val linRoot = s"$base/lin"
     // x uniform, y a decorrelated permutation-ish hash of x
@@ -3136,12 +3136,11 @@ class GraftSpec extends AnyFunSuite {
       "first read after a z-order write rebuilt stats the write already published")
     def range(root: String, c: String, lo: Long, hi: Long) =
       VersionedTable.read(spark, root).filter(col(c).between(lo, hi))
-    def opened(df: org.apache.spark.sql.DataFrame): Int = { df.count(); GraftFileIndex.lastDirsKept }
-    val zx = opened(range(zRoot, "x", 0, 624))
-    val zy = opened(range(zRoot, "y", 0, 624))
+    val zx = keptDirs(zRoot, range(zRoot, "x", 0, 624)).size
+    val zy = keptDirs(zRoot, range(zRoot, "y", 0, 624)).size
     DataSkipping.ensureStats(spark, linRoot, 0L, Seq("x", "y"))
-    val lx = opened(range(linRoot, "x", 0, 624))
-    val ly = opened(range(linRoot, "y", 0, 624))
+    val lx = keptDirs(linRoot, range(linRoot, "x", 0, 624)).size
+    val ly = keptDirs(linRoot, range(linRoot, "y", 0, 624)).size
     assert(lx == 1, s"linear layout should be exact on its sort column, opened $lx")
     assert(ly == 16, "y is decorrelated from the linear sort — nothing should prune")
     // the z-order point: a 1/16 range on EITHER column touches ~one
@@ -3152,19 +3151,16 @@ class GraftSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet
     val exp = df.filter(col("y").between(0, 624)).select("id").collect().map(_.getLong(0)).toSet
     assert(got == exp && got.nonEmpty)
-    // the pruned read's scan opens exactly the surviving dirs
-    val openedDirs = keptDirs(zRoot, range(zRoot, "x", 0, 624))
-    assert(openedDirs.size == zx, s"scan opened ${openedDirs.size} dirs, stats kept $zx")
     // stats are computed once per (version, column) and served from
     // the sidecar afterwards — reads of other ranges rebuild nothing
     val builds = DataSkipping.statsBuilds
-    opened(range(zRoot, "y", 2000, 3000))
-    opened(range(zRoot, "x", 9000, 9999))
+    keptDirs(zRoot, range(zRoot, "y", 2000, 3000))
+    keptDirs(zRoot, range(zRoot, "x", 9000, 9999))
     DataSkipping.ensureStats(spark, zRoot, 0L, Seq("x", "y"))
     assert(DataSkipping.statsBuilds == builds, "stats sidecar was rebuilt on a cached read")
     // an out-of-range predicate opens nothing but keeps the schema
     val none = range(zRoot, "x", 20000, 30000)
-    assert(none.collect().isEmpty && GraftFileIndex.lastDirsKept == 0)
+    assert(none.collect().isEmpty && keptDirs(zRoot, none).isEmpty)
     assert(none.schema == VersionedTable.read(spark, zRoot).schema)
     // vacuum: an expired version's stats sidecar dies with its commit
     VersionedTable.commitPartitioned(spark, linRoot,
@@ -3359,7 +3355,7 @@ class GraftSpec extends AnyFunSuite {
   test("DataSkipping.recluster: appends degrade pruning; OPTIMIZE restores it") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.sources.{DataSkipping, GraftFileIndex, VersionedTable}
+    import graft.sources.{DataSkipping, VersionedTable}
     val root = java.nio.file.Files.createTempDirectory("graft_opt").toString + "/t"
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
       .withColumn("x", col("id"))
@@ -3371,13 +3367,12 @@ class GraftSpec extends AnyFunSuite {
       DataSkipping.ensureStats(spark, root, v, Seq("y"))
       VersionedTable.readAsOf(spark, root, v).filter(col("y").between(0, 624))
     }
-    def opened(v: Long): Int = { yRange(v).count(); GraftFileIndex.lastDirsKept }
-    val prunedV0 = opened(0L)
+    val prunedV0 = keptDirs(root, yRange(0L)).size
     assert(prunedV0 < 16)
     // a plain append lands ONE dir whose y spans the whole space — its
     // stats can never prune it, so every y-range read now opens it too
     VersionedTable.append(spark, root, mk(8000, 10000), 0L)
-    val prunedV1 = opened(1L)
+    val prunedV1 = keptDirs(root, yRange(1L)).size
     assert(prunedV1 == prunedV0 + 1, "the unclustered append should always survive pruning")
     // OPTIMIZE: one z-ordered rewrite folds the table back into tight
     // dirs as a new version; pruning recovers, parity holds
@@ -3386,7 +3381,7 @@ class GraftSpec extends AnyFunSuite {
     // repartitionByRange's sampled bounds wobble a dir either way, so
     // pin the property (a 1/16 range opens at most half the table,
     // vs 16/16 unclustered) rather than an exact grid count
-    val prunedV2 = opened(v2)
+    val prunedV2 = keptDirs(root, yRange(v2)).size
     assert(prunedV2 <= 8, s"post-OPTIMIZE y-range still opens $prunedV2/16 dirs")
     val got = yRange(v2).select("id").collect().map(_.getLong(0)).toSet
     val exp = mk(0, 10000)
