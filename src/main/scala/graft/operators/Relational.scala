@@ -124,17 +124,28 @@ object Relational {
     * take row_number()=1 per key ordered by priority — exactly one
     * shuffle on the merge key, the same shape Delta's own merge
     * produces, and it scales linearly because the union never
-    * materializes more than the combined inputs.
+    * materializes more than the combined inputs. The table-write path
+    * ([[graft.sources.VersionedTable]]'s merges) drops that shuffle
+    * for a union under AQE's advisory partition size: it coalesces the
+    * union to one partition ([[mergeUpsertOver]]), which already
+    * satisfies the window's clustering.
     */
   def mergeUpsert(target: DataFrame, source: DataFrame, keys: Seq[String],
-                  tieBreak: Seq[String] = Nil): DataFrame = {
+                  tieBreak: Seq[String] = Nil): DataFrame =
+    mergeUpsertOver(target, source, keys, tieBreak)(identity)
+
+  /** [[mergeUpsert]] with `input` applied to the tagged union below
+    * the window. */
+  private[graft] def mergeUpsertOver(target: DataFrame, source: DataFrame, keys: Seq[String],
+                                     tieBreak: Seq[String])
+                                    (input: DataFrame => DataFrame): DataFrame = {
     val t = target.withColumn("_prio", lit(0))
     val s = source.withColumn("_prio", lit(1))
     // tieBreak columns make the winner deterministic when the inputs
     // themselves carry duplicate keys (the synthetic corpus does).
     val ord = col("_prio").desc +: tieBreak.map(col(_).asc)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    t.unionByName(s)
+    input(t.unionByName(s))
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_prio", "_rn")

@@ -149,9 +149,16 @@ object DataSkipping {
     * (present, never prunes, never rebuilds). */
   private def ensureStatsTyped(spark: SparkSession, root: String, version: Long,
                                numCols: Seq[String], strCols: Seq[String]
-                              ): Map[String, Map[String, Stat]] = {
+                              ): Map[String, Map[String, Stat]] =
+    ensureStatsTyped(spark, root, version, VersionedTable.commitOf(spark, root, version),
+                     numCols, strCols)
+
+  /** [[ensureStatsTyped]] over `version`'s already-parsed commit. */
+  private def ensureStatsTyped(spark: SparkSession, root: String, version: Long,
+                               commit: VersionedTable.Commit, numCols: Seq[String],
+                               strCols: Seq[String]): Map[String, Map[String, Stat]] = {
     var existing = readSidecar(spark, root, version)
-    val rels = VersionedTable.dirsOf(spark, root, version)
+    val rels = commit.entries.map(_.rel)
     val cols = (numCols ++ strCols).distinct
     def uncovered = rels.filterNot(r =>
       existing.get(r).exists(cs => cols.forall(cs.contains)))
@@ -180,7 +187,7 @@ object DataSkipping {
     if (needRels.isEmpty) return existing
     statsBuilds += 1
     lastStatsDirsScanned = needRels.size
-    val df = VersionedTable.readDirs(spark, root, version, needRels)
+    val df = VersionedTable.readDirs(spark, root, version, commit, needRels)
       .withColumn("_dir", regexp_replace(input_file_name(), "/[^/]*$", ""))
     val aggs = numCols.distinct.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"nmin_$c"), max(col(c).cast("double")).as(s"nmax_$c"))) ++
@@ -427,21 +434,22 @@ object DataSkipping {
           return VersionedTable.commit(spark, root,
             graft.operators.Relational.mergeUpsert(src.limit(0), src, keys, tb),
             base)
-        // the index consumes stats and never builds them: build (or
+        // the base commit is read and parsed once per attempt; the
+        // index consumes stats and never builds them: build (or
         // inherit) the base's bounds for statKey first, and hand the
         // index those bounds rather than a second sidecar read
-        val stats = ensureStatsTyped(spark, root, base, Seq(statKey), Nil)
+        val baseCommit = VersionedTable.commitOf(spark, root, base)
+        val stats = ensureStatsTyped(spark, root, base, baseCommit, Seq(statKey), Nil)
         val k = AttributeReference(statKey, DoubleType)()
-        val touched = VersionedTable.fileIndex(spark, root, base, Some(stats))
+        val touched = VersionedTable.fileIndex(spark, root, base, baseCommit, Some(stats))
           .keptRels(Seq(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))))
           .toSet
-        val carried = VersionedTable.entriesOf(spark, root, base)
-          .filterNot(e => touched.contains(e.rel))
+        val carried = baseCommit.entries.filterNot(e => touched.contains(e.rel))
         lastMergeRewrote = touched.size
         lastMergeCarried = carried.size
         val before =
           if (touched.isEmpty) src.limit(0)
-          else VersionedTable.readDirs(spark, root, base, touched.toSeq)
+          else VersionedTable.readDirs(spark, root, base, baseCommit, touched.toSeq)
         // the base reads with the version's logged schema: a batch
         // shaped before a later column evolution merges in with those
         // columns null, as every read of its rows would show them
@@ -449,7 +457,7 @@ object DataSkipping {
         val padded = before.schema.filterNot(c => have(c.name.toLowerCase))
           .foldLeft(src)((d, c) => d.withColumn(c.name, lit(null).cast(c.dataType)))
         val merged = graft.operators.Relational.mergeUpsert(before, padded, keys, tb)
-        val v = VersionedTable.commitCarrying(spark, root, merged, base, carried)
+        val v = VersionedTable.commitCarrying(spark, root, merged, base, baseCommit, carried)
         // write-time stats for the fresh dir (carried dirs inherit)
         ensureStatsTyped(spark, root, v, Seq(statKey), Nil)
         return v
@@ -535,7 +543,8 @@ object DataSkipping {
                   column: String
                  ): Map[String, org.apache.spark.util.sketch.BloomFilter] = {
     var existing = readBloomSidecar(spark, root, version, column)
-    val rels = VersionedTable.dirsOf(spark, root, version)
+    val c = VersionedTable.commitOf(spark, root, version)
+    val rels = c.entries.map(_.rel)
     def uncovered = rels.filterNot(existing.contains)
     if (uncovered.nonEmpty && version > 0) {
       val inherited = ((version - 1) to math.max(0L, version - 10L) by -1)
@@ -553,7 +562,7 @@ object DataSkipping {
     if (need.isEmpty) return existing
     bloomBuilds += 1
     lastBloomDirsScanned = need.size
-    val computed = groupedBloomBuild(spark, root, version, need, column)
+    val computed = groupedBloomBuild(spark, root, version, c, need, column)
     val merged = existing ++ computed
     writeBloomSidecar(spark, root, version, column, merged)
     merged
@@ -578,7 +587,7 @@ object DataSkipping {
     * replace: strings insert their UTF-8 bytes, integrals widen to
     * long. */
   private def groupedBloomBuild(spark: SparkSession, root: String, version: Long,
-      rels: Seq[String], column: String)
+      c: VersionedTable.Commit, rels: Seq[String], column: String)
       : Map[String, org.apache.spark.util.sketch.BloomFilter] = {
     import org.apache.spark.util.sketch.BloomFilter
     import org.apache.spark.sql.Encoders
@@ -593,7 +602,7 @@ object DataSkipping {
     // files holds no rows and gets the empty filter; only a dir logged
     // before commits listed files is listed
     val conf = spark.sparkContext.hadoopConfiguration
-    val logged = VersionedTable.entriesOf(spark, root, version).map(e => e.rel -> e.files).toMap
+    val logged = c.entries.map(e => e.rel -> e.files).toMap
     def footerHas(path: org.apache.hadoop.fs.Path): Boolean = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
@@ -611,7 +620,7 @@ object DataSkipping {
     }
     val readable = rels.filter(dirHasColumn)
     if (readable.isEmpty) return Map.empty
-    val scan = VersionedTable.readDirs(spark, root, version, readable)
+    val scan = VersionedTable.readDirs(spark, root, version, c, readable)
       .select(col(column).as("v"),
         regexp_extract(input_file_name(), "^(.*)/[^/]+$", 1).as("d"))
       .filter(col("v").isNotNull)
@@ -720,11 +729,11 @@ object DataSkipping {
                      c1: String, c2: String, nDirs: Int): Long = {
     val base = VersionedTable.currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val entries = VersionedTable.entriesOf(spark, root, base)
-    val loose = entries.filter(_.part.isEmpty).map(_.rel)
+    val c = VersionedTable.commitOf(spark, root, base)
+    val loose = c.entries.filter(_.part.isEmpty).map(_.rel)
     if (loose.isEmpty) return base
-    val carried = entries.filter(_.part.isDefined)
-    val delta = VersionedTable.readDirs(spark, root, base, loose)
+    val carried = c.entries.filter(_.part.isDefined)
+    val delta = VersionedTable.readDirs(spark, root, base, c, loose)
     val keyed = zKeyed(delta, c1, c2, nDirs,
       pid => concat(lit(s"g$base-"), pid.cast("string")))
     val v = VersionedTable.commitPartitionedCarrying(

@@ -63,15 +63,22 @@ private[graft] object StagingWriter {
                        desc: String): Seq[(String, Seq[File])] = {
     import org.apache.spark.sql.functions.col
     val tagged = df.withColumn("__graft_p", col(partitionCol).cast("string"))
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    val routed =
-      (if (tagged.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory) tagged.coalesce(1)
-       else tagged).sortWithinPartitions("__graft_p")
+    val routed = oneTaskIfSmall(spark, tagged).sortWithinPartitions("__graft_p")
     write(spark, routed, df.schema, s"$root/$parent", route = df.schema.length, desc)
       .groupBy(_._1).toSeq.map { case (v, fs) =>
         v -> fs.collect { case (_, f, len) if f != null => (f, len) }.toSeq.sortBy(_._1)
       }.sortBy(v => Option(v._1))
+  }
+
+  /** `df` as one partition (`coalesce(1)`, no exchange) when the
+    * optimizer estimates it at or under AQE's advisory partition size,
+    * the size AQE would coalesce a shuffle of it down to one partition
+    * at; otherwise `df` as it comes. Staging and the write path's
+    * merge take their one-task rule from here. */
+  private[graft] def oneTaskIfSmall(spark: SparkSession, df: DataFrame): DataFrame = {
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory) df.coalesce(1) else df
   }
 
   /** The staged file name of a task attempt: unique per attempt, so a

@@ -340,10 +340,10 @@ object VersionedTable {
 
   /** A version's commit file, parsed once: its data entries plus the
     * `#partcol` and `#schema` meta values (still encoded / JSON). */
-  private final case class Commit(entries: Seq[Entry], partCol: Option[String],
-                                  schemaJson: Option[String])
+  private[sources] final case class Commit(entries: Seq[Entry], partCol: Option[String],
+                                           schemaJson: Option[String])
 
-  private def commitOf(spark: SparkSession, root: String, v: Long): Commit = {
+  private[sources] def commitOf(spark: SparkSession, root: String, v: Long): Commit = {
     val lines = readCommitText(spark, root, v).split("\n").map(_.trim).filter(_.nonEmpty).toSeq
     def meta(tag: String) =
       lines.find(_.startsWith(s"#$tag\t")).map(_.substring(tag.length + 2))
@@ -438,28 +438,26 @@ object VersionedTable {
     relationOver(spark, root, v, c, picked)
   }
 
-  /** A read of only the dirs `rels` of version `v`, with the version's
-    * logged schema — the dir-subset read [[DataSkipping]]'s stats
-    * builds and stats-pruned merges take. No `rels` is an empty frame
-    * of that schema. */
-  private[graft] def readDirs(spark: SparkSession, root: String, v: Long,
-                              rels: Seq[String]): DataFrame = {
-    val c = commitOf(spark, root, v)
+  /** A read of only the dirs `rels` of version `v` (parsed commit
+    * `c`), with the version's logged schema — the dir-subset read
+    * [[DataSkipping]]'s stats builds and stats-pruned merges take. No
+    * `rels` is an empty frame of that schema. */
+  private[sources] def readDirs(spark: SparkSession, root: String, v: Long, c: Commit,
+                                rels: Seq[String]): DataFrame = {
     val want = rels.toSet
     spark.baseRelationToDataFrame(
       relationOver(spark, root, v, c, c.entries.filter(e => want(e.rel))))
   }
 
-  /** The file index over every dir of version `v` — the pruning a
-    * read of `v` applies, for callers choosing dirs without a scan.
-    * `stats`, when given, are `v`'s range stats in place of its
-    * sidecar (a caller that just built them reads no file twice). */
-  private[sources] def fileIndex(spark: SparkSession, root: String, v: Long,
-                                 stats: Option[Map[String, Map[String, DataSkipping.Stat]]] = None
-                                ): GraftFileIndex = {
-    val c = commitOf(spark, root, v)
+  /** The file index over every dir of version `v` (parsed commit
+    * `c`) — the pruning a read of `v` applies, for callers choosing
+    * dirs without a scan. `stats`, when given, are `v`'s range stats
+    * in place of its sidecar (a caller that just built them reads no
+    * file twice). */
+  private[sources] def fileIndex(spark: SparkSession, root: String, v: Long, c: Commit,
+                                 stats: Option[Map[String, Map[String, DataSkipping.Stat]]]
+                                ): GraftFileIndex =
     new GraftFileIndex(spark, root, v, c.entries, c.partCol, stats)
-  }
 
   private def relationOver(spark: SparkSession, root: String, v: Long, c: Commit,
                            picked: Seq[Entry]): HadoopFsRelation =
@@ -995,6 +993,19 @@ object VersionedTable {
     if (tieBreak.nonEmpty) tieBreak
     else source.columns.filterNot(keys.contains).sorted.toSeq
 
+  /** [[graft.operators.Relational.mergeUpsert]] as the write path runs
+    * it. A union of target and batch estimated at or under AQE's
+    * advisory partition size is coalesced to one partition below the
+    * window ([[StagingWriter.oneTaskIfSmall]]); `SinglePartition`
+    * satisfies the window's clustering, so no exchange is planned and
+    * the window, the value sort and the parquet write run in the one
+    * staging task: one Spark job. A larger union keeps the hash
+    * exchange on the merge key. */
+  private def upsert(spark: SparkSession, target: DataFrame, source: DataFrame,
+                     keys: Seq[String], tieBreak: Seq[String]): DataFrame =
+    graft.operators.Relational.mergeUpsertOver(target, source, keys, tieBreak)(
+      StagingWriter.oneTaskIfSmall(spark, _))
+
   /** MERGE `source` into the table under optimistic concurrency: read
     * the latest snapshot, upsert with the shared
     * [[graft.operators.Relational.mergeUpsert]] (so winner semantics
@@ -1006,6 +1017,13 @@ object VersionedTable {
     * latest-wins), mirroring the reference's retried Celery merges.
     * Rewrites the FULL snapshot — use [[mergePartitioned]] when a
     * stable partition column exists.
+    *
+    * Small merges are one Spark job. The source is never checkpointed
+    * (each attempt re-evaluates it; a driver-local batch is stable by
+    * construction), and a target-plus-batch union at or under AQE's
+    * advisory partition size merges in one partition with no shuffle
+    * (see [[upsert]]), so the write is the only job. A larger union
+    * keeps the hash exchange on the merge key.
     *
     * `columnUpdate = true` switches matched-row semantics from
     * whole-row replace to COLUMN-LEVEL update (delta-rs
@@ -1030,8 +1048,7 @@ object VersionedTable {
         // duplicate-key first batch must not seed more rows than any
         // later merge would leave, or a change-feed consumer seeded
         // from v0 diverges from recompute on the first update
-        if (base < 0)
-          graft.operators.Relational.mergeUpsert(source.limit(0), source, keys, tb)
+        if (base < 0) upsert(spark, source.limit(0), source, keys, tb)
         else if (columnUpdate) {
           val target = readAsOf(spark, root, base)
           val shared = target.columns.toSet.intersect(source.columns.toSet)
@@ -1052,7 +1069,7 @@ object VersionedTable {
           val (t2, s2) =
             if (allowSchemaEvolution) alignSchemas(target, source)
             else (target, source) // mismatched schemas fail LOUDLY in unionByName
-          graft.operators.Relational.mergeUpsert(t2, s2, keys, tb)
+          upsert(spark, t2, s2, keys, tb)
         }
       try return commit(spark, root, merged, base)
       catch {
@@ -1159,15 +1176,13 @@ object VersionedTable {
     * [[commitPartitionedCarrying]], and the publish primitive a
     * file-level (stats-pruned) merge needs: the rewritten dirs'
     * replacement is a single fresh dir, every untouched dir rides
-    * along with its annotation (partition-scoped or not) intact. */
-  private[graft] def commitCarrying(spark: SparkSession, root: String,
-                                    df: DataFrame, base: Long,
-                                    carried: Seq[Entry]): Long = {
-    val c = if (base < 0) None else Some(commitOf(spark, root, base))
-    stageAndCommit(spark, root, df, base, carried = c.filter(_ => carried.nonEmpty),
-                   carryOver = carried,
-                   meta = c.flatMap(_.partCol).map(partColMetaLine).toSeq)
-  }
+    * along with its annotation (partition-scoped or not) intact.
+    * `c` is `base`'s parsed commit. */
+  private[sources] def commitCarrying(spark: SparkSession, root: String,
+                                      df: DataFrame, base: Long, c: Commit,
+                                      carried: Seq[Entry]): Long =
+    stageAndCommit(spark, root, df, base, carried = Some(c).filter(_ => carried.nonEmpty),
+                   carryOver = carried, meta = c.partCol.map(partColMetaLine).toSeq)
 
   /** KEYED DELETE: commit a new version holding every current row
     * whose key does NOT appear in `victims` — the `whenMatchedDelete`
@@ -1222,6 +1237,11 @@ object VersionedTable {
     next
   }
 
+  /** True when the most recent [[mergePartitioned]] landed its staged
+    * dirs through the DISJOINT-partition rebase (no restaging) — the
+    * spec's evidence that the stage-once path actually ran. */
+  @volatile var lastMergeRebased: Boolean = false
+
   /** PARTITION-SCOPED merge — the copy-on-write file pruning the
     * delta-rs merge does (queue_for_delta.py:680-799 rewrites only
     * touched files): rewrite ONLY the partition dirs the source batch
@@ -1237,12 +1257,17 @@ object VersionedTable {
     * [[commitPartitioned]] / this method). Same optimistic-concurrency
     * retry as [[merge]]; winner determinism follows the same
     * [[effectiveTieBreak]] contract.
+    *
+    * Small merges are one Spark job, by two rules. (a) A driver-local
+    * source (a `LocalRelation`: `createDataFrame`, `Seq.toDF`) is not
+    * checkpointed, and its touched partition values come from a
+    * job-free driver-side collect; any other source is checkpointed
+    * once, and one job materializes it and returns the touched values.
+    * (b) A union of the touched slice and the batch at or under AQE's
+    * advisory partition size merges in one partition with no shuffle
+    * (see [[upsert]]); a larger one keeps the hash exchange. Creation
+    * follows both rules.
     */
-  /** True when the most recent [[mergePartitioned]] landed its staged
-    * dirs through the DISJOINT-partition rebase (no restaging) — the
-    * spec's evidence that the stage-once path actually ran. */
-  @volatile var lastMergeRebased: Boolean = false
-
   def mergePartitioned(spark: SparkSession, root: String, source: DataFrame,
                        keys: Seq[String], partitionCol: String,
                        tieBreak: Seq[String] = Nil, maxRetries: Int = 3): Long =
@@ -1259,14 +1284,21 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val f = fs(spark, root)
     val tb = effectiveTieBreak(source, keys, tieBreak)
-    // ONE job materializes the (lazy) checkpoint — stable slices across
-    // retries — and returns the touched values, per-task distinct with
-    // no exchange; the null/empty check reads that list
-    val src = source.localCheckpoint(eager = false)
-    val touched = src.select(col(partitionCol).cast("string"))
+    // a driver-local batch (a LocalRelation) is stable across retries as
+    // it is, and its touched values collect on the driver with no job;
+    // any other source is checkpointed (stable slices across retries),
+    // and ONE job materializes the lazy checkpoint and returns the
+    // touched values, per-task distinct with no exchange. The
+    // null/empty check reads that list.
+    val local = source.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val src = if (local) source else source.localCheckpoint(eager = false)
+    val values = src.select(col(partitionCol).cast("string"))
       .as(org.apache.spark.sql.Encoders.STRING)
-      .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING)
-      .collect().distinct
+    val touched =
+      (if (local) values.collect()
+       else values.mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING).collect())
+        .distinct
     requireRoutable(touched, partitionCol)
     enforceConstraints(spark, root, src) // merge updates come from src
     lastMergeRebased = false
@@ -1279,8 +1311,7 @@ object VersionedTable {
         // creating: dedupe the batch itself with merge semantics; a
         // creation RACE is a conflict like any other — retry against
         // the winner's table instead of propagating
-        val deduped = graft.operators.Relational.mergeUpsert(
-          src.limit(0), src, keys, tb)
+        val deduped = upsert(spark, src.limit(0), src, keys, tb)
         try return commitPartitioned(spark, root, deduped, partitionCol, base)
         catch {
           case _: VersionConflictException if attempt < maxRetries =>
@@ -1308,7 +1339,7 @@ object VersionedTable {
         else scanOf(spark, root, base, baseCommit, Some(touchedEnc))
       // the staging write evaluates the merge once; a retry that must
       // recompute builds a new one against the fresh head
-      val merged = graft.operators.Relational.mergeUpsert(target, src, keys, tb)
+      val merged = upsert(spark, target, src, keys, tb)
       val (parent, staged) = stagePartitions(spark, root, merged, partitionCol, next)
       // publish loop: on conflict, REBASE the same staged dirs if the
       // winners' commits left every touched partition untouched

@@ -14,7 +14,13 @@ import graft.sources.{Formats, LakehouseWriter}
   * Usage: runMain graft.tools.Demo [sfDir] [workDir]
   */
 object Demo {
-  def main(args: Array[String]): Unit = {
+  // stdout in UTF-8 whatever the platform charset, so the lines'
+  // non-ASCII characters (em dashes) print as themselves
+  def main(args: Array[String]): Unit =
+    Console.withOut(new java.io.PrintStream(
+      new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8"))(run(args))
+
+  private def run(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = if (args.length > 1) args(1)
                else java.nio.file.Files.createTempDirectory("graft_demo").toString

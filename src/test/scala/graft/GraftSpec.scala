@@ -3498,6 +3498,28 @@ class GraftSpec extends AnyFunSuite {
     assert(got(1000L) == ((1000L, Some("n"))))
   }
 
+  test("DataSkipping.mergeSkipping reads its base commit once per attempt") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_fmerge_once").toString + "/t"
+    VersionedTable.commitPartitioned(spark, root, spark.range(0, 1000, 2).toDF("k")
+      .withColumn("bucket", (col("k") / lit(100)).cast("long").cast("string"))
+      .withColumn("v", col("k") * 10), "bucket", -1L)
+    val batch = Seq((250L, "2", -1L), (251L, "2", -2L)).toDF("k", "bucket", "v")
+    // the base has no stats yet, so the attempt builds them too
+    val ops = CountingFs.during(spark) {
+      assert(DataSkipping.mergeSkipping(spark, root, batch, Seq("k"), "k") == 1L)
+    }
+    def opens(v: Long) = ops.opens.count(_.endsWith(f"/_log/v$v%08d.commit"))
+    assert(opens(0L) == 1, s"the base commit was opened ${opens(0L)} times")
+    // the new version's write-time stats read its own commit once
+    assert(opens(1L) == 1, s"the new commit was opened ${opens(1L)} times")
+    assert(DataSkipping.lastMergeRewrote == 1 && DataSkipping.lastMergeCarried == 9)
+    assert(VersionedTable.read(spark, root).filter(col("k") === 251L).select("v")
+      .as[Long].collect().toSeq == Seq(-2L))
+  }
+
   test("DataSkipping: an append's stats cost is O(new dirs) — prior versions' bounds are inherited") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -6578,16 +6600,31 @@ class GraftSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
+  /** Spark jobs launched and shuffle bytes written while `body` ran. */
+  private def sparkWork(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        Option(s.stageInfo.taskMetrics).foreach { m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten); ()
+        }
     }
     spark.sparkContext.addSparkListener(l)
     try { body; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
+    (jobs.get(), shuffled.get())
+  }
+
+  private def jobsDuring(body: => Unit): Int = sparkWork(body)._1
+
+  /** `body` with AQE's advisory partition size set to `size`. */
+  private def withAdvisory[T](size: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, size)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("partition staging writes ONE file per touched value, whatever the input's task count") {
@@ -6625,11 +6662,8 @@ class GraftSpec extends AnyFunSuite {
     val df = (0 until 2400).map(i => (i.toLong, s"v${i % 6}", i * 1.0)).toDF("k", "part", "x")
       .repartition(4)
     val small = jobsDuring(VersionedTable.commitPartitioned(spark, s"$root/a", df, "part", -1L))
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "64k")
-    val big = try jobsDuring(VersionedTable.commitPartitioned(spark, s"$root/b", df, "part", -1L))
-              finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val big = withAdvisory("64k")(
+      jobsDuring(VersionedTable.commitPartitioned(spark, s"$root/b", df, "part", -1L)))
     assert(big == small, s"$big jobs above the advisory size, $small under it: " +
       "staging a large batch must add no exchange")
     assert(stagedFiles(s"$root/a", 0L, -1L) == (0 until 6).map(i => s"v$i" -> 1).toMap)
@@ -6657,18 +6691,202 @@ class GraftSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, root).count() == 100)
   }
 
-  test("mergePartitioned of a small batch launches at most 4 jobs") {
+  test("mergePartitioned of a small batch launches exactly 1 job") {
     import spark.implicits._
     import graft.sources.VersionedTable
     val root = java.nio.file.Files.createTempDirectory("graft_mjobs").toString + "/t"
     VersionedTable.commitPartitioned(spark, root,
       (0 until 200).map(i => (i.toLong, s"p${i % 8}", 0.0)).toDF("k", "part", "x"), "part", -1L)
     val batch = (0 until 40).map(i => (i.toLong * 5, s"p${(i * 5) % 8}", 1.0)).toDF("k", "part", "x")
-    // the checkpointed source + touched values (1), then the merge's
-    // window exchange and the write (2)
-    val jobs = jobsDuring(VersionedTable.mergePartitioned(spark, root, batch, Seq("k"), "part"))
-    assert(jobs <= 4, s"mergePartitioned of a 40-row batch launched $jobs jobs")
+    // a driver-local batch needs no checkpoint and its touched values
+    // collect on the driver; the union of the touched slice and the
+    // batch is under the advisory size, so the merge's window runs in
+    // the one staging task with no exchange: the write is the only job
+    val (jobs, shuffled) =
+      sparkWork(VersionedTable.mergePartitioned(spark, root, batch, Seq("k"), "part"))
+    assert(jobs == 1, s"mergePartitioned of a 40-row batch launched $jobs jobs")
+    assert(shuffled == 0L, s"mergePartitioned of a 40-row batch shuffled $shuffled bytes")
     assert(VersionedTable.read(spark, root).filter($"x" === 1.0).count() == 40)
+    assert(VersionedTable.read(spark, root).count() == 200)
+  }
+
+  test("merge of a small batch launches exactly 1 job") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_mjobs1").toString + "/t"
+    VersionedTable.commit(spark, root,
+      (0 until 200).map(i => (i.toLong, 0.0)).toDF("k", "x"), -1L)
+    val batch = (0 until 40).map(i => (i.toLong * 10, 1.0)).toDF("k", "x")
+    val (jobs, shuffled) = sparkWork(VersionedTable.merge(spark, root, batch, Seq("k")))
+    assert(jobs == 1, s"merge of a 40-row batch launched $jobs jobs")
+    assert(shuffled == 0L, s"merge of a 40-row batch shuffled $shuffled bytes")
+    // creation takes the same one-job path
+    val created = java.nio.file.Files.createTempDirectory("graft_mjobs0").toString + "/t"
+    assert(jobsDuring(VersionedTable.merge(spark, created, batch, Seq("k"))) == 1)
+    // 20 keys updated, 20 inserted
+    assert(VersionedTable.read(spark, root).filter($"x" === 1.0).count() == 40)
+    assert(VersionedTable.read(spark, root).count() == 220)
+    assert(VersionedTable.read(spark, created).count() == 40)
+  }
+
+  /** One merge scenario run twice into fresh tables: under the default
+    * advisory size (the one-partition merge) and at 64k, where its
+    * inputs are estimated above it and the merge keeps its exchange.
+    * `write` builds the table at the root it is given. The two tables
+    * must hold the same rows; they are returned, with the shuffle
+    * bytes the small run wrote (0 unless its source shuffles). */
+  private def smallAndExchangeMerge(tag: String)(write: String => Unit)
+      : (Seq[org.apache.spark.sql.Row], Long) = {
+    import graft.sources.VersionedTable
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val (_, small) = sparkWork(write(s"$dir/small"))
+    val (_, big) = withAdvisory("64k")(sparkWork(write(s"$dir/big")))
+    assert(big > small, s"$tag: the merge above the advisory size ran no exchange " +
+      s"($big shuffle bytes, $small under it)")
+    def rows(t: String) = VersionedTable.read(spark, s"$dir/$t").collect().toSeq
+    val got = rows("small")
+    assert(got.sortBy(_.toString) == rows("big").sortBy(_.toString),
+      s"$tag: the one-partition merge and the exchange merge wrote different tables")
+    (got, small)
+  }
+
+  /** [[smallAndExchangeMerge]] of a driver-local source: the small run
+    * shuffles nothing. */
+  private def smallAndExchangeLocal(tag: String)(write: String => Unit)
+      : Seq[org.apache.spark.sql.Row] = {
+    val (got, small) = smallAndExchangeMerge(tag)(write)
+    assert(small == 0L, s"$tag: the merge under the advisory size shuffled $small bytes")
+    got
+  }
+
+  test("merges above the advisory size keep their exchange and write the same table as small ones") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    // ~105 KB by the optimizer's estimate for the batch alone
+    def base = (0 until 2000).map(i => (i.toLong, s"p${i % 8}", 0.0)).toDF("k", "part", "x")
+    def batch = (0 until 2400).map(i => (i.toLong * 2, s"p${(i * 2) % 8}", 1.0))
+      .toDF("k", "part", "x")
+    val want = ((0 until 2000).map(i => (i.toLong, if (i % 2 == 0) 1.0 else 0.0)) ++
+      (1000 until 2400).map(i => (i.toLong * 2, 1.0))).toSet
+    def got(rows: Seq[org.apache.spark.sql.Row]) = rows.map(r => (r.getLong(0), r.getDouble(2))).toSet
+    assert(got(smallAndExchangeLocal("graft_adv_mp") { root =>
+      VersionedTable.commitPartitioned(spark, root, base, "part", -1L)
+      VersionedTable.mergePartitioned(spark, root, batch, Seq("k"), "part")
+      ()
+    }) == want)
+    assert(got(smallAndExchangeLocal("graft_adv_m") { root =>
+      VersionedTable.commit(spark, root, base, -1L)
+      VersionedTable.merge(spark, root, batch, Seq("k"))
+      ()
+    }) == want)
+  }
+
+  private type Row6 = (String, String, java.sql.Date, Double, Long, String)
+
+  test("merge parity: keys with a null date merge alike on the one-partition and exchange paths") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val d = (q: Int) => java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusMonths(3L * q))
+    // per ticker: 11 dated financials rows and one metadata row whose
+    // date is null; the window groups the nulls of a key together
+    def rows(b: Long, tickers: Range, q: Int => Boolean) = for {
+      t <- tickers; (rt, qs) <- Seq("financials" -> (0 until 11), "metadata" -> Seq(-1)); i <- qs
+      if q(i)
+    } yield (f"TK$t%04d", rt, if (i < 0) null else d(i), b * 100.0 + i, b, s"b${t % 8}")
+    def tbl(rs: Seq[(String, String, java.sql.Date, Double, Long, String)]) =
+      rs.toDF("ticker", "record_type", "period_end_date", "value", "batch_id", "bucket")
+    val keys = Seq("ticker", "record_type", "period_end_date")
+    val base = rows(0L, 0 until 200, _ => true)
+    // restates every null-date key and every even quarter, and adds
+    // the null-date key of 40 new tickers
+    val batch = rows(1L, 0 until 200, i => i < 0 || (i % 2 == 0)) ++ rows(1L, 500 until 540, _ < 0)
+    def latest(rs: Seq[Row6]) = rs.map(r => (r._1, r._2, Option(r._3)) -> r).toMap
+    val want = (latest(base) ++ latest(batch)).values.toSet
+    for (partitioned <- Seq(true, false)) {
+      val got = smallAndExchangeLocal(s"graft_par_null_$partitioned") { root =>
+        if (partitioned) {
+          VersionedTable.commitPartitioned(spark, root, tbl(base), "bucket", -1L)
+          VersionedTable.mergePartitioned(spark, root, tbl(batch), keys, "bucket", Seq("batch_id"))
+        } else {
+          VersionedTable.commit(spark, root, tbl(base), -1L)
+          VersionedTable.merge(spark, root, tbl(batch), keys, Seq("batch_id"))
+        }
+        ()
+      }.map(r => (r.getString(0), r.getString(1), r.getDate(2), r.getDouble(3), r.getLong(4),
+                  r.getString(5)))
+      assert(got.size == want.size && got.toSet == want, s"partitioned=$partitioned")
+    }
+  }
+
+  test("merge parity: in-batch duplicate keys resolve by tieBreak alike on both paths") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    def tbl(rs: Seq[(Long, String, Double, Long)]) = rs.toDF("k", "part", "x", "seq")
+    val base = (0 until 2000).map(i => (i.toLong, s"p${i % 8}", 0.0, 0L))
+    // every batch key three times: seq 3, 1, 2 in that order; the
+    // lowest seq wins
+    val batch = for (i <- 0 until 1200; s <- Seq(3L, 1L, 2L))
+      yield (i.toLong * 3, s"p${(i * 3) % 8}", s * 10.0 + i, s)
+    val won = batch.filter(_._4 == 1L).map(r => r._1 -> r).toMap
+    val want = (base.map(r => r._1 -> r).toMap ++ won).values.toSet
+    for (partitioned <- Seq(true, false)) {
+      val got = smallAndExchangeLocal(s"graft_par_dup_$partitioned") { root =>
+        if (partitioned) {
+          VersionedTable.commitPartitioned(spark, root, tbl(base), "part", -1L)
+          VersionedTable.mergePartitioned(spark, root, tbl(batch), Seq("k"), "part", Seq("seq"))
+        } else {
+          VersionedTable.commit(spark, root, tbl(base), -1L)
+          VersionedTable.merge(spark, root, tbl(batch), Seq("k"), Seq("seq"))
+        }
+        ()
+      }.map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
+      assert(got.size == want.size && got.toSet == want, s"partitioned=$partitioned")
+      // creation from a duplicate-key batch dedupes by the same rule
+      val created = smallAndExchangeLocal(s"graft_par_dup0_$partitioned") { root =>
+        if (partitioned) VersionedTable.mergePartitioned(spark, root, tbl(batch), Seq("k"), "part", Seq("seq"))
+        else VersionedTable.merge(spark, root, tbl(batch), Seq("k"), Seq("seq"))
+        ()
+      }.map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
+      assert(created.toSet == won.values.toSet && created.size == won.size, s"partitioned=$partitioned")
+    }
+  }
+
+  test("merge parity: a non-local source is checkpointed once and survives a stale-base retry on both paths") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    def tbl(rs: (Long, Double, String)*) = rs.toSeq.toDF("k", "x", "pb")
+    val evaluated = spark.sparkContext.longAccumulator("graft_par_src")
+    // a repartitioned source: not driver-local, so it is checkpointed;
+    // each row it evaluates counts once
+    def counted(rs: (Long, Double, String)*) = {
+      val (acc, df) = (evaluated, tbl(rs: _*))
+      df.repartition(4).map { r => acc.add(1); r }(df.encoder)
+    }
+    val aRows = (0 until 1500).map(i => (i.toLong * 2, -1.0, "a"))
+    val bRows = (0 until 1500).map(i => (i.toLong * 2 + 1, -2.0, "b"))
+    val rebased = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    val (got, _) = smallAndExchangeMerge("graft_par_ckpt") { root =>
+      VersionedTable.commitPartitioned(spark, root,
+        tbl((0 until 3000).map(i => (i.toLong, 0.0, if (i % 2 == 0) "a" else "b")): _*), "pb", -1L) // v0
+      VersionedTable.mergePartitioned(spark, root, tbl((0L, 5.0, "a")), Seq("k"), "pb")         // v1
+      // staged against the stale v0, touching only b: rebases
+      evaluated.reset()
+      assert(VersionedTable.mergePartitionedFrom(spark, root, counted(bRows: _*), Seq("k"), "pb",
+        Nil, 3, firstBase = Some(0L)) == 2L)
+      rebased += VersionedTable.lastMergeRebased
+      assert(evaluated.sum == bRows.size, s"source evaluated ${evaluated.sum} rows")
+      // staged against v0 but touching a, which v1 changed: recomputes
+      // against the head, re-reading the checkpoint, not the source
+      evaluated.reset()
+      assert(VersionedTable.mergePartitionedFrom(spark, root, counted(aRows: _*), Seq("k"), "pb",
+        Nil, 3, firstBase = Some(0L)) == 3L)
+      rebased += VersionedTable.lastMergeRebased
+      assert(evaluated.sum == aRows.size, s"source evaluated ${evaluated.sum} rows")
+      ()
+    }
+    assert(rebased == Seq(true, false, true, false))
+    val want = ((0 until 3000).map(i => i.toLong -> (if (i % 2 == 0) -1.0 else -2.0))).toMap
+    assert(got.map(r => r.getLong(0) -> r.getDouble(1)).toMap == want && got.size == 3000)
   }
 
   test("empty-string partition values are rejected by name in every partition-native write") {
