@@ -40,9 +40,11 @@ import graft.sources.{Landing, MaterializedAgg, VersionedTable}
   *
   * Scale shape: the landing loop is per-file O(file) with a bounded
   * manifest anti-join; flatten/normalize are map-side projections on
-  * the raw scan; the merge is the q08 single-shuffle window (full
-  * snapshot rewrite here — mergePartitioned/mergeSkipping are the
-  * partitioned tiers, exercised by their own rows); the change feed
+  * the raw scan; the merge is the q08 single-shuffle window, run by
+  * VersionedTable's one rewrite engine picking every dir here (a full
+  * snapshot rewrite; mergePartitioned and mergeSkipping are the same
+  * engine with a partition or a stats pick, exercised by their own
+  * rows); the change feed
   * is one co-partitioned full-outer join that the serving refresh
   * consumes at O(feed) without rescanning the table; metadata and
   * audit are one window shuffle each on their natural keys. No

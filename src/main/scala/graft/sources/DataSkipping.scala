@@ -381,16 +381,18 @@ object DataSkipping {
   /** FILE-LEVEL (stats-pruned) MERGE — the delta-rs merge boundary
     * itself, the one tier between [[VersionedTable.merge]] (O(table)
     * rewrite) and [[VersionedTable.mergePartitioned]] (needs a
-    * dedicated partition column): find the dirs whose `[min, max]`
-    * stats on `statKey` intersect the batch's key range, merge the
-    * batch into THOSE dirs' rows only, and publish one fresh dir plus
-    * every non-intersecting dir carried forward byte-for-byte (exactly
-    * how a Delta MERGE prunes its file list with per-file stats before
-    * rewriting, reference queue_for_delta.py:680-799). Cost is
-    * O(intersecting dirs) + O(batch); on a key-clustered layout
-    * ([[zOrderCommit]] / range-partitioned writes) a narrow batch
-    * touches a narrow slice of dirs — stats pruning is the merge's
-    * file boundary, not just the read path's.
+    * dedicated partition column): the [[VersionedTable.rewrite]]
+    * engine picking the dirs whose `[min, max]` stats on `statKey`
+    * intersect the batch's key range ([[GraftFileIndex.keptRels]]),
+    * merging the batch into THOSE dirs' rows only, and publishing one
+    * fresh dir plus every non-intersecting dir carried forward
+    * byte-for-byte (exactly how a Delta MERGE prunes its file list with
+    * per-file stats before rewriting, reference
+    * queue_for_delta.py:680-799). Cost is O(intersecting dirs) +
+    * O(batch); on a key-clustered layout ([[zOrderCommit]] /
+    * range-partitioned writes) a narrow batch touches a narrow slice of
+    * dirs — stats pruning is the merge's file boundary, not just the
+    * read path's.
     *
     * Contracts, stated honestly:
     *  - `statKey` must be one of `keys` and numeric-comparable (the
@@ -406,67 +408,92 @@ object DataSkipping {
     *    sharing no actual batch key is rewritten anyway (cost, never
     *    correctness — tight exactly when the layout clusters the key).
     *
-    * The fresh dir lands UNSCOPED with write-time stats for `statKey`,
+    * The small-merge rules of [[VersionedTable.merge]] hold: a
+    * driver-local batch is not checkpointed and its key range is read
+    * on the driver with no job (any other batch is checkpointed once,
+    * and one job reads its range), and a merge at or under AQE's
+    * advisory size runs in one task with no exchange. The fresh dir
+    * lands UNSCOPED with write-time stats for `statKey` (the picked
+    * dirs' bounds joined with the batch's range; no job reads it back),
     * so the next merge prunes against it too; on a z-ordered table
     * [[reclusterDelta]] later folds it back into the clustered layout
-    * (unscoped dirs are its delta set by construction). Optimistic
-    * concurrency matches [[VersionedTable.merge]]: a lost publish race
-    * recomputes against the fresh head. */
+    * (unscoped dirs are its delta set by construction). A lost publish
+    * race rebases when the head's pick for the batch range is the same
+    * dir set, and recomputes against the head otherwise. */
   def mergeSkipping(spark: SparkSession, root: String, source: DataFrame,
                     keys: Seq[String], statKey: String,
-                    tieBreak: Seq[String] = Nil, maxRetries: Int = 3): Long = {
+                    tieBreak: Seq[String] = Nil, maxRetries: Int = 3): Long =
+    mergeSkippingFrom(spark, root, source, keys, statKey, tieBreak, maxRetries, None)
+
+  /** [[mergeSkipping]] with the first attempt pinned to a caller-read
+    * (possibly stale) base — the concurrency specs' seam. */
+  private[graft] def mergeSkippingFrom(spark: SparkSession, root: String, source: DataFrame,
+                                       keys: Seq[String], statKey: String,
+                                       tieBreak: Seq[String], maxRetries: Int,
+                                       firstBase: Option[Long]): Long = {
     require(keys.contains(statKey),
       s"$statKey must be one of the merge keys — pruning on a non-key " +
       "column cannot bound where matching rows live")
-    val src = source.localCheckpoint() // stable batch across retries
-    val tb = if (tieBreak.nonEmpty) tieBreak
-             else src.columns.filterNot(keys.contains).sorted.toSeq
-    val range = src.agg(min(col(statKey).cast("double")),
-                        max(col(statKey).cast("double"))).head()
-    require(!range.isNullAt(0) && !range.isNullAt(1),
-      s"batch has no non-null $statKey values to merge on")
-    val (lo, hi) = (range.getDouble(0), range.getDouble(1))
-    var attempt = 0
-    while (true) {
-      val base = VersionedTable.currentVersion(spark, root).getOrElse(-1L)
-      try {
-        if (base < 0)
-          return VersionedTable.commit(spark, root,
-            graft.operators.Relational.mergeUpsert(src.limit(0), src, keys, tb),
-            base)
-        // the base commit is read and parsed once per attempt; the
-        // index consumes stats and never builds them: build (or
-        // inherit) the base's bounds for statKey first, and hand the
-        // index those bounds rather than a second sidecar read
-        val baseCommit = VersionedTable.commitOf(spark, root, base)
-        val stats = ensureStatsTyped(spark, root, base, baseCommit, Seq(statKey), Nil)
-        val k = AttributeReference(statKey, DoubleType)()
-        val touched = VersionedTable.fileIndex(spark, root, base, baseCommit, Some(stats))
-          .keptRels(Seq(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))))
-          .toSet
-        val carried = baseCommit.entries.filterNot(e => touched.contains(e.rel))
-        lastMergeRewrote = touched.size
-        lastMergeCarried = carried.size
-        val before =
-          if (touched.isEmpty) src.limit(0)
-          else VersionedTable.readDirs(spark, root, base, baseCommit, touched.toSeq)
-        // the base reads with the version's logged schema: a batch
-        // shaped before a later column evolution merges in with those
-        // columns null, as every read of its rows would show them
-        val have = src.columns.map(_.toLowerCase).toSet
-        val padded = before.schema.filterNot(c => have(c.name.toLowerCase))
-          .foldLeft(src)((d, c) => d.withColumn(c.name, lit(null).cast(c.dataType)))
-        val merged = graft.operators.Relational.mergeUpsert(before, padded, keys, tb)
-        val v = VersionedTable.commitCarrying(spark, root, merged, base, baseCommit, carried)
-        // write-time stats for the fresh dir (carried dirs inherit)
-        ensureStatsTyped(spark, root, v, Seq(statKey), Nil)
-        return v
-      } catch {
-        case _: VersionedTable.VersionConflictException if attempt < maxRetries =>
-          attempt += 1
-      }
+    val tb = VersionedTable.effectiveTieBreak(source, keys, tieBreak)
+    // the batch's range, and the last pick's stats: the landed head's
+    var range = NumStat(Double.NaN, Double.NaN)
+    var headStats = Map.empty[String, Map[String, Stat]]
+    val v = VersionedTable.rewrite(spark, root, source, firstBase, maxRetries,
+                                   scope = _ => None) { src =>
+      val key = col(statKey).cast("double")
+      val (lo, hi) =
+        if (VersionedTable.isLocal(src)) {
+          val ks = src.select(key).collect().filterNot(_.isNullAt(0)).map(_.getDouble(0))
+            .sorted(Ordering.Double.TotalOrdering) // NaN last, as Spark orders it
+          require(ks.nonEmpty, s"batch has no non-null $statKey values to merge on")
+          (ks.head, ks.last)
+        } else {
+          val r = src.agg(min(key), max(key)).head()
+          require(!r.isNullAt(0) && !r.isNullAt(1),
+            s"batch has no non-null $statKey values to merge on")
+          (r.getDouble(0), r.getDouble(1))
+        }
+      range = NumStat(lo, hi)
+      val k = AttributeReference(statKey, DoubleType)()
+      VersionedTable.Rewrite(
+        (v, c) => if (v < 0) Set.empty[String] else {
+          // the index consumes stats and never builds them: build (or
+          // inherit) the version's bounds for statKey first, and hand
+          // the index those bounds rather than a second sidecar read
+          val stats = ensureStatsTyped(spark, root, v, c, Seq(statKey), Nil)
+          val picked = VersionedTable.fileIndex(spark, root, v, c, Some(stats))
+            .keptRels(Seq(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))))
+            .toSet
+          lastMergeRewrote = picked.size
+          lastMergeCarried = c.entries.size - picked.size
+          headStats = stats
+          picked
+        },
+        {
+          case None => Some(VersionedTable.upsert(spark, src.limit(0), src, keys, tb))
+          case Some(before) =>
+            // the base reads with the version's logged schema: a batch
+            // shaped before a later column evolution merges in with
+            // those columns null, as every read of its rows shows them
+            val have = src.columns.map(_.toLowerCase).toSet
+            val padded = before.schema.filterNot(c => have(c.name.toLowerCase))
+              .foldLeft(src)((d, c) => d.withColumn(c.name, lit(null).cast(c.dataType)))
+            Some(VersionedTable.upsert(spark, before, padded, keys, tb))
+        })
     }
-    -1L // unreachable
+    // write-time stats with no read-back: carried dirs keep their
+    // bounds, and the fresh dir holds exactly the picked dirs' keys and
+    // the batch's, so its statKey bounds are theirs combined (NaN
+    // ordered as Spark's min/max order it; the no-stat sentinel skipped)
+    val rels = VersionedTable.commitOf(spark, root, v).entries.map(_.rel).toSet
+    val bounds = range +: headStats.toSeq.collect {
+      case (rel, cs) if !rels(rel) => cs(statKey) }.collect {
+      case b @ NumStat(mn, mx) if !(mn.isNaN && mx.isNaN) => b }
+    val fresh: Stat = NumStat(bounds.map(_.mn).min(Ordering.Double.TotalOrdering),
+                              bounds.map(_.mx).max(Ordering.Double.TotalOrdering))
+    writeSidecar(spark, root, v,
+      rels.map(r => r -> headStats.getOrElse(r, Map(statKey -> fresh))).toMap)
+    v
   }
 
   // ---- bloom skipping tier --------------------------------------------

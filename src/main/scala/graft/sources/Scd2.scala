@@ -31,10 +31,12 @@ import org.apache.spark.sql.functions._
   * nothing and returns the current version (idempotent); the source
   * is deduped per key deterministically (all non-key columns as
   * tie-break, the [[VersionedTable.merge]] convention) so re-executed
-  * merges cannot diverge. The rewrite is O(table) like
-  * [[VersionedTable.merge]]; a partition-scoped variant would follow
-  * [[VersionedTable.mergePartitioned]]'s dir-carrying shape (NOT
-  * implemented here).
+  * merges cannot diverge. Both merges run on
+  * [[VersionedTable.rewrite]], the engine behind
+  * [[VersionedTable.merge]] with the type-2 combine: [[mergeScd2]]
+  * rewrites the whole table, [[mergeScd2Partitioned]] only the touched
+  * partitions, and a lost publish race rebases or recomputes by the
+  * engine's one rule.
   *
   * Scale shape: ONE shuffle of current rows + batch on the key
   * (change detection); history rows are unioned through untouched —
@@ -66,13 +68,12 @@ object Scd2 {
   }
 
   /** Deterministic per-key dedupe of the batch (same convention as
-    * VersionedTable.merge's default tie-break). */
+    * VersionedTable.merge's default tie-break); the engine checkpoints
+    * it once. */
   private def dedupedSource(source: DataFrame, keys: Seq[String]): DataFrame = {
     val attrs = source.columns.toSeq.filterNot(keys.contains)
     require(attrs.nonEmpty, "SCD2 needs at least one non-key attribute")
-    graft.operators.Relational
-      .mergeUpsert(source.limit(0), source, keys, attrs)
-      .localCheckpoint(eager = false)
+    graft.operators.Relational.mergeUpsert(source.limit(0), source, keys, attrs)
   }
 
   private def initFrame(src: DataFrame, ets: Column): DataFrame =
@@ -123,26 +124,23 @@ object Scd2 {
 
   /** SCD2-merge `source` (business columns only) at effective time
     * `effTs` (an ISO timestamp literal); returns the committed
-    * version. */
+    * version, or the current one when the batch changes nothing. */
   def mergeScd2(spark: SparkSession, root: String, source: DataFrame,
                 keys: Seq[String], effTs: String): Long = {
     val ets = parsedTs(spark, effTs)
-    val src = dedupedSource(source, keys)
-    val base = VersionedTable.currentVersion(spark, root)
-    if (base.isEmpty)
-      return VersionedTable.commit(spark, root, initFrame(src, ets), -1L)
-    val snap = VersionedTable.readAsOf(spark, root, base.get)
-    scd2Result(snap, src, keys, ets, effTs) match {
-      case None => base.get
-      case Some(result) => VersionedTable.commit(spark, root, result, base.get)
-    }
+    VersionedTable.rewrite(spark, root, dedupedSource(source, keys), None, maxRetries = 3)(src =>
+      VersionedTable.Rewrite(VersionedTable.allDirs, {
+        case None => Some(initFrame(src, ets))
+        case Some(snap) => scd2Result(snap, src, keys, ets, effTs)
+      }))
   }
 
-  /** PARTITION-SCOPED SCD2 merge — the dir-carrying shape of
-    * [[VersionedTable.mergePartitioned]] applied to the type-2 merge:
-    * only the partition dirs the batch touches are read and rewritten
-    * (each touched partition's full history rides along in its dir);
-    * every untouched partition's dirs are carried forward
+  /** PARTITION-SCOPED SCD2 merge — the engine's partition pick
+    * ([[VersionedTable.touchedPartitions]], as
+    * [[VersionedTable.mergePartitioned]] takes it) with the type-2
+    * combine: only the partition dirs the batch touches are read and
+    * rewritten (each touched partition's full history rides along in
+    * its dir); every untouched partition's dirs are carried forward
     * byte-for-byte. A batch touching 1 of N partitions stages O(1
     * partition), not O(table) — the dominant write in the reference's
     * loop at its delta-rs cost.
@@ -162,39 +160,13 @@ object Scd2 {
       s"$partitionCol must be part of the merge key — SCD2 rows of one key " +
       "(current and history) must never move between partitions")
     val ets = parsedTs(spark, effTs)
-    val src = dedupedSource(source, keys)
-    // the same contract every partition-native write path enforces,
-    // checked HERE so the caller gets the explicit error instead of a
-    // bare NPE from sorting the collected partition values
-    require(src.filter(col(partitionCol).isNull).isEmpty,
-      s"null $partitionCol values cannot be partition-routed; " +
-      "coalesce them to a sentinel value before the merge")
-    val base = VersionedTable.currentVersion(spark, root)
-    if (base.isEmpty)
-      return VersionedTable.commitPartitioned(
-        spark, root, initFrame(src, ets), partitionCol, -1L)
-    val entries = VersionedTable.entriesOf(spark, root, base.get)
-    require(entries.forall(_.part.isDefined),
-      s"mergeScd2Partitioned requires a partition-native table; " +
-      s"$root@v${base.get} has unscoped dirs")
-    val touched = src.select(col(partitionCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
-    val touchedEnc = touched.map(VersionedTable.encodePartition).toSet
-    val existingTouched = touched.filter(t =>
-      entries.exists(_.part.contains(VersionedTable.encodePartition(t))))
-    // the snapshot the merge sees = ONLY the touched partitions' dirs,
-    // in one scan; an all-new-partition batch sees an empty (typed)
-    // snapshot and every row inserts
-    val snap =
-      if (existingTouched.nonEmpty)
-        VersionedTable.readPartitions(spark, root, existingTouched, base)
-      else initFrame(src, ets).limit(0)
-    scd2Result(snap, src, keys, ets, effTs) match {
-      case None => base.get
-      case Some(result) =>
-        val carried = entries.filterNot(_.part.exists(touchedEnc.contains))
-        VersionedTable.commitPartitionedCarrying(
-          spark, root, result, partitionCol, base.get, carried)
+    VersionedTable.rewrite(spark, root, dedupedSource(source, keys), None, maxRetries = 3,
+                           scope = _ => Some(partitionCol)) { src =>
+      // an all-new-partition batch sees an empty (typed) snapshot, and
+      // every row inserts
+      VersionedTable.Rewrite(
+        VersionedTable.touchedPartitions(root, src, partitionCol, "mergeScd2Partitioned"),
+        snap => scd2Result(snap.getOrElse(initFrame(src, ets).limit(0)), src, keys, ets, effTs))
     }
   }
 

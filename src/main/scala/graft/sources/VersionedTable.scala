@@ -42,7 +42,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     the old create-then-write publish had); a crash before the
   *     rename leaves only an invisible temp file. The loser gets
   *     [[VersionConflictException]], cleans up its staged dir, and can
-  *     retry against the fresh snapshot ([[merge]] does exactly that).
+  *     retry against the fresh snapshot (the [[rewrite]] engine behind
+  *     every merge, delete and rebasing append does exactly that, or
+  *     republishes its staged dirs when the winner touched none of the
+  *     dirs it read).
   *     Defensively, a zero-length commit file (a legacy writer's crash
   *     window) is treated as UNCOMMITTED everywhere.
   *
@@ -72,15 +75,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * lists nothing, and a file the log does not name (a failed task
   * attempt's leftover) is never read. A line written before commits
   * listed files is `dir` or `dir<TAB>partitionValue`, and readers list
-  * that dir. [[commit]]/[[merge]] publish a single full snapshot;
+  * that dir. [[commit]] publishes a single full snapshot;
   * [[append]] adds ONLY the new rows' dir to the predecessor's list —
-  * the add-file action that makes appends O(delta) — and
-  * [[mergePartitioned]] rewrites ONLY the partition dirs the source
-  * batch touches, carrying every untouched partition dir forward
-  * unchanged (the copy-on-write file pruning delta-rs does: upsert
-  * cost is O(touched partitions), not O(table)). [[compact]] folds a
-  * long chain back into one snapshot and [[vacuum]] deletes only dirs
-  * no retained version reaches.
+  * the add-file action that makes appends O(delta) — and the
+  * [[rewrite]] engine replaces only the dirs a verb picks and carries
+  * every other dir forward unchanged: [[merge]] picks every dir,
+  * [[mergePartitioned]] the touched partitions' (the copy-on-write
+  * file pruning delta-rs does: upsert cost is O(touched partitions),
+  * not O(table)), [[DataSkipping.mergeSkipping]] the
+  * stats-intersecting ones and [[appendRebase]] none. [[compact]]
+  * folds a long chain back into one snapshot and [[vacuum]] deletes
+  * only dirs no retained version reaches.
   *
   * Every commit also logs its version's schema (`#schema`, all fields
   * nullable, as a parquet read reports them): a full snapshot logs
@@ -546,15 +551,17 @@ object VersionedTable {
   /** Append with AUTOMATIC conflict rebase — Delta's append-only
     * conflict rule realized on this log: a pure add-file commit reads
     * NOTHING from the snapshot it staged against, so losing the
-    * publish race never invalidates the staged data. The loser
-    * re-reads the new head's dir list and republishes the SAME staged
-    * dir against it — staging happens ONCE, only the O(1) publish
-    * retries (a [[merge]]/[[commit]] loser must instead re-run its
-    * logic against the new snapshot; that is merge's retry path, not
-    * this one). This is what lets many independent ingest writers land
-    * on one table without coordinating: appends commute. Bounded
-    * attempts guard a pathologically hot log; on give-up the staged
-    * dir is reclaimed and the conflict rethrown. */
+    * publish race never invalidates the staged data. It is the
+    * [[rewrite]] engine with no candidate dirs: the staged batch is
+    * the rows themselves, and since the (empty) pick never changes,
+    * every lost race rebases — the loser republishes the SAME staged
+    * dir over the new head, staging ONCE. This is what lets many
+    * independent ingest writers land on one table without
+    * coordinating: appends commute. The batch passes the table's
+    * CHECK constraints before it stages, and on a partition-native
+    * table it stages one dir per partition value. Bounded attempts
+    * guard a pathologically hot log; on give-up the staged dir is
+    * reclaimed and the conflict rethrown. */
   def appendRebase(spark: SparkSession, root: String, df: DataFrame,
                    maxAttempts: Int = 10): Long =
     appendRebaseFrom(spark, root, df,
@@ -571,7 +578,7 @@ object VersionedTable {
                       maxAttempts: Int = 10): Long =
     appendRebaseFrom(spark, root, df,
       currentVersion(spark, root).getOrElse(-1L), maxAttempts,
-      meta = Seq(s"#txn\t${java.net.URLEncoder.encode(appId, "UTF-8")}\t$batchId"))
+      meta = txnLines(Some((appId, batchId))))
 
   /** [[appendRebase]] with the FIRST attempt pinned to a caller-read
     * (possibly stale) base — the read-then-race window made explicit,
@@ -579,31 +586,9 @@ object VersionedTable {
   private[graft] def appendRebaseFrom(spark: SparkSession, root: String,
                                       df: DataFrame, firstBase: Long,
                                       maxAttempts: Int = 10,
-                                      meta: Seq[String] = Nil): Long = {
-    val f = fs(spark, root)
-    val rel = s"data/append-${java.util.UUID.randomUUID()}"
-    val staged = s"$root/$rel"
-    val entry = stageUnscoped(spark, root, df, rel, firstBase + 1)
-    var attempt = 0
-    var base = firstBase
-    while (true) {
-      attempt += 1
-      val c = if (base < 0) None else Some(commitOf(spark, root, base))
-      try {
-        // no-op conflict cleanup: the staged dir survives a lost race
-        // for the rebase; it is reclaimed only on final give-up
-        publish(spark, root, base + 1, c.fold(Seq.empty[Entry])(_.entries) :+ entry,
-                stagedSchema(spark, root, c, df.schema, () => f.delete(p(staged), true)),
-                onConflictCleanup = () => (), meta = meta)
-        return base + 1
-      } catch {
-        case e: VersionConflictException =>
-          if (attempt >= maxAttempts) { f.delete(p(staged), true); throw e }
-          base = currentVersion(spark, root).getOrElse(-1L)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+                                      meta: Seq[String] = Nil): Long =
+    rewrite(spark, root, df, Some(firstBase), maxAttempts - 1, meta = meta)(src =>
+      Rewrite((_, _) => Set.empty, _ => Some(src)))
 
   /** TIMESTAMP AS OF resolution: the newest version whose commit file
     * was published at or before `tsMillis` — commit-file modification
@@ -706,7 +691,7 @@ object VersionedTable {
     // emptiness come back from what the tasks wrote — no pre-write
     // checkpoint/isEmpty/distinct jobs
     enforceConstraints(spark, root, df)
-    stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
+    stagePartitionsOrEmpty(spark, root, df, partitionCol, next, freshDir(next)) match {
       case None =>
         // an EMPTY append is a marker-only commit (carry + meta,
         // nothing staged, so the base's data and schema) — an idle
@@ -767,7 +752,7 @@ object VersionedTable {
         publish(spark, root, next, carried ++ staged, schema,
                 onConflictCleanup = () => f.delete(p(s"$root/$parent"), true), meta = meta)
       case None =>
-        val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
+        val parent = freshDir(next)
         val staged =
           try fragmented.map { pv =>
             stageUnscoped(spark, root, scanOf(spark, root, base, c, Some(Set(pv))),
@@ -862,7 +847,7 @@ object VersionedTable {
     enforceConstraints(spark, root, df)
     val f = fs(spark, root)
     val next = base + 1
-    val rel = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
+    val rel = freshDir(next)
     val entry = stageUnscoped(spark, root, df, rel, next)
     val cleanup = () => { f.delete(p(s"$root/$rel"), true); () }
     publish(spark, root, next, carryOver :+ entry,
@@ -988,8 +973,8 @@ object VersionedTable {
     * in name order. Without this, re-executions of the same merge (the
     * view-maintenance path re-runs mergeUpsert) could pick different
     * winners and silently diverge. */
-  private def effectiveTieBreak(source: DataFrame, keys: Seq[String],
-                                tieBreak: Seq[String]): Seq[String] =
+  private[sources] def effectiveTieBreak(source: DataFrame, keys: Seq[String],
+                                         tieBreak: Seq[String]): Seq[String] =
     if (tieBreak.nonEmpty) tieBreak
     else source.columns.filterNot(keys.contains).sorted.toSeq
 
@@ -1001,29 +986,143 @@ object VersionedTable {
     * the window, the value sort and the parquet write run in the one
     * staging task: one Spark job. A larger union keeps the hash
     * exchange on the merge key. */
-  private def upsert(spark: SparkSession, target: DataFrame, source: DataFrame,
-                     keys: Seq[String], tieBreak: Seq[String]): DataFrame =
+  private[sources] def upsert(spark: SparkSession, target: DataFrame, source: DataFrame,
+                              keys: Seq[String], tieBreak: Seq[String]): DataFrame =
     graft.operators.Relational.mergeUpsertOver(target, source, keys, tieBreak)(
       StagingWriter.oneTaskIfSmall(spark, _))
 
-  /** MERGE `source` into the table under optimistic concurrency: read
-    * the latest snapshot, upsert with the shared
+  // ---- the rewrite engine ----------------------------------------------
+
+  /** What one rewrite verb does, over its stable source: `candidates`
+    * picks the dirs of a version (its number and parsed commit) whose
+    * rows the verb replaces, and `combine` turns those dirs' rows
+    * (None when it picks no dir) into the rows staged in their place,
+    * or None when there is nothing to commit. */
+  private[sources] final case class Rewrite(candidates: (Long, Commit) => Set[String],
+                                            combine: Option[DataFrame] => Option[DataFrame])
+
+  /** The pick of a whole-table rewrite: every dir. */
+  private[sources] val allDirs: (Long, Commit) => Set[String] =
+    (_, c) => c.entries.map(_.rel).toSet
+
+  /** The base a rewrite of an absent table starts from (version -1). */
+  private val NoCommit = Commit(Nil, None, None)
+
+  /** Whether `df` is driver-local (a `LocalRelation`: `createDataFrame`
+    * of a local list, `Seq.toDF`): stable as it is, and readable on the
+    * driver with no job. */
+  private[sources] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** True when the most recent [[rewrite]] landed its staged dirs over
+    * a head it did not stage against (a rebase, no restaging) — the
+    * spec's evidence that the stage-once path actually ran. */
+  @volatile var lastMergeRebased: Boolean = false
+
+  /** The ONE write engine behind [[merge]], [[mergePartitioned]],
+    * [[deleteKeys]], [[appendRebase]], [[DataSkipping.mergeSkipping]]
+    * and the [[Scd2]] merges; each is a thin caller supplying `plan`.
+    *
+    *  1. A source that is not driver-local is checkpointed once, so
+    *     every attempt sees the same rows; `plan` gets the stable
+    *     source and returns the verb's [[Rewrite]].
+    *  1. Per attempt, the base version's commit is read once; its
+    *     candidate dirs are read and combined with the source.
+    *  1. The combined rows pass the CHECK constraints, then stage: one
+    *     dir per partition value when `scope` of the base names a
+    *     column (by default its `#partcol`), else one unscoped dir.
+    *  1. The commit publishes the staged dirs plus every base entry
+    *     that is not a candidate, carried byte-for-byte.
+    *  1. A lost race applies one rule, Delta's file-level conflict
+    *     check at dir granularity: if the candidates' pick on the new
+    *     head is the same dir set, nothing the rewrite read has
+    *     changed, so the SAME staged dirs republish over the head (a
+    *     rebase); otherwise they are deleted and the rewrite recomputes
+    *     against the head. With no candidates (an append) every race
+    *     rebases; for a partition pick it is the disjoint-partition
+    *     rule.
+    *
+    * `firstBase` pins the first attempt's base (the concurrency specs'
+    * seam); later attempts read the head. After `maxRetries` lost races
+    * the staged dirs are reclaimed and the conflict rethrown. */
+  private[sources] def rewrite(spark: SparkSession, root: String, source: DataFrame,
+                               firstBase: Option[Long], maxRetries: Int,
+                               scope: Commit => Option[String] = _.partCol,
+                               meta: Seq[String] = Nil)(plan: DataFrame => Rewrite): Long = {
+    val f = fs(spark, root)
+    val rw = plan(if (isLocal(source)) source else source.localCheckpoint(eager = false))
+    def at(v: Long) = if (v < 0) NoCommit else commitOf(spark, root, v)
+    lastMergeRebased = false
+    var attempt = 0
+    var base = firstBase.getOrElse(currentVersion(spark, root).getOrElse(-1L))
+    var c = at(base)
+    var picked = rw.candidates(base, c)
+    while (true) {
+      val combined = rw.combine(
+        if (picked.isEmpty) None else Some(readDirs(spark, root, base, c, picked.toSeq)))
+      if (combined.isEmpty) return base
+      val out = combined.get
+      enforceConstraints(spark, root, out)
+      val next = base + 1
+      val partCol = scope(c)
+      // a stage that replaces no dir may land at any later version
+      val parent = if (picked.isEmpty) s"data/append-${java.util.UUID.randomUUID()}"
+                   else freshDir(next)
+      val scoped = partCol.map(pc =>
+        stagePartitionsOrEmpty(spark, root, out, pc, next, parent).fold(Seq.empty[Entry])(_._2))
+      // no rows to route and nothing left to carry (a delete that empties
+      // the table): an empty unscoped dir keeps the version readable
+      val staged = scoped
+        .filterNot(_.isEmpty && c.entries.nonEmpty && c.entries.forall(e => picked(e.rel)))
+        .getOrElse(Seq(stageUnscoped(spark, root, out, parent, next)))
+      // publish over head `h`, rebasing while its pick stays `picked`
+      var (h, hc, hp) = (base, c, picked)
+      try while (hp == picked) {
+        try {
+          val carried = hc.entries.filterNot(e => picked(e.rel))
+          require(carried.nonEmpty || staged.nonEmpty,
+            s"refusing to publish a dir-less version at $root (empty rewrite, empty carry)")
+          val schema =
+            if (staged.isEmpty) schemaOf(spark, root, hc)
+            else stagedSchema(spark, root, Some(hc).filter(_ => carried.nonEmpty), out.schema,
+                              () => ())
+          publish(spark, root, h + 1, carried ++ staged, schema, onConflictCleanup = () => (),
+                  meta = partCol.orElse(hc.partCol).map(partColMetaLine).toSeq ++ meta)
+          lastMergeRebased = h != base
+          return h + 1
+        } catch {
+          case _: VersionConflictException if attempt < maxRetries =>
+            attempt += 1
+            h = currentVersion(spark, root).getOrElse(-1L)
+            hc = at(h)
+            hp = rw.candidates(h, hc)
+        }
+      } catch { case e: Throwable => f.delete(p(s"$root/$parent"), true); throw e }
+      // the head moved the pick: recompute against it
+      f.delete(p(s"$root/$parent"), true)
+      base = h; c = hc; picked = hp
+    }
+    -1L // unreachable
+  }
+
+  /** MERGE `source` into the table: the [[rewrite]] engine over every
+    * dir, combined by the shared
     * [[graft.operators.Relational.mergeUpsert]] (so winner semantics
-    * cannot drift from the rest of the write path), attempt the
-    * commit; on conflict, re-read the FRESH snapshot and retry — the
-    * loser's work is recomputed against the winner's table, never
+    * cannot drift from the rest of the write path). A lost race
+    * recomputes against the FRESH snapshot — the loser's work is never
     * silently dropped or doubled. Replaying an already-applied batch
     * commits a new version with identical content (idempotent by
     * latest-wins), mirroring the reference's retried Celery merges.
     * Rewrites the FULL snapshot — use [[mergePartitioned]] when a
-    * stable partition column exists.
+    * stable partition column exists; on a partition-native table the
+    * rewrite keeps the layout, one dir per partition value.
     *
-    * Small merges are one Spark job. The source is never checkpointed
-    * (each attempt re-evaluates it; a driver-local batch is stable by
-    * construction), and a target-plus-batch union at or under AQE's
-    * advisory partition size merges in one partition with no shuffle
-    * (see [[upsert]]), so the write is the only job. A larger union
-    * keeps the hash exchange on the merge key.
+    * Small merges are one Spark job. A driver-local source is not
+    * checkpointed (any other is, once), and a target-plus-batch union
+    * at or under AQE's advisory partition size merges in one partition
+    * with no shuffle (see [[upsert]]), so the write is the only job. A
+    * larger union keeps the hash exchange on the merge key.
     *
     * `columnUpdate = true` switches matched-row semantics from
     * whole-row replace to COLUMN-LEVEL update (delta-rs
@@ -1040,44 +1139,32 @@ object VersionedTable {
             maxRetries: Int = 3, allowSchemaEvolution: Boolean = false,
             columnUpdate: Boolean = false): Long = {
     val tb = effectiveTieBreak(source, keys, tieBreak)
-    var attempt = 0
-    while (true) {
-      val base = currentVersion(spark, root).getOrElse(-1L)
-      val merged =
-        // creation dedupes the batch itself with merge semantics — a
-        // duplicate-key first batch must not seed more rows than any
-        // later merge would leave, or a change-feed consumer seeded
-        // from v0 diverges from recompute on the first update
-        if (base < 0) upsert(spark, source.limit(0), source, keys, tb)
-        else if (columnUpdate) {
-          val target = readAsOf(spark, root, base)
-          val shared = target.columns.toSet.intersect(source.columns.toSet)
-          shared.foreach { c =>
-            require(target.schema(c).dataType == source.schema(c).dataType,
-              s"column-level merge cannot reconcile column '$c': " +
-                s"${target.schema(c).dataType} vs ${source.schema(c).dataType}")
-          }
-          val newCols = source.columns.filterNot(target.columns.contains)
-          require(allowSchemaEvolution || newCols.isEmpty,
-            s"batch carries new columns ${newCols.mkString(", ")} — " +
-              "pass allowSchemaEvolution=true to widen the table")
-          require(keys.forall(source.columns.contains),
-            s"batch must carry every merge key (${keys.mkString(", ")})")
-          graft.operators.Relational.mergeUpdateColumns(target, source, keys, tb)
-        } else {
-          val target = readAsOf(spark, root, base)
-          val (t2, s2) =
-            if (allowSchemaEvolution) alignSchemas(target, source)
-            else (target, source) // mismatched schemas fail LOUDLY in unionByName
-          upsert(spark, t2, s2, keys, tb)
+    rewrite(spark, root, source, None, maxRetries)(src => Rewrite(allDirs, {
+      // creation dedupes the batch itself with merge semantics — a
+      // duplicate-key first batch must not seed more rows than any
+      // later merge would leave, or a change-feed consumer seeded
+      // from v0 diverges from recompute on the first update
+      case None => Some(upsert(spark, src.limit(0), src, keys, tb))
+      case Some(target) if columnUpdate =>
+        val shared = target.columns.toSet.intersect(src.columns.toSet)
+        shared.foreach { c =>
+          require(target.schema(c).dataType == src.schema(c).dataType,
+            s"column-level merge cannot reconcile column '$c': " +
+              s"${target.schema(c).dataType} vs ${src.schema(c).dataType}")
         }
-      try return commit(spark, root, merged, base)
-      catch {
-        case _: VersionConflictException if attempt < maxRetries =>
-          attempt += 1
-      }
-    }
-    -1L // unreachable
+        val newCols = src.columns.filterNot(target.columns.contains)
+        require(allowSchemaEvolution || newCols.isEmpty,
+          s"batch carries new columns ${newCols.mkString(", ")} — " +
+            "pass allowSchemaEvolution=true to widen the table")
+        require(keys.forall(src.columns.contains),
+          s"batch must carry every merge key (${keys.mkString(", ")})")
+        Some(graft.operators.Relational.mergeUpdateColumns(target, src, keys, tb))
+      case Some(target) =>
+        val (t2, s2) =
+          if (allowSchemaEvolution) alignSchemas(target, src)
+          else (target, src) // mismatched schemas fail LOUDLY in unionByName
+        Some(upsert(spark, t2, s2, keys, tb))
+    }))
   }
 
   /** Schema evolution for [[merge]] (Delta's autoMerge, opt-in): both
@@ -1115,10 +1202,10 @@ object VersionedTable {
     * cleanup) cannot drift between them. */
   private def stagePartitions(spark: SparkSession, root: String, src: DataFrame,
                               partitionCol: String, next: Long): (String, Seq[Entry]) =
-    stagePartitionsOrEmpty(spark, root, src, partitionCol, next).getOrElse(
+    stagePartitionsOrEmpty(spark, root, src, partitionCol, next, freshDir(next)).getOrElse(
       throw new IllegalArgumentException(s"no $partitionCol values to stage"))
 
-  /** Stage `src` one dir per partition value under a fresh parent for
+  /** Stage `src` one dir per partition value under `parent`, for
     * version `next`; None when the batch is EMPTY (nothing was
     * written — callers publish a marker-only/carry-only commit).
     *
@@ -1144,8 +1231,7 @@ object VersionedTable {
     * that no workload here measures yet. */
   private def stagePartitionsOrEmpty(
       spark: SparkSession, root: String, src: DataFrame,
-      partitionCol: String, next: Long): Option[(String, Seq[Entry])] = {
-    val parent = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
+      partitionCol: String, next: Long, parent: String): Option[(String, Seq[Entry])] =
     try {
       val values = StagingWriter.stagePartitioned(spark, root, src, partitionCol, parent,
                                                   stageDesc(root, next))
@@ -1156,7 +1242,9 @@ object VersionedTable {
       }))
     }
     catch { case e: Throwable => fs(spark, root).delete(p(s"$root/$parent"), true); throw e }
-  }
+
+  /** A writer-unique data dir for version `next`. */
+  private def freshDir(next: Long) = s"data/${verName(next)}-${java.util.UUID.randomUUID()}"
 
   /** Publish `df` as a PARTITION-NATIVE snapshot: one immutable dir
     * per distinct `partitionCol` value (the value is kept as a normal
@@ -1170,44 +1258,36 @@ object VersionedTable {
                         partitionCol: String, base: Long): Long =
     commitPartitionedCarrying(spark, root, df, partitionCol, base, carried = Nil)
 
-  /** Stage `df` as ONE unscoped dir and publish `base + 1` carrying
-    * `carried` entries (from [[entriesOf]]) forward
-    * byte-for-byte — the unscoped sibling of
-    * [[commitPartitionedCarrying]], and the publish primitive a
-    * file-level (stats-pruned) merge needs: the rewritten dirs'
-    * replacement is a single fresh dir, every untouched dir rides
-    * along with its annotation (partition-scoped or not) intact.
-    * `c` is `base`'s parsed commit. */
-  private[sources] def commitCarrying(spark: SparkSession, root: String,
-                                      df: DataFrame, base: Long, c: Commit,
-                                      carried: Seq[Entry]): Long =
-    stageAndCommit(spark, root, df, base, carried = Some(c).filter(_ => carried.nonEmpty),
-                   carryOver = carried, meta = c.partCol.map(partColMetaLine).toSeq)
-
   /** KEYED DELETE: commit a new version holding every current row
     * whose key does NOT appear in `victims` — the `whenMatchedDelete`
     * half of the reference's merge (queue_for_delta.py tombstones),
-    * as its own verb. O(table) rewrite by design (the simple tier;
-    * [[mergePartitioned]] with a tombstone column is the O(touched)
-    * tier) under the same optimistic-concurrency publish as
-    * [[merge]]. Returns the new version. */
+    * as its own verb: the [[rewrite]] engine over every dir, combined
+    * by a left-anti join on the keys. O(table) rewrite by design (the
+    * simple tier; [[mergePartitioned]] with a tombstone column is the
+    * O(touched) tier); a partition-native table keeps its layout, and a
+    * lost race recomputes against the fresh head. Returns the new
+    * version; an absent table throws FileNotFoundException. */
   def deleteKeys(spark: SparkSession, root: String, victims: DataFrame,
-                 keys: Seq[String]): Long = {
-    val base = headVersion(spark, root)
-    val kept = readAsOf(spark, root, base)
-      .join(victims.select(keys.map(org.apache.spark.sql.functions.col): _*)
-              .distinct(),
-            keys, "left_anti")
-    commit(spark, root, kept, base)
-  }
+                 keys: Seq[String]): Long =
+    deleteKeysFrom(spark, root, victims, keys, firstBase = None)
+
+  /** [[deleteKeys]] with the first attempt pinned to a caller-read
+    * (possibly stale) base — the concurrency specs' seam. */
+  private[graft] def deleteKeysFrom(spark: SparkSession, root: String, victims: DataFrame,
+                                    keys: Seq[String], firstBase: Option[Long]): Long =
+    rewrite(spark, root, victims, firstBase, maxRetries = 3)(src => Rewrite(allDirs, {
+      case Some(target) => Some(target.join(
+        src.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), keys, "left_anti"))
+      case None => throw new java.io.FileNotFoundException(s"no committed version at $root")
+    }))
 
   /** The shared PARTITION-SCOPED REWRITE primitive: stage `df` one dir
     * per touched partition value, and publish `base + 1` with
     * `carried` entries (from [[entriesOf]], minus the touched
     * values) carried forward byte-for-byte. Callers own the carry
-    * list — this is what a partition-scoped merge, SCD2 merge, or
-    * delta recluster have in common: O(touched) staging, O(1) carry.
-    * Same optimistic-concurrency publish as every other write. */
+    * list — what a delta recluster or an index's partition rewrite
+    * have in common: O(touched) staging, O(1) carry. A single
+    * attempt: a lost race throws [[VersionConflictException]]. */
   private[graft] def commitPartitionedCarrying(
       spark: SparkSession, root: String, df: DataFrame, partitionCol: String,
       base: Long, carried: Seq[Entry]): Long = {
@@ -1218,7 +1298,7 @@ object VersionedTable {
     // one task, one file per value, evaluating df once — no pre-write
     // checkpoint/isEmpty/null jobs
     enforceConstraints(spark, root, df)
-    stagePartitionsOrEmpty(spark, root, df, partitionCol, next) match {
+    stagePartitionsOrEmpty(spark, root, df, partitionCol, next, freshDir(next)) match {
       case None =>
         // a deletion can empty every touched partition — the commit is
         // then pure carry (the touched dirs simply leave the entry list)
@@ -1237,26 +1317,49 @@ object VersionedTable {
     next
   }
 
-  /** True when the most recent [[mergePartitioned]] landed its staged
-    * dirs through the DISJOINT-partition rebase (no restaging) — the
-    * spec's evidence that the stage-once path actually ran. */
-  @volatile var lastMergeRebased: Boolean = false
+  /** The candidate pick of a partition-scoped rewrite: the dirs of the
+    * partition values `src`'s `partitionCol` holds, read once — on the
+    * driver with no job for a driver-local source, else by one job
+    * (distinct per task, no exchange) that also materializes the
+    * source's checkpoint. Null and empty values are rejected by name;
+    * a version with unscoped dirs fails the pick, naming `verb`. */
+  private[sources] def touchedPartitions(root: String, src: DataFrame, partitionCol: String,
+                                         verb: String): (Long, Commit) => Set[String] = {
+    val values = src.select(org.apache.spark.sql.functions.col(partitionCol).cast("string"))
+      .as(org.apache.spark.sql.Encoders.STRING)
+    val touched =
+      (if (isLocal(src)) values.collect()
+       else values.mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING).collect())
+        .distinct
+    requireRoutable(touched, partitionCol)
+    val want = touched.map(enc).toSet
+    (v, c) => {
+      require(c.entries.forall(_.part.isDefined),
+        s"$verb requires a partition-native table; $root@v$v has unscoped dirs " +
+        "(create it with commitPartitioned)")
+      c.entries.filter(_.part.exists(want)).map(_.rel).toSet
+    }
+  }
 
   /** PARTITION-SCOPED merge — the copy-on-write file pruning the
     * delta-rs merge does (queue_for_delta.py:680-799 rewrites only
-    * touched files): rewrite ONLY the partition dirs the source batch
-    * touches; every untouched partition's dirs are carried forward in
-    * the commit's entry list byte-for-byte. An upsert touching 1 of N
-    * partitions stages O(1 partition) bytes, not O(table).
+    * touched files): the [[rewrite]] engine picking ONLY the partition
+    * dirs the source batch touches ([[touchedPartitions]]); every
+    * untouched partition's dirs are carried forward in the commit's
+    * entry list byte-for-byte. An upsert touching 1 of N partitions
+    * stages O(1 partition) bytes, not O(table). A lost race whose
+    * winners left every touched partition's dirs alone rebases the
+    * staged dirs; otherwise the merge recomputes against the head.
     *
     * Contract: `partitionCol` must be STABLE per key (a key's rows
     * never move between partitions — true of the reference's
     * record_type/period partitioning, where the partition columns are
     * part of the merge key); then per-partition merging is exactly
-    * global merging. The table must be partition-native (created by
-    * [[commitPartitioned]] / this method). Same optimistic-concurrency
-    * retry as [[merge]]; winner determinism follows the same
-    * [[effectiveTieBreak]] contract.
+    * global merging, and ONE merge of the touched slice with the whole
+    * batch stages every touched partition in one wave. The table must
+    * be partition-native (created by [[commitPartitioned]] / this
+    * method). Winner determinism follows the [[effectiveTieBreak]]
+    * contract.
     *
     * Small merges are one Spark job, by two rules. (a) A driver-local
     * source (a `LocalRelation`: `createDataFrame`, `Seq.toDF`) is not
@@ -1281,106 +1384,10 @@ object VersionedTable {
       spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String], partitionCol: String, tieBreak: Seq[String],
       maxRetries: Int, firstBase: Option[Long]): Long = {
-    import org.apache.spark.sql.functions.col
-    val f = fs(spark, root)
     val tb = effectiveTieBreak(source, keys, tieBreak)
-    // a driver-local batch (a LocalRelation) is stable across retries as
-    // it is, and its touched values collect on the driver with no job;
-    // any other source is checkpointed (stable slices across retries),
-    // and ONE job materializes the lazy checkpoint and returns the
-    // touched values, per-task distinct with no exchange. The
-    // null/empty check reads that list.
-    val local = source.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val src = if (local) source else source.localCheckpoint(eager = false)
-    val values = src.select(col(partitionCol).cast("string"))
-      .as(org.apache.spark.sql.Encoders.STRING)
-    val touched =
-      (if (local) values.collect()
-       else values.mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING).collect())
-        .distinct
-    requireRoutable(touched, partitionCol)
-    enforceConstraints(spark, root, src) // merge updates come from src
-    lastMergeRebased = false
-    var attempt = 0
-    var pinned = firstBase
-    while (true) {
-      val base = pinned.getOrElse(currentVersion(spark, root).getOrElse(-1L))
-      pinned = None // only the first attempt is pinned
-      if (base < 0) {
-        // creating: dedupe the batch itself with merge semantics; a
-        // creation RACE is a conflict like any other — retry against
-        // the winner's table instead of propagating
-        val deduped = upsert(spark, src.limit(0), src, keys, tb)
-        try return commitPartitioned(spark, root, deduped, partitionCol, base)
-        catch {
-          case _: VersionConflictException if attempt < maxRetries =>
-            attempt += 1
-        }
-      } else {
-      val baseCommit = commitOf(spark, root, base)
-      val baseEntries = baseCommit.entries
-      require(baseEntries.forall(_.part.isDefined),
-        s"mergePartitioned requires a partition-native table; $root@v$base has unscoped dirs " +
-        "(create it with commitPartitioned, or compact via mergePartitioned only)")
-      val next = base + 1
-      // ONE merge + ONE staging wave over all touched partitions,
-      // not a sequential merge+write job pair per partition (the
-      // stagePartitions discipline): under this method's stability
-      // contract (a key's rows never move between partitions) the
-      // global latest-wins window equals the per-partition one, so
-      // merging the union of touched dirs with the whole batch and
-      // letting stagePartitions route rows by their partition value
-      // is the same result at O(1) job launches instead of
-      // O(touched).
-      val touchedEnc = touched.map(enc).toSet
-      val target =
-        if (!baseEntries.exists(_.part.exists(touchedEnc.contains))) src.limit(0)
-        else scanOf(spark, root, base, baseCommit, Some(touchedEnc))
-      // the staging write evaluates the merge once; a retry that must
-      // recompute builds a new one against the fresh head
-      val merged = upsert(spark, target, src, keys, tb)
-      val (parent, staged) = stagePartitions(spark, root, merged, partitionCol, next)
-      // publish loop: on conflict, REBASE the same staged dirs if the
-      // winners' commits left every touched partition untouched
-      // (Delta's disjoint-file conflict rule at partition granularity:
-      // our merge read only the touched partitions, so a head that
-      // changed none of them cannot invalidate the staged result —
-      // republish against it, staging exactly once). Overlap, or an
-      // unscoped head we cannot reason about, falls back to the
-      // recompute path.
-      var pubBase = base
-      var pubCommit = baseCommit
-      var recompute = false
-      while (!recompute) {
-        val carried = pubCommit.entries.filterNot(e => e.part.exists(touchedEnc.contains))
-        try {
-          publish(spark, root, pubBase + 1, carried ++ staged,
-                  stagedSchema(spark, root, Some(pubCommit), merged.schema,
-                               () => f.delete(p(s"$root/$parent"), true)),
-                  onConflictCleanup = () => (),
-                  meta = Seq(partColMetaLine(partitionCol)))
-          lastMergeRebased = pubBase != base
-          return pubBase + 1
-        } catch {
-          case e: VersionConflictException =>
-            if (attempt >= maxRetries) { f.delete(p(s"$root/$parent"), true); throw e }
-            attempt += 1
-            val newBase = currentVersion(spark, root).getOrElse(-1L)
-            val newCommit = commitOf(spark, root, newBase)
-            val newEntries = newCommit.entries
-            val disjoint = newEntries.forall(_.part.isDefined) && {
-              def slice(es: Seq[Entry], pv: String) =
-                es.filter(_.part.contains(pv)).map(_.rel).toSet
-              touchedEnc.forall(pv => slice(newEntries, pv) == slice(baseEntries, pv))
-            }
-            if (disjoint) { pubBase = newBase; pubCommit = newCommit }
-            else { f.delete(p(s"$root/$parent"), true); recompute = true }
-        }
-      }
-      }
-    }
-    -1L // unreachable
+    rewrite(spark, root, source, firstBase, maxRetries, _ => Some(partitionCol))(src =>
+      Rewrite(touchedPartitions(root, src, partitionCol, "mergePartitioned"),
+              t => Some(upsert(spark, t.getOrElse(src.limit(0)), src, keys, tb))))
   }
 
   /** CHANGE DATA FEED between two committed versions — the real

@@ -2883,6 +2883,83 @@ class GraftSpec extends AnyFunSuite {
       "recompute must merge against the HEAD's partition state, preserving A's update")
   }
 
+  test("VersionedTable: stale-base mergeSkipping rebases over a disjoint key range, recomputes over an overlap; a stale deleteKeys lands") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_vt_msrace").toString + "/t"
+    def bucketed(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("bucket", (col("k") / lit(100)).cast("long").cast("string"))
+    def batch(rows: (Long, Long)*) = bucketed(rows.toSeq.toDF("k", "v"))
+    def snap() = VersionedTable.read(spark, root).select("k", "v").as[(Long, Long)].collect().toMap
+    VersionedTable.commitPartitioned(spark, root,
+      bucketed(spark.range(0, 1000, 2).toDF("k")).withColumn("v", col("k") * 10), "bucket", -1L) // v0
+    // the winner rewrites bucket 2's dir ([250, 250])
+    assert(DataSkipping.mergeSkipping(spark, root, batch(250L -> -1L), Seq("k"), "k") == 1L)
+    // staged against the stale v0 for [700, 701]: the head picks the
+    // same dir (bucket 7's), so the staged dir republishes over v1
+    assert(DataSkipping.mergeSkippingFrom(spark, root, batch(700L -> -7L, 701L -> -8L),
+      Seq("k"), "k", Nil, 3, firstBase = Some(0L)) == 2L)
+    assert(VersionedTable.lastMergeRebased, "a disjoint key range must land by rebase")
+    assert(DataSkipping.lastMergeRewrote == 1 && DataSkipping.lastMergeCarried == 9)
+    // the winner rewrites the merged bucket-2 dir again (252 -> -3)
+    assert(DataSkipping.mergeSkipping(spark, root, batch(252L -> -3L), Seq("k"), "k") == 3L)
+    // staged against the stale v2 for [254, 255], whose pick (v2's
+    // bucket-2 dir) v3 replaced: it recomputes against v3
+    assert(DataSkipping.mergeSkippingFrom(spark, root, batch(254L -> -4L, 255L -> -5L),
+      Seq("k"), "k", Nil, 3, firstBase = Some(2L)) == 4L)
+    assert(!VersionedTable.lastMergeRebased, "an overlapping key range must recompute")
+    val got = snap()
+    assert(got.size == 502)
+    assert(Seq(250L, 252L, 254L, 255L, 700L, 701L).map(got) == Seq(-1L, -3L, -4L, -5L, -7L, -8L),
+      "the recompute must keep the winner's update")
+    assert(got(256L) == 2560L && got(702L) == 7020L)
+    // a keyed delete staged against a stale base: the head picks
+    // other dirs, so it recomputes and lands instead of throwing
+    val droot = java.nio.file.Files.createTempDirectory("graft_vt_delrace").toString + "/t"
+    VersionedTable.commit(spark, droot, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), -1L)  // v0
+    VersionedTable.append(spark, droot, Seq((3L, "c")).toDF("id", "v"), 0L)             // v1
+    assert(VersionedTable.deleteKeysFrom(spark, droot, Seq(1L, 3L).toDF("id"), Seq("id"),
+      firstBase = Some(0L)) == 2L)
+    assert(!VersionedTable.lastMergeRebased)
+    assert(VersionedTable.read(spark, droot).as[(Long, String)].collect().toSet == Set((2L, "b")))
+  }
+
+  test("VersionedTable: whole-table writes keep a partition-native layout, so mergePartitioned works after them") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_vt_layout").toString + "/t"
+    def tbl(rows: (Long, String, Double)*) = rows.toSeq.toDF("k", "part", "x")
+    VersionedTable.commitPartitioned(spark, root,
+      tbl((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0), (4L, "c", 4.0)), "part", -1L)   // v0
+    VersionedTable.deleteKeys(spark, root, Seq(2L).toDF("k"), Seq("k"))                  // v1
+    VersionedTable.merge(spark, root, tbl((3L, "b", 30.0), (5L, "c", 5.0)), Seq("k"))    // v2
+    VersionedTable.appendRebase(spark, root, tbl((6L, "d", 6.0)))                        // v3
+    for (v <- 1L to 3L)
+      assert(VersionedTable.partitionNative(spark, root, v),
+        s"v$v published an unscoped dir: ${VersionedTable.entriesOf(spark, root, v)}")
+    assert(VersionedTable.mergePartitioned(spark, root,
+      tbl((1L, "a", 10.0), (7L, "b", 7.0)), Seq("k"), "part") == 4L)
+    def part(pv: String) =
+      VersionedTable.readPartition(spark, root, pv).as[(Long, String, Double)].collect().toSet
+    assert(part("a") == Set((1L, "a", 10.0)))
+    assert(part("b") == Set((3L, "b", 30.0), (7L, "b", 7.0)))
+    assert(part("c") == Set((4L, "c", 4.0), (5L, "c", 5.0)))
+    assert(part("d") == Set((6L, "d", 6.0)))
+    // a null partition value in such a write is rejected by name, and
+    // leaves nothing staged
+    val dirs = new java.io.File(s"$root/data").listFiles().length
+    val e = intercept[IllegalArgumentException](VersionedTable.merge(spark, root,
+      Seq((8L, None: Option[String], 8.0)).toDF("k", "part", "x"), Seq("k")))
+    assert(e.getMessage.contains("null part values"), e.getMessage)
+    assert(VersionedTable.currentVersion(spark, root).contains(4L))
+    assert(new java.io.File(s"$root/data").listFiles().length == dirs)
+    // a delete that empties the table still publishes a readable version
+    assert(VersionedTable.deleteKeys(spark, root, (1L to 7L).toDF("k"), Seq("k")) == 5L)
+    assert(VersionedTable.read(spark, root).count() == 0L)
+    assert(VersionedTable.read(spark, root).columns.toSeq == Seq("k", "part", "x"))
+  }
+
   test("VersionedTable: CHECK constraints gate every write path BEFORE staging; broken-at-birth constraints are rejected") {
     import spark.implicits._
     import graft.sources.VersionedTable
@@ -2915,6 +2992,23 @@ class GraftSpec extends AnyFunSuite {
     }
     assert(e2.name == "qty_small")
     assert(VersionedTable.constraints(spark, root).map(_._1) == Seq("qty_nonneg"))
+    // the rebasing appends, the streaming sink's txn append and a
+    // format("graft") append pass the same gate: each throws, the
+    // version stays, and nothing is left staged
+    val dirsBefore = new java.io.File(s"$root/data").listFiles().length
+    Seq[(String, () => Any)](
+      "appendRebase" -> (() => VersionedTable.appendRebase(spark, root, tbl(5L -> -1.0))),
+      "appendRebaseTxn" -> (() =>
+        VersionedTable.appendRebaseTxn(spark, root, tbl(5L -> -1.0), "ck_app", 0L)),
+      "format(graft) append" -> (() =>
+        tbl(5L -> -1.0).write.format("graft").mode("append").save(root))
+    ).foreach { case (path, write) =>
+      val ev = intercept[ConstraintViolationException](write())
+      assert(ev.name == "qty_nonneg", path)
+      assert(VersionedTable.currentVersion(spark, root).contains(1L), path)
+      assert(new java.io.File(s"$root/data").listFiles().length == dirsBefore,
+        s"$path left a staged dir")
+    }
     // partitioned path: the same gate fires in stagePartitions
     val proot = java.nio.file.Files.createTempDirectory("graft_vtckp").toString + "/t"
     val pdf = Seq((1L, 5.0, "a"), (2L, 6.0, "b")).toDF("suppkey", "qty", "pb")
@@ -6727,6 +6821,39 @@ class GraftSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, root).filter($"x" === 1.0).count() == 40)
     assert(VersionedTable.read(spark, root).count() == 220)
     assert(VersionedTable.read(spark, created).count() == 40)
+  }
+
+  test("mergeSkipping of a small driver-local batch on a table with stats launches 1 job and shuffles nothing") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.sources.{DataSkipping, VersionedTable}
+    val root = java.nio.file.Files.createTempDirectory("graft_msjobs").toString + "/t"
+    VersionedTable.commitPartitioned(spark, root, spark.range(0, 1000, 2).toDF("k")
+      .withColumn("bucket", (col("k") / lit(100)).cast("long").cast("string"))
+      .withColumn("v", col("k") * 10), "bucket", -1L)
+    DataSkipping.ensureStats(spark, root, 0L, Seq("k"))
+    val batch = Seq((250L, "2", -1L), (251L, "2", -2L)).toDF("k", "bucket", "v")
+    // the batch's key range is read on the driver, the merge of the one
+    // picked dir with the batch runs in the staging task, and the fresh
+    // dir's stats come from the picked dir's and the batch's range: the
+    // write is the only job
+    val (jobs, shuffled) =
+      sparkWork(DataSkipping.mergeSkipping(spark, root, batch, Seq("k"), "k"))
+    assert(jobs == 1, s"mergeSkipping of a 2-row batch launched $jobs jobs")
+    assert(shuffled == 0L, s"mergeSkipping of a 2-row batch shuffled $shuffled bytes")
+    assert(DataSkipping.lastMergeRewrote == 1 && DataSkipping.lastMergeCarried == 9)
+    assert(VersionedTable.read(spark, root).filter(col("k") === 251L).select("v")
+      .as[Long].collect().toSeq == Seq(-2L))
+    assert(VersionedTable.read(spark, root).count() == 501)
+    // the fresh dir's logged bounds are the min and max of its rows
+    val fresh = VersionedTable.dirsOf(spark, root, 1L)
+      .filterNot(VersionedTable.dirsOf(spark, root, 0L).toSet)
+    assert(fresh.size == 1)
+    val (mn, mx) = spark.read.parquet(s"$root/${fresh.head}").agg(min("k"), max("k"))
+      .as[(Long, Long)].head()
+    assert((mn, mx) == ((200L, 298L)))
+    assert(DataSkipping.ensureStats(spark, root, 1L, Seq("k"))(fresh.head) ==
+      Map("k" -> ((200.0, 298.0))))
   }
 
   /** One merge scenario run twice into fresh tables: under the default
