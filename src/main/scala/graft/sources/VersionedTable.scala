@@ -686,12 +686,12 @@ object VersionedTable {
     val carry = c.fold(Seq.empty[Entry])(_.entries)
     require(carry.forall(_.part.isDefined),
       s"appendPartitioned requires a partition-native table; $root@v$base has unscoped dirs")
-    // ONE staging write (see stagePartitionsOrEmpty): a small batch in
+    // ONE staging write (see stagePartitions): a small batch in
     // one task, one file per value; the value list, null/empty check and
     // emptiness come back from what the tasks wrote — no pre-write
     // checkpoint/isEmpty/distinct jobs
     enforceConstraints(spark, root, df)
-    stagePartitionsOrEmpty(spark, root, df, partitionCol, next, freshDir(next)) match {
+    stagePartitions(spark, root, df, partitionCol, next, freshDir(next)) match {
       case None =>
         // an EMPTY append is a marker-only commit (carry + meta,
         // nothing staged, so the base's data and schema) — an idle
@@ -748,7 +748,8 @@ object VersionedTable {
       case Some(pc) =>
         val src = scanOf(spark, root, base, c, Some(fragmented.toSet))
         enforceConstraints(spark, root, src)
-        val (parent, staged) = stagePartitions(spark, root, src, pc, next)
+        val (parent, staged) = stagePartitions(spark, root, src, pc, next, freshDir(next))
+          .getOrElse(throw new IllegalArgumentException(s"no $pc values to stage"))
         publish(spark, root, next, carried ++ staged, schema,
                 onConflictCleanup = () => f.delete(p(s"$root/$parent"), true), meta = meta)
       case None =>
@@ -1070,7 +1071,7 @@ object VersionedTable {
       val parent = if (picked.isEmpty) s"data/append-${java.util.UUID.randomUUID()}"
                    else freshDir(next)
       val scoped = partCol.map(pc =>
-        stagePartitionsOrEmpty(spark, root, out, pc, next, parent).fold(Seq.empty[Entry])(_._2))
+        stagePartitions(spark, root, out, pc, next, parent).fold(Seq.empty[Entry])(_._2))
       // no rows to route and nothing left to carry (a delete that empties
       // the table): an empty unscoped dir keeps the version readable
       val staged = scoped
@@ -1195,16 +1196,6 @@ object VersionedTable {
     (widen(a, b), widen(b, a))
   }
 
-  /** Stage one dir per distinct partition value of `src` under a
-    * fresh writer-unique parent for version `next`. Cleans up the
-    * parent and rethrows on any write failure. Shared by every
-    * partition-native write path so staging (encoding, layout,
-    * cleanup) cannot drift between them. */
-  private def stagePartitions(spark: SparkSession, root: String, src: DataFrame,
-                              partitionCol: String, next: Long): (String, Seq[Entry]) =
-    stagePartitionsOrEmpty(spark, root, src, partitionCol, next, freshDir(next)).getOrElse(
-      throw new IllegalArgumentException(s"no $partitionCol values to stage"))
-
   /** Stage `src` one dir per partition value under `parent`, for
     * version `next`; None when the batch is EMPTY (nothing was
     * written — callers publish a marker-only/carry-only commit).
@@ -1229,7 +1220,7 @@ object VersionedTable {
     * exactly one file. A larger input is written as it comes;
     * clustering it (a REBALANCE on the value) would add a full shuffle
     * that no workload here measures yet. */
-  private def stagePartitionsOrEmpty(
+  private def stagePartitions(
       spark: SparkSession, root: String, src: DataFrame,
       partitionCol: String, next: Long, parent: String): Option[(String, Seq[Entry])] =
     try {
@@ -1294,11 +1285,11 @@ object VersionedTable {
     val f = fs(spark, root)
     val next = base + 1
     lazy val c = commitOf(spark, root, base)
-    // ONE staging write (see stagePartitionsOrEmpty): a small batch in
+    // ONE staging write (see stagePartitions): a small batch in
     // one task, one file per value, evaluating df once — no pre-write
     // checkpoint/isEmpty/null jobs
     enforceConstraints(spark, root, df)
-    stagePartitionsOrEmpty(spark, root, df, partitionCol, next, freshDir(next)) match {
+    stagePartitions(spark, root, df, partitionCol, next, freshDir(next)) match {
       case None =>
         // a deletion can empty every touched partition — the commit is
         // then pure carry (the touched dirs simply leave the entry list)
